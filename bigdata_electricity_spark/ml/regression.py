@@ -1,8 +1,9 @@
 """ML pipeline — reference parity for ml/MLOperations.scala (SURVEY §2.12).
 
-VectorAssembler → MinMaxScaler → LinearRegression → RegressionEvaluator
-(rmse/mae/r2) → mean-predictor baseline comparison (M1-M6), generalized
-from the household table to any (label, features) column spec.
+VectorAssembler → MinMaxScaler → LinearRegression → rmse/mae/r2 as
+RegressionEvaluator defines them → mean-predictor baseline comparison
+(M1-M6), generalized from the household table to any (label, features)
+column spec.
 
 Float metrics are seed/solver-dependent → rows-only driver check
 (SURVEY §5.2); the pipeline's invariants (schema, metric sanity, model
@@ -11,60 +12,67 @@ beating the baseline on a linear target) are unit-tested.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, functions as F
-from pyspark.ml.evaluation import RegressionEvaluator
 from pyspark.ml.feature import MinMaxScaler, VectorAssembler
 from pyspark.ml.regression import LinearRegression
 
 
 def run_regression_pipeline(df: DataFrame, label_col: str,
                             feature_cols: list[str],
-                            seed: int = 42) -> DataFrame:
+                            seed: int = 42) -> DataFrame | None:
     """Train LR vs mean baseline; return a (metric, model, baseline) DataFrame.
 
     Mirrors MLOperations.run (MLOperations.scala:12-174): 0.7/0.3 split
     (R2), assemble (M1), min-max scale fit on train only (M2), LR fit
     (M3), evaluate rmse/mae/r2 on test (M4), lit(mean) baseline (M5).
+    Returns None (not fitted) when either split is empty, as for a
+    one-hour household file.
+
+    The metrics are RegressionEvaluator's, computed from one aggregate
+    over the test predictions instead of one evaluator pass per metric
+    and predictor: rmse = sqrt(SSE/n), mae = SAE/n and
+    r2 = 1 - SSE/(n * var_pop(label)), NaN when the test labels are
+    constant.
     """
-    spark = df.sparkSession
     data = df.select(F.col(label_col).alias("label"), *feature_cols).na.drop()
     train, test = data.randomSplit([0.7, 0.3], seed=seed)
+    n_train, train_mean = train.agg(F.count(F.lit(1)), F.avg("label")).first()
+    if n_train == 0:
+        return None
 
     assembler = VectorAssembler(inputCols=feature_cols, outputCol="features")
     scaler = MinMaxScaler(inputCol="features", outputCol="scaledFeatures")
     train_vec = assembler.transform(train)
-    test_vec = assembler.transform(test)
     scaler_model = scaler.fit(train_vec)  # fit on train only — no test leakage
-    # Cache both scaled splits: LR.fit makes several passes over train
-    # and the 3×2 evaluator metrics each scan test — without caching,
-    # every pass re-runs split+assemble+scale from the parquet scan
-    # (measured ~2× the query time at sf0.1).
-    train_scaled = scaler_model.transform(train_vec).cache()
-    test_scaled = scaler_model.transform(test_vec).cache()
-
     lr = LinearRegression(featuresCol="scaledFeatures", labelCol="label")
-    model = lr.fit(train_scaled)
-    # Cache predictions too — each of the 3 evaluator passes re-runs the
-    # model transform otherwise.
-    predictions = model.transform(test_scaled).cache()
+    model = lr.fit(scaler_model.transform(train_vec))
+    predictions = model.transform(scaler_model.transform(assembler.transform(test)))
 
-    # M5 — mean-predictor baseline (MLOperations.scala:128-142).
-    train_mean = train.agg(F.avg("label")).first()[0]
-    baseline = test_scaled.withColumn("prediction", F.lit(train_mean)).cache()
-
-    try:
-        rows = []
-        for metric in ("rmse", "mae", "r2"):
-            evaluator = RegressionEvaluator(
-                labelCol="label", predictionCol="prediction", metricName=metric
-            )
-            rows.append(
-                (metric, float(evaluator.evaluate(predictions)), float(evaluator.evaluate(baseline)))
-            )
-        return spark.createDataFrame(rows, "metric string, model double, baseline double")
-    finally:
-        for cached in (train_scaled, test_scaled, predictions, baseline):
-            cached.unpersist()
+    # M4 + M5 — model and mean-predictor baseline (MLOperations.scala:128-142)
+    # from the same sums.
+    err = F.col("label") - F.col("prediction")
+    base_err = F.col("label") - F.lit(train_mean)
+    n, sse, sae, base_sse, base_sae, var = predictions.agg(
+        F.count(F.lit(1)), F.sum(err * err), F.sum(F.abs(err)),
+        F.sum(base_err * base_err), F.sum(F.abs(base_err)), F.var_pop("label"),
+    ).first()
+    if n == 0:
+        return None
+    sst = n * var
+    rows = [
+        ("rmse", math.sqrt(sse / n), math.sqrt(base_sse / n)),
+        ("mae", sae / n, base_sae / n),
+        ("r2", 1.0 - sse / sst if sst else math.nan,
+         1.0 - base_sse / sst if sst else math.nan),
+    ]
+    # A VALUES table is a local relation: reading it runs no Spark job.
+    cols = ("metric", "model", "baseline")
+    args = {f"{c}{i}": v for i, row in enumerate(rows) for c, v in zip(cols, row)}
+    values = ", ".join(f"(:metric{i}, :model{i}, :baseline{i})" for i in range(len(rows)))
+    return df.sparkSession.sql(
+        f"SELECT * FROM VALUES {values} AS metrics(metric, model, baseline)", args=args)
 
 
 def coefficient_report(df: DataFrame, label_col: str, feature_cols: list[str],

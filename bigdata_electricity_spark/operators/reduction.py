@@ -37,7 +37,11 @@ def sample_rows(df: DataFrame, fraction: float = 0.5, seed: int = 42) -> DataFra
     """R1 — seeded Bernoulli sample without replacement (reduction.scala:27-29).
 
     Seed-deterministic within Spark but engine-specific → declared
-    rows-only for oracle checking (SURVEY §5.2).
+    rows-only for oracle checking (SURVEY §5.2). The draw is per
+    partition, so the kept rows also depend on the partition layout,
+    which follows the core count of ``local[N]`` (it sets the shuffle
+    partitions) and adaptive execution's coalescing of them: pin a
+    sampled digest for one core count only, never across them.
     """
     return df.sample(withReplacement=False, fraction=fraction, seed=seed)
 

@@ -8,10 +8,36 @@ inter-stage format when materialization is requested (SURVEY §4.3.4).
 
 A user of the reference can point :func:`run_reference_pipeline` at the
 same semicolon-CSV and get every artifact the reference produces.
+
+Materialisation (Spark SQL, SIGMOD 2015, §3: lazy plans, with in-memory
+columnar caches placed at the points where a result is reused). The
+pipeline caches exactly three tables, each read by several actions:
+
+* the prepared raw table (sentinels nulled, ``DateTime`` added), so the
+  CSV is parsed once for the profile and the cleaning. It is released as
+  soon as the outlier pass has materialised the cleaned table;
+* the cleaned table (``PipelineResult.cleaned``), read by the outlier
+  pass, the hourly rollup and the caller;
+* the hourly, sampled and feature-selected table. ``transformed`` is a
+  projection over it, so the min/max stats, the export, Q1-Q5 and the
+  regression all read one seeded sample, drawn once per pipeline.
+
+Release rule: the :class:`PipelineResult` owns the last two caches and
+unpersists them on ``close()`` or on leaving its ``with`` block, or when
+an unclosed result is garbage-collected. After that every artifact is
+still usable; it is recomputed from the CSV on each action. A failed
+run releases what it had cached before it raises. Spark keys caches by
+plan, so two open results over the same file share them, and closing
+either releases them for both.
+
+The caches are planned with adaptive execution, like the uncached
+plans, so they keep those plans' partition layout, and with it the
+seeded sample and the train/test split.
 """
 
 from __future__ import annotations
 
+import weakref
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -19,11 +45,10 @@ from pyspark.sql import DataFrame, SparkSession
 from .ml.regression import run_regression_pipeline
 from .operators.cleaning import (
     BeforeStats,
-    clean_pipeline,
+    clean_prepared,
     compute_before_stats,
-    add_datetime,
     outlier_report_iqr,
-    replace_sentinels_with_null,
+    prepare_raw,
 )
 from .operators.reduction import reduce_pipeline
 from .operators.transformation import transform_pipeline
@@ -31,9 +56,44 @@ from .sources.loaders import load_household_raw
 from .sources.sinks import save_single_csv
 
 
+# Off by default in Spark 4, which then plans a cached query without
+# adaptive execution: its last shuffle keeps every partition instead of
+# being coalesced, so a seeded sample or split drawn over the cache would
+# differ from the one drawn over the uncached plan.
+_CACHE_LAYOUT_CONF = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+
+
+def _cache(df: DataFrame, cached: list[DataFrame]) -> DataFrame:
+    """Cache ``df`` planned as its uncached query is, and record it in ``cached``.
+
+    The conf is read when the cache is planned, so it is set only around
+    ``cache()``."""
+    conf = df.sparkSession.conf
+    previous = conf.get(_CACHE_LAYOUT_CONF)
+    conf.set(_CACHE_LAYOUT_CONF, "true")
+    try:
+        df = df.cache()
+    finally:
+        conf.set(_CACHE_LAYOUT_CONF, previous)
+    cached.append(df)
+    return df
+
+
+def _unpersist(frames: list[DataFrame]) -> None:
+    for df in frames:
+        df.unpersist()
+
+
 @dataclass
 class PipelineResult:
-    """Every artifact of the reference flow, lazily evaluated where possible."""
+    """Every artifact of the reference flow.
+
+    ``cleaned`` and the sampled table behind ``transformed`` (and so
+    behind ``sql_results``) are cached until :meth:`close`, the end of a
+    ``with`` block, or the result being garbage-collected, whichever
+    comes first; the other DataFrames are lazy plans. ``ml_metrics`` is
+    None when the regression was not run or could not be fitted.
+    """
 
     before_stats: BeforeStats
     cleaned: DataFrame
@@ -42,6 +102,23 @@ class PipelineResult:
     sql_results: dict[str, DataFrame] = field(default_factory=dict)
     ml_metrics: DataFrame | None = None
     export_path: str | None = None
+    cached: list[DataFrame] = field(default_factory=list, repr=False)
+
+    def __post_init__(self) -> None:
+        # The finalizer holds the cache list, never the result itself. At
+        # interpreter exit the session may be gone, and its caches with it.
+        self._release = weakref.finalize(self, _unpersist, self.cached)
+        self._release.atexit = False
+
+    def close(self) -> None:
+        """Unpersist what the pipeline cached (idempotent)."""
+        self._release()
+
+    def __enter__(self) -> PipelineResult:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
 
 
 # Q1-Q5 over the transformed household table (temp view power_data), the
@@ -109,36 +186,49 @@ def run_reference_pipeline(spark: SparkSession, raw_csv_path: str,
       7. SQL analytics Q1-Q5 on temp view power_data
          (SQLOperations.scala:25-153)
       8. ML regression vs mean baseline (MLOperations.scala:12-167)
+
+    The result holds caches (see the module docstring); release them with
+    ``with run_reference_pipeline(...) as result:`` or ``result.close()``.
     """
-    raw = load_household_raw(spark, raw_csv_path)
-    prepped = add_datetime(replace_sentinels_with_null(raw))
-    before = compute_before_stats(prepped)
+    cached: list[DataFrame] = []
+    try:
+        prepped = _cache(prepare_raw(load_household_raw(spark, raw_csv_path)), cached)
+        before = compute_before_stats(prepped)
 
-    cleaned = clean_pipeline(raw)
-    outliers = outlier_report_iqr(cleaned).first().asDict()
+        cleaned = _cache(clean_prepared(prepped), cached)
+        outliers = outlier_report_iqr(cleaned).first().asDict()
+        # cleaned is materialised now, so its cache no longer reads prepped's.
+        cached.remove(prepped)
+        prepped.unpersist()
 
-    transformed = transform_pipeline(
-        reduce_pipeline(cleaned, sample_fraction=sample_fraction, seed=seed)
-    )
+        sampled = _cache(reduce_pipeline(cleaned, sample_fraction=sample_fraction, seed=seed),
+                         cached)
+        transformed = transform_pipeline(sampled)
 
-    export_path = None
-    if export_csv_path is not None:
-        export_path = save_single_csv(transformed, export_csv_path)
+        export_path = None
+        if export_csv_path is not None:
+            export_path = save_single_csv(transformed, export_csv_path)
 
-    result = PipelineResult(
+        sql_results = {}
+        if run_sql:
+            transformed.createOrReplaceTempView("power_data")
+            sql_results = {name: spark.sql(q) for name, q in POWER_SQL.items()}
+
+        ml_metrics = None
+        if run_ml:
+            ml_metrics = run_regression_pipeline(
+                transformed, label_col=ML_LABEL, feature_cols=ML_FEATURES, seed=seed
+            )
+    except BaseException:
+        _unpersist(cached)
+        raise
+    return PipelineResult(
         before_stats=before,
         cleaned=cleaned,
         transformed=transformed,
         outlier_report=outliers,
+        sql_results=sql_results,
+        ml_metrics=ml_metrics,
         export_path=export_path,
+        cached=cached,
     )
-
-    if run_sql:
-        transformed.createOrReplaceTempView("power_data")
-        result.sql_results = {name: spark.sql(q) for name, q in POWER_SQL.items()}
-
-    if run_ml:
-        result.ml_metrics = run_regression_pipeline(
-            transformed, label_col=ML_LABEL, feature_cols=ML_FEATURES, seed=seed
-        )
-    return result

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -62,6 +64,36 @@ def test_regression_on_linear_target(spark):
     assert metrics["rmse"]["model"] < 1e-3
     assert metrics["rmse"]["baseline"] > 100
     assert metrics["r2"]["baseline"] <= 0.01
+
+
+@pytest.mark.parametrize("noise", [0.0, 5.0])
+def test_regression_metrics_match_evaluator(spark, noise):
+    # The one-pass metrics against RegressionEvaluator, the oracle, over
+    # the same split and fit: the linear target above, and with noise.
+    from pyspark.ml.evaluation import RegressionEvaluator
+    from pyspark.ml.feature import MinMaxScaler, VectorAssembler
+    from pyspark.ml.regression import LinearRegression
+
+    df = spark.createDataFrame(
+        [(float(i), 3.0 * i + 2.0 + noise * math.sin(i)) for i in range(200)], ["x", "y"]
+    )
+    got = {r["metric"]: (r["model"], r["baseline"])
+           for r in run_regression_pipeline(df, "y", ["x"]).collect()}
+
+    train, test = df.select(F.col("y").alias("label"), "x").randomSplit([0.7, 0.3], seed=42)
+    assembler = VectorAssembler(inputCols=["x"], outputCol="features")
+    scaler = MinMaxScaler(inputCol="features", outputCol="scaledFeatures").fit(
+        assembler.transform(train))
+    model = LinearRegression(featuresCol="scaledFeatures", labelCol="label").fit(
+        scaler.transform(assembler.transform(train)))
+    predictions = model.transform(scaler.transform(assembler.transform(test)))
+    baseline = predictions.withColumn(
+        "prediction", F.lit(train.agg(F.avg("label")).first()[0]))
+    for metric in ("rmse", "mae", "r2"):
+        evaluator = RegressionEvaluator(labelCol="label", predictionCol="prediction",
+                                        metricName=metric)
+        want = (evaluator.evaluate(predictions), evaluator.evaluate(baseline))
+        assert got[metric] == pytest.approx(want, rel=1e-9), metric
 
 
 def test_coefficient_report_recovers_slope(spark):

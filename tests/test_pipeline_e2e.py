@@ -7,28 +7,74 @@ ML, all in one call, with invariants checked at each artifact.
 
 from __future__ import annotations
 
+import gc
+import math
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
-from bigdata_electricity_spark.pipeline import run_reference_pipeline
+from bigdata_electricity_spark.ml.regression import run_regression_pipeline
+from bigdata_electricity_spark.operators.cleaning import NUM_COLS, clean_pipeline
+from bigdata_electricity_spark.operators.reduction import reduce_pipeline
+from bigdata_electricity_spark.operators.transformation import transform_pipeline
+from bigdata_electricity_spark.pipeline import (
+    ML_FEATURES, ML_LABEL, POWER_SQL, run_reference_pipeline,
+)
+from bigdata_electricity_spark.sources.loaders import load_household_raw
 from tests.conftest import COLUMNS, make_household_rows
+
+# Spark jobs that one fixture pipeline and its consumption ran on the
+# 8-core test session once the CSV was parsed once and the cleaned and
+# sampled tables were cached; the lazy plans, which re-ran the lineage
+# from the CSV on every action, ran 98.
+JOB_BUDGET = 42
+
+
+def _write_csv(path, rows) -> str:
+    with open(path, "w") as fh:
+        fh.write(";".join(COLUMNS) + "\n")
+        for r in rows:
+            fh.write(";".join(r) + "\n")
+    return str(path)
+
+
+def _persisted(spark) -> int:
+    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+
+def _consume(cleaned, sql_results, ml_metrics):
+    """Every column of the cleaned table, every SQL row and the ML metrics."""
+    cleaned_row = tuple(cleaned.agg(
+        F.count(F.lit(1)), *[F.sum(c) for c in NUM_COLS],
+        F.min("DateTime"), F.max("DateTime"),
+        F.sum(F.length("Date")) + F.sum(F.length("Time")),
+    ).first())
+    sql = {name: [tuple(r) for r in df.collect()] for name, df in sql_results.items()}
+    ml = None if ml_metrics is None else sorted(tuple(r) for r in ml_metrics.collect())
+    return cleaned_row, sql, ml
+
+
+def _close(a, b) -> bool:
+    if isinstance(a, (tuple, list)):
+        return len(a) == len(b) and all(_close(x, y) for x, y in zip(a, b))
+    if isinstance(a, dict):
+        return a.keys() == b.keys() and all(_close(a[k], b[k]) for k in a)
+    if isinstance(a, float):
+        return math.isclose(a, b, rel_tol=1e-9, abs_tol=1e-12)
+    return a == b
 
 
 @pytest.fixture(scope="module")
 def result(spark, tmp_path_factory):
     rows, _ = make_household_rows()
     csv_dir = tmp_path_factory.mktemp("household")
-    src = csv_dir / "power.csv"
-    with open(src, "w") as fh:
-        fh.write(";".join(COLUMNS) + "\n")
-        for r in rows:
-            fh.write(";".join(r) + "\n")
+    src = _write_csv(csv_dir / "power.csv", rows)
     out_csv = str(csv_dir / "transformed.csv")
-    res = run_reference_pipeline(
-        spark, str(src), sample_fraction=1.0, export_csv_path=out_csv
-    )
-    return res
+    with run_reference_pipeline(
+        spark, src, sample_fraction=1.0, export_csv_path=out_csv
+    ) as res:
+        yield res
 
 
 def test_pipeline_profile(result):
@@ -95,3 +141,79 @@ def test_observe_metrics_single_action(spark):
     assert obs_out.get["n_rows"] == n_kept_action
     assert obs_in.get["n_rows"] == docs.count()
     assert obs_in.get["n_chars"] == docs.agg(F.sum("n_chars")).first()[0]
+
+
+def test_pipeline_matches_lazy_plans_and_releases_caches(spark, tmp_path):
+    # The materialised pipeline reads the same cleaned table, seeded
+    # sample, SQL results and metrics as the lazy composition of the same
+    # operators, and gives back every cache it made: on leaving the with
+    # block, and when an unclosed result is dropped.
+    src = _write_csv(tmp_path / "power.csv", make_household_rows()[0])
+    cleaned = clean_pipeline(load_household_raw(spark, src))
+    transformed = transform_pipeline(reduce_pipeline(cleaned, sample_fraction=0.5, seed=42))
+    transformed.createOrReplaceTempView("power_data")
+    lazy = _consume(cleaned, {name: spark.sql(q) for name, q in POWER_SQL.items()},
+                    run_regression_pipeline(transformed, ML_LABEL, ML_FEATURES, seed=42))
+
+    before = _persisted(spark)
+    with run_reference_pipeline(spark, src, sample_fraction=0.5, seed=42) as res:
+        assert _persisted(spark) == before + 2  # cleaned + sampled
+        got = _consume(res.cleaned, res.sql_results, res.ml_metrics)
+    assert _persisted(spark) == before
+    assert _close(got, lazy)
+    res.close()  # idempotent
+
+    res = run_reference_pipeline(spark, src)
+    assert _persisted(spark) == before + 2
+    del res
+    gc.collect()
+    assert _persisted(spark) == before
+
+
+def test_pipeline_job_budget(spark, tmp_path):
+    # Re-running the lineage from the CSV on every action must fail this.
+    src = _write_csv(tmp_path / "power.csv", make_household_rows()[0])
+    sc = spark.sparkContext
+    group = "test-pipeline-job-budget"
+    sc.setJobGroup(group, "household pipeline job budget")
+    try:
+        with run_reference_pipeline(spark, src, sample_fraction=1.0,
+                                    export_csv_path=str(tmp_path / "out.csv")) as res:
+            _consume(res.cleaned, res.sql_results, res.ml_metrics)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= JOB_BUDGET, jobs
+
+
+def _one_hour_rows():
+    return make_household_rows()[0][:60]
+
+
+DEGENERATE_INPUTS = {
+    "header_only": lambda: [],
+    "all_missing": lambda: [["?"] * len(COLUMNS)] * 5,
+    # ISO dates where the reference expects d/M/yyyy: no row has a DateTime
+    "unparseable_dates": lambda: [["2007-03-07", *r[1:]] for r in _one_hour_rows()],
+    "one_hour": _one_hour_rows,
+}
+
+
+@pytest.mark.parametrize("case", sorted(DEGENERATE_INPUTS))
+def test_pipeline_degenerate_input(spark, tmp_path, case):
+    rows = DEGENERATE_INPUTS[case]()
+    src = _write_csv(tmp_path / "power.csv", rows)
+    before = _persisted(spark)
+    with run_reference_pipeline(spark, src, export_csv_path=str(tmp_path / "out.csv")) as res:
+        assert res.before_stats.total_rows == len(rows)
+        n_clean = res.cleaned.count()
+        assert n_clean == (len(rows) if case == "one_hour" else 0)
+        assert set(res.outlier_report) == {f"outliers_{c}" for c in NUM_COLS}
+        if n_clean == 0:
+            assert set(res.outlier_report.values()) == {0}
+        assert res.ml_metrics is None  # at most one hourly row: not fitted
+        for df in res.sql_results.values():
+            df.collect()
+    assert _persisted(spark) == before

@@ -27,7 +27,7 @@ def duck():
     con.close()
 
 
-# Default tier (r14, VERDICT r13 task 1): the FULL 342-entry sweep takes
+# Default tier (r14, VERDICT r13 task 1): the FULL 347-entry sweep takes
 # ~10 min of the suite's ~32 — past the driver's verify budget. The
 # default tier keeps (a) the first 64 registry entries — a superset of
 # the driver's own 50-entry correctness sample, so anything the driver
