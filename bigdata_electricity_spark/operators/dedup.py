@@ -532,8 +532,9 @@ def _token_base(df: DataFrame, text_col: str, id_col: str,
     the checkpoint would materialize the ENTIRE tokenized relation to
     executor storage before the one pass, and — because the plan then
     scans an ExistingRDD — it also hides the parquet scan from column
-    pruning/pushdown (r14, VERDICT r13 task 6; measured in
-    plans/r14/decon_neardup_overlap_{before,after}.txt)."""
+    pruning/pushdown (r14, VERDICT r13 task 6: the checkpointed plan
+    scans an ExistingRDD, the uncheckpointed one a parquet scan whose
+    ReadSchema is just doc_id, text and source)."""
     tokens = F.transform(
         F.array_distinct(F.split(normalize_text(F.col(text_col)), " ")),
         lambda t: F.xxhash64(t),
@@ -1171,8 +1172,8 @@ def lsh_dedup_clusters(df: DataFrame, text_col: str = "text",
        generation, unchanged.
 
     Scale accounting (sf1f, measured r12): 105 s → ~28 s composed
-    (sf10f 577.6 → 77.6 s, docs/TIME_sf10f_r12_task2.json — 138.9 s
-    before the signature-from-contraction reuse); no
+    (sf10f, 500k docs: 577.6 → 77.6 s — 138.9 s before the
+    signature-from-contraction reuse); no
     materialized intermediate exceeds bands·n rows plus the
     still-cross-component pair set, vs the r11 shape's 40.5M-pair pool.
     At sf10f the eliminated pool was ~10× larger — the r9 disk-full
@@ -1224,8 +1225,9 @@ def lsh_dedup_clusters(df: DataFrame, text_col: str = "text",
     # array_sort + two xxhash64 fingerprints, and the expand join's
     # pushed-down IsNotNull(key) filters inline the whole CASE/array_sort
     # pipeline AGAIN below the projection (2 more interpreted array_sort
-    # evaluations per row — visible in plans/r14/dedup_lsh_clusters_before.txt
-    # operator (2)). One n×(id,f1,f2) materialization ends all of it.
+    # evaluations per row — visible in the uncheckpointed physical plan as
+    # the Filter directly above the scan). One n×(id,f1,f2)
+    # materialization ends all of it.
     # 128-bit fingerprint (two independently-seeded xxhash64 over the
     # SORTED distinct-token-hash array — set-equal docs hash equal
     # regardless of token order); collision would need ~2⁶⁴ groups.

@@ -337,7 +337,8 @@ def build_ivf_index(corpus: DataFrame, nlist: int, dim: int, par: int,
     par=32 put 88M scored rows in each task's sorter — OOM at the
     default 8 GiB heap; sizing partitions so each sorts ≤ ~8M scored
     rows completes at default heap FASTER than a 6×-heap run at the
-    small count (185.7 s vs 302.5 s, docs/TIME_ivf_refresh_r13.json).
+    small count (185.7 s at 2,048 partitions vs 302.5 s at 128 and a
+    48 GiB heap).
     Without the hint behavior is unchanged (callers at bench SFs are
     nowhere near the cliff).
     """
@@ -434,11 +435,11 @@ def serve_ivf_topk(index: dict, batch: DataFrame, k: int = 3,
     # candidate stream — |batch|×nprobe×(n/nlist) rows, each carrying a
     # dim-double match vector — by qid in the fallback path: at 2M
     # vectors / 286k-query bulk batch that is ~750M vector-laden rows
-    # (hundreds of GB of shuffle; measured disk-full on a 250 GB box,
-    # docs/TIME_sf100f_breadth_r13.json). With the probe⋈bq join first,
-    # the candidate stream is born AFTER its last vector-carrying
-    # shuffle: only `lists` (n rows, once) and the |batch|×nprobe
-    # winner table ever shuffle with vectors aboard.
+    # (hundreds of GB of shuffle; measured disk-full on a 250 GB box;
+    # this order completes with 1.81 GB of shuffle writes). With the
+    # probe⋈bq join first, the candidate stream is born AFTER its last
+    # vector-carrying shuffle: only `lists` (n rows, once) and the
+    # |batch|×nprobe winner table ever shuffle with vectors aboard.
     if broadcast_batch:
         pqv = F.broadcast(probe.join(bq, "qid"))
     else:
@@ -489,14 +490,14 @@ def refresh_ivf_index(index: dict, delta: DataFrame, par: int) -> dict:
     append them to the inverted lists. The refresh term is
     |delta| × nlist distance evaluations vs the fresh build's
     (n + |delta|) × nlist — and the measured ratio widens with scale
-    exactly as that model predicts (docs/TIME_ivf_refresh_r13.json,
-    1% staged delta): sf10f (200k vectors) 1.81 s vs 10.07 s fresh
-    (5.6×, overhead-floored); sf100f (2M vectors, nlist=1408) 2.32 s
-    vs 185.7 s fresh — 80× against the best-tuned rebuild. The fresh
-    build's 2.8B-row assignment intermediate also demands its own
-    tuning (OOMs at 8 GiB/128 partitions until shuffle partitions are
-    sized to it — the spill-aware rule); the refresh needs neither
-    knob, because it never builds that stream.
+    exactly as that model predicts (1% staged delta): sf10f (200k
+    vectors) 1.81 s vs 10.07 s fresh (5.6×, overhead-floored); sf100f
+    (2M vectors, nlist=1408) 2.32 s vs 185.7 s fresh — 80× against the
+    best-tuned rebuild. The fresh build's 2.8B-row assignment
+    intermediate also demands its own tuning (OOMs at 8 GiB/128
+    partitions until shuffle partitions are sized to it — the
+    spill-aware rule); the refresh needs neither knob, because it never
+    builds that stream.
 
     Semantics: the refreshed index IS ``build_ivf_index``'s output for
     corpus+delta whenever the fresh build would seed the same centroid

@@ -92,7 +92,7 @@ class PipelineResult:
     behind ``sql_results``) are cached until :meth:`close`, the end of a
     ``with`` block, or the result being garbage-collected, whichever
     comes first; the other DataFrames are lazy plans. ``ml_metrics`` is
-    None when the regression was not run or could not be fitted.
+    None when the regression could not be fitted.
     """
 
     before_stats: BeforeStats
@@ -170,8 +170,7 @@ ML_FEATURES = ["avg_Voltage", "avg_Global_intensity", "total_sub_metering"]
 
 def run_reference_pipeline(spark: SparkSession, raw_csv_path: str,
                            sample_fraction: float = 0.5, seed: int = 42,
-                           export_csv_path: str | None = None,
-                           run_sql: bool = True, run_ml: bool = True) -> PipelineResult:
+                           export_csv_path: str | None = None) -> PipelineResult:
     """The complete reference flow on a raw household-power CSV.
 
     Stages (with reference citations):
@@ -182,7 +181,8 @@ def run_reference_pipeline(spark: SparkSession, raw_csv_path: str,
          (reduction.scala:10-43)
       5. transform: time-derived, one-hot, engineered, min-max scale
          (Transformation.scala:12-89)
-      6. optional single-file CSV export (Transformation.scala:92-115)
+      6. single-file CSV export when ``export_csv_path`` is given
+         (Transformation.scala:92-115)
       7. SQL analytics Q1-Q5 on temp view power_data
          (SQLOperations.scala:25-153)
       8. ML regression vs mean baseline (MLOperations.scala:12-167)
@@ -209,16 +209,12 @@ def run_reference_pipeline(spark: SparkSession, raw_csv_path: str,
         if export_csv_path is not None:
             export_path = save_single_csv(transformed, export_csv_path)
 
-        sql_results = {}
-        if run_sql:
-            transformed.createOrReplaceTempView("power_data")
-            sql_results = {name: spark.sql(q) for name, q in POWER_SQL.items()}
+        transformed.createOrReplaceTempView("power_data")
+        sql_results = {name: spark.sql(q) for name, q in POWER_SQL.items()}
 
-        ml_metrics = None
-        if run_ml:
-            ml_metrics = run_regression_pipeline(
-                transformed, label_col=ML_LABEL, feature_cols=ML_FEATURES, seed=seed
-            )
+        ml_metrics = run_regression_pipeline(
+            transformed, label_col=ML_LABEL, feature_cols=ML_FEATURES, seed=seed
+        )
     except BaseException:
         _unpersist(cached)
         raise

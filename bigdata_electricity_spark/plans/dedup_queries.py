@@ -718,7 +718,7 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     (714k-doc "batch") vs 34.9 s / 2.2 GB for the contract shape
     (5k-doc batch vs the same 5M-doc index), where the 2.2 GB is the
     fresh-lineage index term a bucketed persisted index amortizes
-    (docs/TIME_sf100f_breadth_r13.json).
+    (32 cores, 256 shuffle partitions, noop sink).
     """
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 7 != 0)

@@ -711,7 +711,7 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     with corpus size precisely to hold the wedge count flat.
 
     r11 residual attribution (r10 VERDICT task 4 — the 20.4× decade at
-    uniform 256 partitions): measured with tools/shuffle_bytes.py, the
+    uniform 256 partitions): measured with per-query shuffle metrics, the
     OLD plan's shuffle bytes grew 185 MB → 1.68 GB over sf1f→sf10f
     (9.1×, linear) and the pruned graph is EXACTLY linear (edges
     35,730 → 357,300, wedges 13,960 → 139,600, max degree 6 at both

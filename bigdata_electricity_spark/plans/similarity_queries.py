@@ -305,8 +305,8 @@ def sim_fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: levenshtein runs on the DISTINCT-NAME vocabulary, not
     on row pairs — |vocab|² ≪ |rows|² whenever values repeat (64 names
-    vs 20k parts at sf0.1; brand-only row-pair blocking took 9s and was
-    flagged by tools/time_all.py; this shape is sub-second). The vocab
+    vs 20k parts at sf0.1; brand-only row-pair blocking took 9s in a
+    full-registry timing sweep; this shape is sub-second). The vocab
     self-join is additionally banded on name length with the
     |len_a − len_b| ≤ 1 predicate folded into the join key (left side
     replicated to bands {len−1, len, len+1}), the surviving near-match
@@ -2659,7 +2659,8 @@ def sim_ivf_epoch_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta: sf10f 1.81 s vs 10.07 s fresh (5.6×, overhead-floored);
     sf100f (2M vectors) 2.32 s vs 185.7 s best-tuned fresh — 80×,
     and the rebuild's 2.8B-row intermediate needs partition sizing
-    the refresh never does (docs/TIME_ivf_refresh_r13.json). The
+    the refresh never does (the fresh build needed 2,048 shuffle
+    partitions). The
     quantizer staying frozen is
     what makes "only new vectors re-assigned" exact, not approximate;
     drift is handled by periodic retrains (build_ivf_index, or Lloyd

@@ -212,8 +212,7 @@ def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     i.e. ~1 surviving line per order, so the pre-agg's combine factor is
     ~1 — measured at 10× the bench SF (demoted, warm) the pre-agg
     variant was 1.29→1.97 s, a hash pass bought nothing. Pre-agg below a
-    join pays only when rows-per-key is material AFTER filters
-    (docs/SHUFFLE_BYTES_r10.md).
+    join pays only when rows-per-key is material AFTER filters.
     """
     customer = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders").filter(

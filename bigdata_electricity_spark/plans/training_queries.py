@@ -449,8 +449,8 @@ def decon_neardup_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     1000 copies of the training content, making the true match
     relation ~5·10⁹ pairs — no plan computes that cheaply because the
     ANSWER is that large); the production shape at 5M training docs
-    (eval = replica-0 src0, 500 items) is measured in
-    docs/TIME_sf100f_breadth_r13.json.
+    (eval = replica-0 src0, 500 items) measured 22.2 s (32 cores, 256
+    shuffle partitions, noop sink).
     """
     from ..operators.dedup import (
         bounded_eval_jaccard_matches,

@@ -18,13 +18,10 @@ from __future__ import annotations
 
 import datetime as dt
 import os
-import sys
 
 import duckdb
 import pandas as pd
 import pytest
-
-sys.path.insert(0, "/root/repo/tools")
 
 from bigdata_electricity_spark.plans import REGISTRY
 from tests.conftest import skip_unless_default_tier

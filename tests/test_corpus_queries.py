@@ -5,13 +5,9 @@ reconstruction round-trips.
 
 from __future__ import annotations
 
-import sys
-
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 from bigdata_electricity_spark.plans import REGISTRY
 from bigdata_electricity_spark.plans.corpus_queries import _bpe_merge_step

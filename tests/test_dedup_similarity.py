@@ -587,7 +587,7 @@ def test_ivf_build_self_sizes_and_result_invariant(spark):
 
 def test_ivf_serve_candidate_stream_born_after_last_shuffle(spark):
     """r13: guards the serve-plan shape that fixed the sf100f bulk-serve
-    disk-full (docs/TIME_sf100f_breadth_r13.json). Two properties, both
+    disk-full (2M vectors, 286k-query batch). Two properties, both
     asserted on the STATIC fallback plan (AQE off, same rationale as
     test_ivf_serve_shuffle_fallback_equals_broadcast):
 

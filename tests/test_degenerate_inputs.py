@@ -218,12 +218,10 @@ def test_session_family_exact_boundary_ties(spark, tmp_path_factory):
     """
     import datetime as dt
     import os
-    import sys
 
     import duckdb
     import pandas as pd
 
-    sys.path.insert(0, "/root/repo/tools")
     from parity import compare_one  # driver-compare replica
 
     from bigdata_electricity_spark.plans import REGISTRY

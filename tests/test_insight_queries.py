@@ -11,12 +11,9 @@ estimator invariants (Kaplan-Meier).
 from __future__ import annotations
 
 import math
-import sys
 
 import pandas as pd
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from bigdata_electricity_spark.plans import REGISTRY
 

@@ -19,8 +19,6 @@ import time
 
 import pandas as pd
 
-sys.path.insert(0, "/root/repo/tools")
-
 from bigdata_electricity_spark.plans import REGISTRY
 from bigdata_electricity_spark.sources import sinks
 

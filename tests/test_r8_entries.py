@@ -17,12 +17,9 @@ from __future__ import annotations
 
 import math
 import os
-import sys
 
 import pandas as pd
 import pytest
-
-sys.path.insert(0, "/root/repo/tools")
 
 from bigdata_electricity_spark.plans import REGISTRY
 

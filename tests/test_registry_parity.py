@@ -8,11 +8,7 @@ whole sweep stays fast.
 
 from __future__ import annotations
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from bigdata_electricity_spark.plans import REGISTRY
 from tools.parity import compare_one, oracle_connection

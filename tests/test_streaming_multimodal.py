@@ -364,9 +364,9 @@ def test_streaming_incremental_sim_passes_microbatch_count(spark, monkeypatch):
     micro-batch's TRUE row count to serve_ivf_topk's ``n_batch`` so the
     broadcast bound applies inside the stream (a single oversized input
     file arrives as one oversized micro-batch — measured at sf100f,
-    docs/TIME_sf100f_breadth_r13.json). Guard: wrap the serve, record
-    every n_batch passed, and assert the counts are present and sum to
-    the full batch-side population."""
+    where one 761 MB file became one 286k-vector micro-batch). Guard:
+    wrap the serve, record every n_batch passed, and assert the counts
+    are present and sum to the full batch-side population."""
     from bigdata_electricity_spark.operators import similarity as sim_ops
     from bigdata_electricity_spark.plans import REGISTRY
 

@@ -8,9 +8,11 @@ the first docstring line. Regenerate after adding queries:
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from bigdata_electricity_spark.plans import REGISTRY, SCALE_TWINS  # noqa: E402
 
@@ -96,7 +98,7 @@ def main() -> None:
             elif name in twin_of:
                 what += f" — scale-safe twin of `{twin_of[name]}`"
             lines.append(f"| `{name}` | {kind} | {spec.scale_class} | {what} |")
-    with open("/root/repo/docs/QUERIES.md", "w") as f:
+    with open(os.path.join(ROOT, "docs", "QUERIES.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"docs/QUERIES.md: {len(REGISTRY)} queries, {n_oracle} oracled")
 

@@ -22,11 +22,12 @@ divergence, and any other category mismatch.
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bigdata_electricity_spark.plans import REGISTRY  # noqa: E402
 from bigdata_electricity_spark.session import get_spark  # noqa: E402
