@@ -58,22 +58,23 @@ def stratified_sample(df: DataFrame, strata_col: str, fractions: dict,
     return df.sampleBy(strata_col, fractions, seed=seed)
 
 
-def select_features(df: DataFrame, keep: list[str] | None = None) -> DataFrame:
-    """P10/R4 — column-pruning projection (reduction.scala:32-43).
+# The reference keeps Hour + 6 of the 7 averaged measurements,
+# deliberately dropping avg_Global_reactive_power.
+DEFAULT_KEEP_COLS = [
+    "Hour",
+    "avg_Global_active_power",
+    "avg_Voltage",
+    "avg_Global_intensity",
+    "avg_Sub_metering_1",
+    "avg_Sub_metering_2",
+    "avg_Sub_metering_3",
+]
 
-    The reference keeps Hour + 6 of the 7 averaged measurements,
-    deliberately dropping avg_Global_reactive_power.
-    """
-    keep = keep or [
-        "Hour",
-        "avg_Global_active_power",
-        "avg_Voltage",
-        "avg_Global_intensity",
-        "avg_Sub_metering_1",
-        "avg_Sub_metering_2",
-        "avg_Sub_metering_3",
-    ]
-    return df.select(*keep)
+
+def select_features(df: DataFrame, keep: list[str] | None = None) -> DataFrame:
+    """P10/R4 — column-pruning projection (reduction.scala:32-43),
+    keeping :data:`DEFAULT_KEEP_COLS` unless ``keep`` is given."""
+    return df.select(*(keep or DEFAULT_KEEP_COLS))
 
 
 def reduce_pipeline(df: DataFrame, sample_fraction: float = 0.5, seed: int = 42) -> DataFrame:

@@ -31,8 +31,9 @@ plan, so two open results over the same file share them, and closing
 either releases them for both.
 
 The caches are planned with adaptive execution, like the uncached
-plans, so they keep those plans' partition layout, and with it the
-seeded sample and the train/test split.
+plans (a rule of ``session.RUNTIME_CONFS``), so they keep those plans'
+partition layout, and with it the seeded sample and the train/test
+split.
 """
 
 from __future__ import annotations
@@ -56,25 +57,9 @@ from .sources.loaders import load_household_raw
 from .sources.sinks import save_single_csv
 
 
-# Off by default in Spark 4, which then plans a cached query without
-# adaptive execution: its last shuffle keeps every partition instead of
-# being coalesced, so a seeded sample or split drawn over the cache would
-# differ from the one drawn over the uncached plan.
-_CACHE_LAYOUT_CONF = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-
-
 def _cache(df: DataFrame, cached: list[DataFrame]) -> DataFrame:
-    """Cache ``df`` planned as its uncached query is, and record it in ``cached``.
-
-    The conf is read when the cache is planned, so it is set only around
-    ``cache()``."""
-    conf = df.sparkSession.conf
-    previous = conf.get(_CACHE_LAYOUT_CONF)
-    conf.set(_CACHE_LAYOUT_CONF, "true")
-    try:
-        df = df.cache()
-    finally:
-        conf.set(_CACHE_LAYOUT_CONF, previous)
+    """Cache ``df`` and record it in ``cached``."""
+    df = df.cache()
     cached.append(df)
     return df
 

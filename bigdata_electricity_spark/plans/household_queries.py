@@ -24,26 +24,13 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.rounding import dround, hround
 from ..operators.cleaning import clean_pipeline
-from ..operators.reduction import reduce_pipeline
-from ..operators.transformation import transform_pipeline
+from ..operators.reduction import DEFAULT_KEEP_COLS, reduce_pipeline
+from ..operators.transformation import DEFAULT_SCALE_COLS as SCALE_COLS, transform_pipeline
 from ..sources.household_fixture import stage_household_csv
 from ..sources.loaders import load_household_raw
 from .registry import query
 
-AVG_COLS = [
-    "avg_Global_active_power",
-    "avg_Voltage",
-    "avg_Global_intensity",
-    "avg_Sub_metering_1",
-    "avg_Sub_metering_2",
-    "avg_Sub_metering_3",
-]
-SCALE_COLS = [
-    "avg_Global_active_power",
-    "avg_Voltage",
-    "avg_Global_intensity",
-    "total_sub_metering",
-]
+AVG_COLS = [c for c in DEFAULT_KEEP_COLS if c != "Hour"]
 
 
 def _household_oracle() -> str:

@@ -394,8 +394,8 @@ def join_bucketed_colocated_priority(spark: SparkSession, sf_dir: str) -> DataFr
     The bucketed write IS the query's point — pay the partitioning once,
     then every orderkey equi-join between the two tables plans
     SortMergeJoin with no Exchange (asserted under broadcast demotion in
-    tests/test_physical_plans.py; bucket files pinned under the repo's
-    spark-warehouse so a driver session's cwd doesn't matter).
+    tests/test_physical_plans.py; bucket files pinned under the
+    application's scratch dir so a driver session's cwd doesn't matter).
     """
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     orders = load_table(spark, sf_dir, "orders").select(

@@ -35,6 +35,12 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Arrow for pandas_udf / mapInPandas / toPandas paths.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Plan cached queries with adaptive execution, as their uncached
+    # plans are. Off by default in Spark 4: a cached plan's last shuffle
+    # then keeps every partition instead of being coalesced, so a seeded
+    # sample or split drawn over a cache would differ from the one drawn
+    # over the lazy plan. Caching must never change a seeded result.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
 }
 
 
@@ -51,20 +57,18 @@ def configure(spark: SparkSession) -> SparkSession:
 
 
 def get_spark(app_name: str = "bigdata_electricity_spark",
-              cores: int | None = None,
-              shuffle_partitions: int | None = None) -> SparkSession:
+              cores: int | None = None) -> SparkSession:
     """Build a local session for tests/bench.
 
     ``cores`` defaults to $SPARK_GRAFT_CPUS or all cores; shuffle
-    partitions default to the core count (never the 200 default, which is
+    partitions equal the core count (never the 200 default, which is
     pathological for sub-GB local data — SURVEY §4.2).
     """
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
-    shuffle_partitions = shuffle_partitions or cores
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cores))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")

@@ -98,9 +98,10 @@ def make_household_rows() -> tuple[list[list[str]], dict[str, int]]:
 def stage_household_csv(sf_dir: str) -> str:
     """Write the fixture as the reference-shaped semicolon CSV; return its path.
 
-    Uses the per-process scratch convention (sources/sinks.run_dir) so
-    concurrent driver sessions never clobber each other. ~4.3k rows —
-    negligible staging cost per call.
+    The file lives in the application's scratch dir (sources/sinks.run_dir),
+    so concurrent driver sessions never clobber each other and Spark
+    deletes it when the application stops. ~4.3k rows — negligible
+    staging cost per call. Needs an active SparkContext.
     """
     d = run_dir("household_e2e", sf_dir)
     os.makedirs(d, exist_ok=True)

@@ -24,8 +24,6 @@ TESTDATA_TABLES = (
     "orders", "lineitem", "events", "documents", "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def _assert_ts_is_parquet_nanos(path: str) -> None:
     """Pin the events-ts unit contract before dividing by 1000.

@@ -17,97 +17,36 @@ import glob
 import os
 import re
 import shutil
-import time
 
+from pyspark import SparkFiles
 from pyspark.sql import DataFrame
 
 
 def run_dir(entry: str, sf_dir: str) -> str:
-    """Per-run scratch directory for export / round-trip entries.
+    """Scratch directory for export / round-trip entries, owned by the
+    active Spark application.
 
-    A fixed output path lets two concurrent driver sessions clobber each
-    other's round-trip audits (one overwrites the directory the other is
-    reading back). Deriving the path from the data dir's basename AND
-    the process id isolates concurrent runs, while staying idempotent
-    within one process (every writer uses mode("overwrite"), so reruns
-    of an entry in the same session overwrite their own output).
-    spark-warehouse/ is gitignored scratch; sibling dirs for the same
-    (entry, tag) left by processes that no longer exist are pruned
-    best-effort on each call so repeated driver/test runs don't
-    accumulate unbounded scratch copies of the big tables.
+    The path lies under the driver's per-application temp dir
+    (``SparkFiles.getRootDirectory()``, itself under ``spark.local.dir``),
+    which Spark deletes on ``SparkContext.stop()`` and at JVM exit. So
+    two concurrent applications never share a path and cannot clobber
+    each other's round-trip audits, while reruns of an entry within one
+    application get the same path (every writer uses mode("overwrite")).
+    The data dir's basename keeps scale factors apart. Needs an active
+    SparkContext.
     """
     tag = re.sub(r"[^A-Za-z0-9_.-]+", "_",
                  os.path.basename(os.path.normpath(sf_dir)) or "data")
-    _prune_dead_run_dirs(f"{entry}_{tag}")
-    return f"/root/repo/spark-warehouse/{entry}_{tag}_pid{os.getpid()}"
-
-
-def _pid_start_epoch(pid: int) -> float | None:
-    """Best-effort start time (epoch seconds) of ``pid`` via /proc.
-
-    Field 22 of /proc/<pid>/stat is the start time in clock ticks since
-    boot; the process name (field 2) may contain spaces/parens, so the
-    parse splits after the LAST ')'. Returns None off-Linux or on any
-    read/parse failure — callers fall back to liveness-only pruning.
-    """
-    try:
-        with open(f"/proc/{pid}/stat", "rb") as fh:
-            stat = fh.read().decode("ascii", "replace")
-        ticks = float(stat.rsplit(")", 1)[1].split()[19])
-        with open("/proc/uptime") as fh:
-            uptime = float(fh.read().split()[0])
-        return time.time() - uptime + ticks / os.sysconf("SC_CLK_TCK")
-    except (OSError, IndexError, ValueError):
-        return None
-
-
-def _prune_dead_run_dirs(prefix: str) -> None:
-    """Delete spark-warehouse/<prefix>_pid<N> trees whose pid is dead
-    OR whose pid was recycled by a younger, unrelated process.
-
-    Liveness alone (kill -0) under-prunes: on a long-lived machine the
-    OS reuses pids, so a stale dir can be "protected" forever by an
-    unrelated process that happens to hold the number, and zombies pass
-    the probe too. The tiebreaker is causal: the dir's mtime is bounded
-    above by its creator's lifetime (the creator is the only writer),
-    so if the process now holding the pid STARTED after the dir was
-    last touched (60 s slack for clock fuzz), it cannot be the creator
-    — the dir is debris and is reclaimed. Where /proc is unavailable
-    the probe stays liveness-only (best-effort, documented).
-
-    A live concurrent run's dir is never touched (its pid is alive and
-    its process predates its own writes), and any filesystem race just
-    leaves the dir for the next call. Keeps the scratch area bounded by
-    the number of CONCURRENT runs instead of the number of historical
-    ones.
-    """
-    for path in glob.glob(f"/root/repo/spark-warehouse/{prefix}_pid[0-9]*"):
-        m = re.search(r"_pid(\d+)$", path)
-        if not m or int(m.group(1)) == os.getpid():
-            continue
-        pid = int(m.group(1))
-        try:
-            os.kill(pid, 0)  # raises if the pid is gone
-        except ProcessLookupError:
-            shutil.rmtree(path, ignore_errors=True)
-            continue
-        except PermissionError:
-            pass  # pid exists but owned elsewhere — fall through to age check
-        started = _pid_start_epoch(pid)
-        try:
-            if started is not None and started > os.path.getmtime(path) + 60:
-                shutil.rmtree(path, ignore_errors=True)  # recycled pid
-        except OSError:
-            pass  # dir vanished under us — nothing to prune
+    return os.path.join(SparkFiles.getRootDirectory(), "scratch", f"{entry}_{tag}")
 
 
 def run_table(base: str) -> str:
     """Per-run catalog table identifier, mirroring ``run_dir``.
 
-    A pid-isolated file path alone only half-closes the concurrency
+    A per-application file path alone only half-closes the concurrency
     hole: two drivers sharing a metastore still race on the
     DROP TABLE + saveAsTable sequence if the table NAME is fixed.
-    Suffixing the identifier the same way as the path makes the whole
+    Suffixing the identifier with the process id makes the whole
     (name, location) pair per-process. Table names can't contain dots
     or dashes, so only [A-Za-z0-9_] survives.
     """

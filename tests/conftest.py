@@ -113,7 +113,7 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", cores=8, shuffle_partitions=8)
+    s = get_spark("tests", cores=8)
     yield s
     s.stop()
 

@@ -3,24 +3,16 @@
 1. Zero-variance OLS frames — the rolling-regression entry must yield
    NULL (never NaN/Inf or a crash) when every event in the trailing
    window lands on the same second, and its DuckDB oracle must agree.
-2. Scratch pruning under pid recycling — `_prune_dead_run_dirs` must
-   reclaim a stale dir whose pid number is now held by a YOUNGER,
-   unrelated process (liveness alone would protect it forever), while
-   never touching a dir owned by a genuinely live writer.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 import os
-import subprocess
-import sys
-import time
 
 import pandas as pd
 
 from bigdata_electricity_spark.plans import REGISTRY
-from bigdata_electricity_spark.sources import sinks
 
 
 def test_rolling_regression_zero_variance_frame_is_null(spark, tmp_path_factory):
@@ -56,65 +48,3 @@ def test_rolling_regression_zero_variance_frame_is_null(spark, tmp_path_factory)
     err = compare_one(spark, con, REGISTRY["events_rolling_regression_slope"], str(d))
     assert err is None or err.startswith("ok:"), err
 
-
-def _scratch(prefix: str, pid: int) -> str:
-    path = f"/root/repo/spark-warehouse/{prefix}_pid{pid}"
-    os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, "marker"), "w") as fh:
-        fh.write("x")
-    return path
-
-
-def test_prune_reclaims_recycled_pid_dirs():
-    """A dir stamped with a pid now held by a process YOUNGER than the
-    dir (mtime an hour in the past) is debris from a previous boot/run
-    and must be reclaimed; the same pid with a FRESH mtime must be
-    treated as a live concurrent writer and kept."""
-    prefix = "prunetest_recycled"
-    helper = subprocess.Popen([sys.executable, "-c", "import time; time.sleep(60)"])
-    try:
-        stale = _scratch(prefix, helper.pid)
-        old = time.time() - 3600
-        os.utime(stale, (old, old))
-        sinks._prune_dead_run_dirs(prefix)
-        assert not os.path.exists(stale), "recycled-pid dir not reclaimed"
-
-        fresh = _scratch(prefix, helper.pid)  # mtime == now → creator plausible
-        sinks._prune_dead_run_dirs(prefix)
-        assert os.path.exists(fresh), "live writer's dir was wrongly pruned"
-    finally:
-        helper.kill()
-        helper.wait()
-        for p in (f"/root/repo/spark-warehouse/{prefix}_pid{helper.pid}",):
-            if os.path.exists(p):
-                import shutil
-                shutil.rmtree(p, ignore_errors=True)
-
-
-def test_prune_reclaims_dead_pid_and_keeps_own_dir():
-    prefix = "prunetest_dead"
-    proc = subprocess.Popen([sys.executable, "-c", "pass"])
-    proc.wait()  # reaped → pid free (modulo an unlikely immediate reuse)
-    dead = _scratch(prefix, proc.pid)
-    own = _scratch(prefix, os.getpid())
-    try:
-        sinks._prune_dead_run_dirs(prefix)
-        assert os.path.exists(own), "own dir must never be pruned"
-        # A racing pid reuse would legitimately keep the dir; accept
-        # either only if the pid is genuinely alive again.
-        if os.path.exists(dead):
-            os.kill(proc.pid, 0)  # raises → the prune missed a dead pid
-    finally:
-        import shutil
-        shutil.rmtree(own, ignore_errors=True)
-        shutil.rmtree(dead, ignore_errors=True)
-
-
-def test_pid_start_epoch_sane_for_self():
-    """The /proc parse must return a start time in the past and after
-    boot for the current process (and None only off-Linux)."""
-    got = sinks._pid_start_epoch(os.getpid())
-    if got is None:
-        assert not os.path.exists("/proc/self/stat")  # only valid excuse
-    else:
-        assert 0 < got <= time.time() + 1

@@ -1075,12 +1075,12 @@ def test_conformal_zero_variance_feature_degrades_gracefully(spark, tmp_path_fac
 def test_glob_filter_decoys_are_load_bearing(spark):
     """Negative control: the planted decoys must actually poison an
     unfiltered recursive read — otherwise the entry certifies nothing."""
-    import glob as pyglob
-
     import pytest
 
+    from bigdata_electricity_spark.sources.sinks import run_dir
+
     REGISTRY["scan_path_glob_filter"].fn(spark, SF0001).collect()
-    out_dir = pyglob.glob("/root/repo/spark-warehouse/glob_docs_sf0.001_pid*")[0]
+    out_dir = run_dir("glob_docs", SF0001)
     with pytest.raises(Exception):
         # decoy.csv has no parquet footer -> the unfiltered read fails
         spark.read.option("recursiveFileLookup", "true").parquet(out_dir).collect()

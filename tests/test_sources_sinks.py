@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import csv
 import os
+import subprocess
+import sys
 
 from bigdata_electricity_spark.sources.loaders import (
     TESTDATA_TABLES,
@@ -84,6 +86,57 @@ def test_events_ts_unit_contract_both_units(spark, tmp_path):
     )
     df3 = load_table(spark, str(us2_dir), "events")
     assert dict(df3.dtypes)["ts"].startswith("timestamp")
+
+
+def test_events_stream_refuses_micros_bigint_ts(spark, tmp_path):
+    """The stream source keeps the loader's unit contract: plain INT64
+    epoch-micros arrives as bigint like nanos does, and must fail loudly
+    rather than be divided by 1000."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from bigdata_electricity_spark.streaming import streaming_tumbling_counts
+
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([1], type=pa.int64()),
+            "ts": pa.array([1_700_000_000_000_000], type=pa.int64()),
+            "value": pa.array([1.0]),
+        }),
+        str(tmp_path / "events.parquet"),
+        store_schema=False,
+    )
+    with pytest.raises(ValueError, match="timestamp\\[ns\\]"):
+        streaming_tumbling_counts(spark, str(tmp_path))
+
+
+def test_run_dir_is_released_with_the_application(tmp_path):
+    """Scratch written under run_dir lives in the application's temp dir
+    and is gone once the session stops. Runs in its own process, so
+    stopping that session leaves the shared test session alone."""
+    script = tmp_path / "lifetime.py"
+    script.write_text(
+        "import os\n"
+        "from pyspark import SparkFiles\n"
+        "from bigdata_electricity_spark.session import get_spark\n"
+        "from bigdata_electricity_spark.sources.sinks import run_dir\n"
+        "spark = get_spark('run-dir-lifetime', cores=1)\n"
+        "d = run_dir('lifetime', '/data/sf0.001')\n"
+        "assert d.startswith(SparkFiles.getRootDirectory() + os.sep), d\n"
+        "spark.range(3).write.parquet(d)\n"
+        "assert spark.read.parquet(d).count() == 3\n"
+        "spark.stop()\n"
+        "print(d)\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": root, "SPARK_DRIVER_MEMORY": "1g"}
+    out = subprocess.run([sys.executable, str(script)], env=env, capture_output=True,
+                         text=True, timeout=300)
+    assert out.returncode == 0, out.stderr[-2000:]
+    scratch = out.stdout.strip().splitlines()[-1]
+    assert scratch.endswith(os.path.join("scratch", "lifetime_sf0.001")), scratch
+    assert not os.path.exists(scratch)
 
 
 def test_register_views_sql(spark):
