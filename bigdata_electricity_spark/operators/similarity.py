@@ -11,6 +11,9 @@ double accumulation, no Arrow boundary on the hot path.
 
 from __future__ import annotations
 
+# Module-level: ``from __future__ import annotations`` leaves pandas_udf
+# hints as strings, which it resolves against the module's globals.
+import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions.vectors import cosine_similarity, dot_product, l2_norm, unit_vector
@@ -188,7 +191,6 @@ def nearest_centroid_udf(centroids: list[tuple[int, list[float]]]):
     inside the UDF closure.
     """
     import numpy as np
-    import pandas as pd
 
     cids = np.array([c[0] for c in sorted(centroids)], dtype=np.int64)
     C = np.array([c[1] for c in sorted(centroids)], dtype=np.float64)
@@ -251,8 +253,6 @@ def brute_force_topk_arrow(embeddings: DataFrame, query_vec_id: int, k: int = 10
     guaranteed and this variant is not oracle-hashed).
     """
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
 
     qrow = embeddings.filter(F.col(id_col) == query_vec_id).select(vec_col).head()
     if qrow is None:
@@ -260,11 +260,8 @@ def brute_force_topk_arrow(embeddings: DataFrame, query_vec_id: int, k: int = 10
     q = np.asarray(qrow[0], dtype=np.float64)
     qn = q / np.sqrt(q @ q)
 
-    # functionType passed explicitly: this module uses
-    # `from __future__ import annotations`, which stringifies type hints
-    # and breaks pandas_udf's hint-based dispatch.
-    @pandas_udf("double", PandasUDFType.SCALAR)
-    def cos_q(v):
+    @F.pandas_udf("double")
+    def cos_q(v: pd.Series) -> pd.Series:
         m = np.asarray(v.tolist(), dtype=np.float64)
         norms = np.sqrt((m * m).sum(axis=1))
         return pd.Series((m @ qn) / norms)

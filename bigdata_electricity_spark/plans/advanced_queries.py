@@ -8,6 +8,9 @@ scalably and DuckDB can oracle-check it.
 
 from __future__ import annotations
 
+# Module-level: ``from __future__ import annotations`` leaves pandas_udf
+# hints as strings, which it resolves against the module's globals.
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.rounding import dround, hround
@@ -818,8 +821,6 @@ def cogroup_purchase_click_windows(spark: SparkSession, sf_dir: str) -> DataFram
     window) — same result, quadratic per user, which is exactly why
     the cogroup form exists.
     """
-    import pandas as pd
-
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_type")
     clicks = ev.filter(F.col("event_type") == "click").drop("event_type")
     purchases = ev.filter(F.col("event_type") == "purchase").drop("event_type")
@@ -957,12 +958,7 @@ def agg_gini_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups like priority classes; for unbounded keys use the mergeable
     built-in sketches instead.
     """
-    import pandas as pd
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    # functionType passed explicitly: `from __future__ import annotations`
-    # stringifies hints and breaks pandas_udf's hint-based dispatch.
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
+    @F.pandas_udf("double")
     def gini_udf(x: pd.Series) -> float:
         import numpy as np
 

@@ -335,7 +335,7 @@ def dedup_lsh_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.loaders import parquet_row_count
 
     docs = load_table(spark, sf_dir, "documents")
-    n = parquet_row_count(f"{sf_dir}/documents.parquet")
+    n = parquet_row_count(spark, f"{sf_dir}/documents.parquet")
     return lsh_dedup_clusters(docs, threshold=0.6, n_docs=n).orderBy("doc_id")
 
 

@@ -164,7 +164,7 @@ def sim_lsh_hyperplane_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     # already store it, so read them metadata-only instead of paying a
     # full count() scan per invocation (r9 VERDICT task 6 — the entry's
     # query plan now contains no count job at all).
-    n = parquet_row_count(f"{sf_dir}/embeddings.parquet")
+    n = parquet_row_count(spark, f"{sf_dir}/embeddings.parquet")
     bits = max(4, math.ceil(math.log2(max(n, 128) / 64.0)))
     bands = 8
     return lsh_near_dup_pairs(
@@ -199,7 +199,7 @@ def sim_lsh_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the composed production path must not carry the fixed-16-bucket
     # disease its own pair-listing baseline was twinned for. n from the
     # parquet footers, no count() job.
-    n = parquet_row_count(f"{sf_dir}/embeddings.parquet")
+    n = parquet_row_count(spark, f"{sf_dir}/embeddings.parquet")
     bits = max(4, math.ceil(math.log2(max(n, 128) / 64.0)))
     bands = 8
     pairs = lsh_near_dup_pairs(
@@ -765,7 +765,7 @@ def sim_ivf_scaled_nlist(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # n from the parquet footers (metadata-only) — sizing the index must
     # not cost a scan (r9 VERDICT task 6 pattern).
-    n = parquet_row_count(f"{sf_dir}/embeddings.parquet")
+    n = parquet_row_count(spark, f"{sf_dir}/embeddings.parquet")
     nlist = int(math.ceil(math.sqrt(n)))
     cent = (
         emb.orderBy("vec_id")
@@ -913,7 +913,7 @@ def sim_ivf_recall_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )
     # footer-only row count — no scan to size the index
-    n = parquet_row_count(f"{sf_dir}/embeddings.parquet")
+    n = parquet_row_count(spark, f"{sf_dir}/embeddings.parquet")
     nlist = int(math.ceil(math.sqrt(n)))
     cent = (
         emb.orderBy("vec_id")
@@ -1162,7 +1162,7 @@ def _sqrt_n_assignment(spark: SparkSession, sf_dir: str):
         "embedding",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
-    n = parquet_row_count(f"{sf_dir}/embeddings.parquet")
+    n = parquet_row_count(spark, f"{sf_dir}/embeddings.parquet")
     nlist = int(math.ceil(math.sqrt(n)))
     cent = (
         embd.orderBy("vec_id")
@@ -1245,7 +1245,7 @@ def graph_triangle_doulion(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
-    n = parquet_row_count(f"{sf_dir}/embeddings.parquet")
+    n = parquet_row_count(spark, f"{sf_dir}/embeddings.parquet")
     nlist = int(math.ceil(math.sqrt(n)))
     cent_rows = [
         (r["vec_id"], r["v"])
@@ -2354,7 +2354,7 @@ def _incr_corpus_batch(spark: SparkSession, sf_dir: str):
     )
     corpus = emb.filter(F.col("vec_id") % 7 != 0)
     batch = emb.filter(F.col("vec_id") % 7 == 0)
-    n_total = parquet_row_count(f"{sf_dir}/embeddings.parquet")
+    n_total = parquet_row_count(spark, f"{sf_dir}/embeddings.parquet")
     n_batch = (n_total + 6) // 7
     n_corpus = n_total - n_batch
     nlist = int(math.ceil(math.sqrt(n_corpus)))
@@ -2687,7 +2687,7 @@ def sim_ivf_epoch_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus0 = emb.filter(~(F.col("vec_id") % 7).isin(0, 6))
     delta = emb.filter(F.col("vec_id") % 7 == 6)
     batch = emb.filter(F.col("vec_id") % 7 == 0)
-    n_total = parquet_row_count(f"{sf_dir}/embeddings.parquet")
+    n_total = parquet_row_count(spark, f"{sf_dir}/embeddings.parquet")
     n_batch = (n_total + 6) // 7       # ids dense 0..n-1: % 7 == 0 count
     n_delta = n_total // 7             # % 7 == 6 count
     n_corpus0 = n_total - n_batch - n_delta

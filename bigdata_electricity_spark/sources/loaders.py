@@ -6,16 +6,23 @@ reference SQLOperations.scala:12-15), S5 (temp-view registration —
 reference SQLOperations.scala:25), and the new-engine parquet scans for
 ``/root/testdata/sf*/{...}.parquet``.
 
-Scale notes: parquet scans get predicate pushdown + column pruning from
-Catalyst for free; the loaders never cache or collect. The only eager
-work is the one-row-group schema peek for the events nanos fallback.
+Every testdata table is read through one catalog (:func:`table_entry`),
+the engine's only reader of part-file listings and parquet footers. The
+first read of a table version infers its schema (one Spark job) and
+reads its footers; every later read pins that schema and runs no job.
+A table Spark reads as one split is declared one partition, so the
+planner adds no exchange above it. Scale notes: parquet scans get
+predicate pushdown + column pruning from Catalyst for free; the loaders
+never cache or collect.
 """
 
 from __future__ import annotations
 
 import os
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from ..session import configure
 
@@ -25,66 +32,122 @@ TESTDATA_TABLES = (
 )
 
 
-def _assert_ts_is_parquet_nanos(path: str) -> None:
-    """Pin the events-ts unit contract before dividing by 1000.
+@dataclass(frozen=True)
+class TableEntry:
+    """What the catalog knows about one version of a parquet table."""
 
-    The bigint fallback below exists because ``nanosAsLong`` surfaces
-    parquet TIMESTAMP(NANOS) as epoch-nanos longs. But a bigint dtype
-    alone doesn't prove the unit: a regenerated testdata drop that wrote
-    plain INT64 epoch-MICROS would also arrive as bigint, and the ÷1000
-    would silently shift every event-time window by 1000× (r8 VERDICT
-    task 4). So read the parquet footer (pyarrow, metadata-only — no
-    data pages) and require the column's declared logical type to be
-    timestamp[ns]; anything else is a loud contract failure, not a
-    guess.
-    """
+    schema: StructType  # Spark's schema, inferred once per key
+    rows: int  # row count summed over the part files' footers
+    bytes: int  # on-disk size summed over the part files
+    parts: int  # number of part files
+    # Why a bigint ``ts`` column is not epoch-nanos (None when it is, or
+    # when ``ts`` is not a bigint at all).
+    ts_error: str | None
+
+    @property
+    def dtypes(self) -> dict[str, str]:
+        return {f.name: f.dataType.simpleString() for f in self.schema.fields}
+
+    def assert_ts_is_parquet_nanos(self) -> None:
+        """Pin the events-ts unit contract before dividing by 1000.
+
+        The bigint fallback exists because ``nanosAsLong`` surfaces
+        parquet TIMESTAMP(NANOS) as epoch-nanos longs. But a bigint dtype
+        alone doesn't prove the unit: a regenerated testdata drop that
+        wrote plain INT64 epoch-MICROS would also arrive as bigint, and
+        the ÷1000 would silently shift every event-time window by 1000×.
+        The catalog read every part file's footer (metadata only, no data
+        pages); anything but timestamp[ns] is a loud contract failure,
+        not a guess.
+        """
+        if self.ts_error is not None:
+            raise ValueError(self.ts_error)
+
+
+# (absolute path, nanosAsLong value) -> (part files' (path, size, mtime), entry)
+_CATALOG: dict[tuple[str, str | None], tuple[tuple, TableEntry]] = {}
+
+
+def _part_files(path: str) -> list[str]:
+    """The parquet files Spark reads for ``path`` (a file or a dataset
+    directory; like Spark, skips names starting with ``_`` or ``.``)."""
+    if not os.path.isdir(path):
+        return [path]
+    parts = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        parts += [os.path.join(root, f) for f in sorted(files)
+                  if f.endswith(".parquet") and not f.startswith(("_", "."))]
+    return parts
+
+
+def _read_footers(parts: list[str], ts_is_long: bool) -> tuple[int, str | None]:
+    """Row count and the events-ts unit check, from the footers alone."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    if os.path.isdir(path):
-        # Directory-style parquet: a drop with MIXED units across part
-        # files would pass a first-file-only peek and silently misconvert
-        # the other parts (r9 ADVICE) — footer reads are metadata-only,
-        # so validate every part.
-        checks = [
-            os.path.join(path, f)
-            for f in sorted(os.listdir(path))
-            if f.endswith(".parquet")
-        ]
-    else:
-        checks = [path]
-    for check in checks:
-        t = pq.read_schema(check).field("ts").type
-        if not (pa.types.is_timestamp(t) and t.unit == "ns"):
-            raise ValueError(
-                f"events.ts arrived as bigint but the parquet logical type is "
-                f"{t}, not timestamp[ns]; the epoch-nanos conversion contract "
-                f"does not hold for this file — refusing to guess the unit "
-                f"({check})"
-            )
+    rows, ts_error = 0, None
+    for part in parts:
+        footer = pq.ParquetFile(part)
+        rows += footer.metadata.num_rows
+        if ts_is_long and ts_error is None:
+            # Every part, not just the first: a drop with MIXED units
+            # across part files would otherwise misconvert the others.
+            t = footer.schema_arrow.field("ts").type
+            if not (pa.types.is_timestamp(t) and t.unit == "ns"):
+                ts_error = (
+                    f"events.ts arrived as bigint but the parquet logical type is "
+                    f"{t}, not timestamp[ns]; the epoch-nanos conversion contract "
+                    f"does not hold for this file — refusing to guess the unit "
+                    f"({part})"
+                )
+    return rows, ts_error
 
 
-def parquet_row_count(path: str) -> int:
-    """Exact table row count from parquet FOOTERS only — no Spark job.
+def table_entry(spark: SparkSession, path: str) -> TableEntry:
+    """The catalog entry of the parquet table at ``path``.
+
+    Keyed by the absolute path and the session's
+    ``spark.sql.legacy.parquet.nanosAsLong`` value, and valid while every
+    part file keeps its size and mtime: a rewritten table is re-inferred
+    on its next read. Entries live as long as the Python process.
+    """
+    path = os.path.abspath(path)
+    parts = _part_files(path)
+    stats = [os.stat(p) for p in parts]
+    stamp = tuple((p, st.st_size, st.st_mtime_ns) for p, st in zip(parts, stats))
+    key = (path, spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None))
+    cached = _CATALOG.get(key)
+    if cached is not None and cached[0] == stamp:
+        return cached[1]
+    schema = spark.read.parquet(path).schema
+    ts_is_long = "ts" in schema.fieldNames() and schema["ts"].dataType.simpleString() == "bigint"
+    rows, ts_error = _read_footers(parts, ts_is_long)
+    entry = TableEntry(schema, rows, sum(s for _, s, _ in stamp), len(parts), ts_error)
+    _CATALOG[key] = (stamp, entry)
+    return entry
+
+
+def _is_single_split(spark: SparkSession, entry: TableEntry) -> bool:
+    """Whether Spark reads the table as exactly one split at any core count.
+
+    Spark splits files at ``min(maxPartitionBytes, max(openCostInBytes,
+    bytes per core))`` bytes, so one part file no larger than
+    ``min(openCostInBytes, maxPartitionBytes)`` is always one split.
+    """
+    conf = spark._jsparkSession.sessionState().conf()
+    return entry.parts == 1 and entry.bytes <= min(conf.filesOpenCostInBytes(),
+                                                   conf.filesMaxPartitionBytes())
+
+
+def parquet_row_count(spark: SparkSession, path: str) -> int:
+    """Exact table row count from the catalog's footer read — no Spark job.
 
     Index-build parameters (e.g. an LSH signature length sized to n)
     need the corpus cardinality before the plan runs; `df.count()` pays
-    a full scan for a number every footer already stores. Metadata-only
-    reads, summed across part files for directory-style datasets —
-    the same access pattern as :func:`_assert_ts_is_parquet_nanos`
-    (r9 VERDICT task 6).
+    a full scan for a number every footer already stores.
     """
-    import pyarrow.parquet as pq
-
-    if os.path.isdir(path):
-        parts = [
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-        ]
-    else:
-        parts = [path]
-    return sum(pq.ParquetFile(p).metadata.num_rows for p in parts)
+    return table_entry(spark, path).rows
 
 
 def _events_ts_to_timestamp(df: DataFrame) -> DataFrame:
@@ -103,11 +166,25 @@ def _events_ts_to_timestamp(df: DataFrame) -> DataFrame:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one testdata table as a DataFrame (lazy parquet scan)."""
+    """Load one testdata table as a DataFrame (lazy parquet scan, no job).
+
+    The schema comes from the catalog (:func:`table_entry`), keyed by
+    path, ``nanosAsLong`` and the part files' sizes and mtimes, and kept
+    for the life of the process. When Spark reads the table as one split
+    (one part file no larger than ``min(spark.sql.files.openCostInBytes,
+    spark.sql.files.maxPartitionBytes)``), the scan is declared one
+    partition with ``coalesce(1)``: its ``SinglePartition`` output lets
+    the planner drop every exchange above it, and no scan loses
+    parallelism it had.
+    """
     configure(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        _assert_ts_is_parquet_nanos(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    entry = table_entry(spark, path)
+    df = spark.read.schema(entry.schema).parquet(path)
+    if _is_single_split(spark, entry):
+        df = df.coalesce(1)
+    if name == "events" and entry.dtypes.get("ts") == "bigint":
+        entry.assert_ts_is_parquet_nanos()
         df = _events_ts_to_timestamp(df)
     return df
 

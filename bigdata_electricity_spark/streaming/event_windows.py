@@ -18,25 +18,25 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..sources.loaders import _assert_ts_is_parquet_nanos
+from ..sources.loaders import table_entry
 
 _COUNTER = itertools.count()
 
 
 def _read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the static events parquet (schema pinned from a
-    static peek; ts arrives as epoch-nanos long under nanosAsLong)."""
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
+    """readStream over the static events parquet (schema pinned from the
+    table catalog; ts arrives as epoch-nanos long under nanosAsLong)."""
+    entry = table_entry(spark, f"{sf_dir}/events.parquet")
     stream = (
-        spark.readStream.schema(static.schema)
+        spark.readStream.schema(entry.schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    ts_type = dict(static.dtypes).get("ts")
+    ts_type = entry.dtypes.get("ts")
     if ts_type == "bigint":
         # Same unit contract as load_table: a bigint ts must be parquet
         # TIMESTAMP(NANOS), never plain INT64 micros shifted 1000×.
-        _assert_ts_is_parquet_nanos(f"{sf_dir}/events.parquet")
+        entry.assert_ts_is_parquet_nanos()
         # Plain TIMESTAMP (not NTZ): watermarks require TIMESTAMP event
         # time; session tz is pinned UTC so wall-clock output matches.
         stream = stream.withColumn(

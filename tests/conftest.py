@@ -118,6 +118,22 @@ def spark():
     s.stop()
 
 
+@pytest.fixture(scope="module")
+def distributed_plans():
+    """Plan every table scan the way large inputs get it.
+
+    The table catalog declares a one-split table as one partition, so at
+    sf0.001 the planner drops the exchanges the plan-shape guards check.
+    Turning the single-split rule off makes those modules inspect the
+    distributed plan (every exchange in place) at test-data sizes.
+    """
+    from bigdata_electricity_spark.sources import loaders
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(loaders, "_is_single_split", lambda spark, entry: False)
+        yield
+
+
 @pytest.fixture(scope="session")
 def household_raw(spark):
     rows, expected = make_household_rows()

@@ -14,6 +14,9 @@ from bigdata_electricity_spark.plans import REGISTRY
 
 SF_DIR = "/root/testdata/sf0.001"
 
+# Guard the distributed plan, not the one-partition plan small tables get.
+pytestmark = pytest.mark.usefixtures("distributed_plans")
+
 
 def plan_of(spark, name: str) -> str:
     return REGISTRY[name].fn(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()

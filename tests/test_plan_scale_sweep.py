@@ -25,6 +25,9 @@ from bigdata_electricity_spark.plans import REGISTRY, SCALE_TWINS
 
 SF_DIR = "/root/testdata/sf0.001"
 
+# Guard the distributed plan, not the one-partition plan small tables get.
+pytestmark = pytest.mark.usefixtures("distributed_plans")
+
 # Subtree markers proving the exchange input is reduced or bounded:
 # partial aggregates, top-k, size-bounded generators, or a reuse of an
 # exchange that was itself checked where it first appeared.
