@@ -37,13 +37,13 @@ def null_counts_exprs(cols: list[str]) -> list[Column]:
     ]
 
 
-def to_event_datetime(date_col: str = "Date", time_col: str = "Time",
-                      fmt: str = "d/M/yyyy H:mm:ss") -> Column:
-    """P2 — parse unpadded ``d/M/yyyy`` + ``H:mm:ss`` into a timestamp.
+def to_event_datetime() -> Column:
+    """P2 — parse the unpadded ``d/M/yyyy`` ``Date`` + ``H:mm:ss`` ``Time``
+    columns into a timestamp.
 
     Reference Cleaning.scala:36-41. Unparseable input yields null (counted
     by the cleaning profiler rather than erroring), hence try_to_timestamp.
     """
     return F.try_to_timestamp(
-        F.concat_ws(" ", F.col(date_col), F.col(time_col)), F.lit(fmt)
+        F.concat_ws(" ", F.col("Date"), F.col("Time")), F.lit("d/M/yyyy H:mm:ss")
     )

@@ -16,8 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def logreg_label_accuracy(embeddings: DataFrame, seed: int = 42,
-                          vec_col: str = "embedding") -> DataFrame:
+def logreg_label_accuracy(embeddings: DataFrame, seed: int = 42) -> DataFrame:
     """Train multinomial logistic regression label←embedding; return one
     row of train/test accuracy vs the majority-class baseline
     (rows-only check: solver floats are engine-specific).
@@ -28,7 +27,7 @@ def logreg_label_accuracy(embeddings: DataFrame, seed: int = 42,
 
     data = embeddings.select(
         F.col("label").cast("double").alias("label"),
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
+        array_to_vector(F.col("embedding").cast("array<double>")).alias("features"),
     )
     train, test = data.randomSplit([0.7, 0.3], seed=seed)
     model = LogisticRegression(maxIter=50, regParam=0.01).fit(train)

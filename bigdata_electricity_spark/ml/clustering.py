@@ -18,8 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 
-def kmeans_cluster_sizes(embeddings: DataFrame, k: int = 8, seed: int = 42,
-                         vec_col: str = "embedding") -> DataFrame:
+def kmeans_cluster_sizes(embeddings: DataFrame, k: int = 8, seed: int = 42) -> DataFrame:
     """Cluster embeddings with seeded KMeans; return per-cluster sizes and
     centroid norms (cluster ids are arbitrary → rows-only check).
     """
@@ -27,7 +26,7 @@ def kmeans_cluster_sizes(embeddings: DataFrame, k: int = 8, seed: int = 42,
     from pyspark.ml.functions import array_to_vector
 
     data = embeddings.select(
-        "vec_id", array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
+        "vec_id", array_to_vector(F.col("embedding").cast("array<double>")).alias("features")
     )
     model = KMeans(k=k, seed=seed, maxIter=20).fit(data)
     assigned = model.transform(data)
@@ -38,21 +37,19 @@ def kmeans_cluster_sizes(embeddings: DataFrame, k: int = 8, seed: int = 42,
     )
 
 
-def lloyd_dataframe(points: DataFrame, seed_ids: list[int], iters: int = 2,
-                    id_col: str = "vec_id", vec_col: str = "v",
-                    dim: int | None = None) -> DataFrame:
-    """K-means Lloyd iterations as PURE DataFrame operations — no
-    pyspark.ml, no RNG: centroids seed from fixed point ids, each
-    round is (broadcast centroids → per-point argmin by squared L2 →
-    per-dimension mean), unrolled ``iters`` times into one lazy plan.
+def lloyd_dataframe(points: DataFrame, seed_ids: list[int], iters: int = 2) -> DataFrame:
+    """K-means Lloyd iterations over ``(vec_id, v)`` points as PURE
+    DataFrame operations — no pyspark.ml, no RNG: centroids seed from
+    fixed point ids, each round is (broadcast centroids → per-point
+    argmin by squared L2 → per-dimension mean), unrolled ``iters`` times
+    into one lazy plan.
 
     FIXED-DIM REQUIREMENT (r10 ADVICE): the unrolled distance reads
     exactly ``dim`` elements per vector, so every vector must have the
     table's one constant dimension — a longer vector is silently
     truncated to ``dim`` terms, a shorter one contributes NULL d2
-    (non-ANSI element_at). Pass ``dim`` explicitly when you know it to
-    keep the plan FULLY lazy; when omitted it is sampled from one
-    arbitrary row (a limit-1 Spark job at plan-construction time).
+    (non-ANSI element_at). ``dim`` is sampled from one arbitrary row (a
+    limit-1 Spark job at plan-construction time).
 
     Determinism contract (what makes this oracle-checkable when
     `ml_kmeans_embeddings` is rows-only): seeding is by id, argmin ties
@@ -67,42 +64,37 @@ def lloyd_dataframe(points: DataFrame, seed_ids: list[int], iters: int = 2,
     triples, never whole vectors; iterations multiply plan depth, not
     data size (chain localCheckpoint for iters ≫ 5).
     """
-    assigned, _ = _lloyd_rounds(points, seed_ids, iters, id_col, vec_col, dim)
+    assigned, _ = _lloyd_rounds(points, seed_ids, iters)
     return assigned.select("id", "cid", "d2")
 
 
-def lloyd_centroids(points: DataFrame, seed_ids: list[int], iters: int = 1,
-                    id_col: str = "vec_id", vec_col: str = "v",
-                    dim: int | None = None) -> DataFrame:
+def lloyd_centroids(points: DataFrame, seed_ids: list[int], iters: int = 1) -> DataFrame:
     """(cid, c): centroids AFTER ``iters`` Lloyd updates, same
     determinism contract as :func:`lloyd_dataframe` (id seeding, cid
     tie-break, 1e-9 rounding per update) — the trained coarse quantizer
-    the IVF similarity path probes against. Same fixed-dim requirement
-    and optional ``dim`` (pass it to keep the plan lazy)."""
-    _, cent = _lloyd_rounds(points, seed_ids, iters, id_col, vec_col, dim)
+    the IVF similarity path probes against. Same fixed-dim requirement."""
+    _, cent = _lloyd_rounds(points, seed_ids, iters)
     return cent
 
 
-def _lloyd_rounds(points: DataFrame, seed_ids: list[int], iters: int,
-                  id_col: str, vec_col: str, dim: int | None = None):
+def _lloyd_rounds(points: DataFrame, seed_ids: list[int], iters: int):
     from ..functions.vectors import embedding_dim, squared_l2_unrolled
 
-    cent = points.filter(F.col(id_col).isin(seed_ids)).select(
-        F.col(id_col).alias("cid"), F.col(vec_col).alias("c")
+    cent = points.filter(F.col("vec_id").isin(seed_ids)).select(
+        F.col("vec_id").alias("cid"), F.col("v").alias("c")
     )
     # Unrolled fixed-dim d2 (r10): the HOF fold is CodegenFallback —
     # interpreted per scored row; unrolling is bit-identical (same
     # left-assoc double adds — functions/vectors.py rationale), so the
     # 1e-9-rounded determinism contract is untouched.
-    if dim is None:
-        dim = embedding_dim(points, vec_col)
+    dim = embedding_dim(points, "v")
     assigned = None
     for _ in range(iters):
         joined = points.crossJoin(F.broadcast(cent)).select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("v"),
+            F.col("vec_id").alias("id"),
+            "v",
             "cid",
-            squared_l2_unrolled(F.col(vec_col), F.col("c"), dim).alias("d2"),
+            squared_l2_unrolled(F.col("v"), F.col("c"), dim).alias("d2"),
         )
         w = Window.partitionBy("id").orderBy("d2", "cid")
         assigned = (

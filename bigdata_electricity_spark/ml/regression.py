@@ -75,11 +75,12 @@ def run_regression_pipeline(df: DataFrame, label_col: str,
         f"SELECT * FROM VALUES {values} AS metrics(metric, model, baseline)", args=args)
 
 
-def coefficient_report(df: DataFrame, label_col: str, feature_cols: list[str],
-                       seed: int = 42) -> list[tuple[str, float]]:
-    """M6 — (feature, coefficient) pairs (MLOperations.scala:169-174)."""
+def coefficient_report(df: DataFrame, label_col: str,
+                       feature_cols: list[str]) -> list[tuple[str, float]]:
+    """M6 — (feature, coefficient) pairs (MLOperations.scala:169-174),
+    fitted on a 70% split drawn with seed 42."""
     data = df.select(F.col(label_col).alias("label"), *feature_cols).na.drop()
-    train, _ = data.randomSplit([0.7, 0.3], seed=seed)
+    train, _ = data.randomSplit([0.7, 0.3], seed=42)
     vec = VectorAssembler(inputCols=feature_cols, outputCol="features").transform(train)
     model = LinearRegression(featuresCol="features", labelCol="label").fit(vec)
     return list(zip(feature_cols, [float(c) for c in model.coefficients]))

@@ -5,9 +5,12 @@ PySpark-native re-expression of the reference's preprocessing/Cleaning.scala
 reference's decomposition but fixes its one-job-per-metric profiling
 (SURVEY §4.3.2): every profile here is a SINGLE aggregation pass.
 
-Default column names match the UCI household-power table the reference
-targets (Cleaning.scala:11-19); every function takes the column list as a
-parameter so the operators run on any table.
+Column names are those of the UCI household-power table the reference
+targets (Cleaning.scala:11-19): ``Date``/``Time`` strings, the derived
+``DateTime`` and the seven :data:`NUM_COLS` measurements. A table with
+other names is renamed to these with one projection first. Only the
+outlier fences, ``drop_missing`` and the cadence-gap detector take
+column parameters, because callers run them on other columns.
 """
 
 from __future__ import annotations
@@ -32,23 +35,21 @@ NUM_COLS: list[str] = [
 SENTINEL = "?"
 
 
-def replace_sentinels_with_null(df: DataFrame, sentinel: str = SENTINEL,
-                                cols: list[str] | None = None) -> DataFrame:
+def replace_sentinels_with_null(df: DataFrame) -> DataFrame:
     """P1 — replace the ``"?"`` missing-value sentinel with null.
 
     Reference Cleaning.scala:31-33 (na.replace over all columns).
     """
-    return df.na.replace(sentinel, None, subset=cols or df.columns)
+    return df.na.replace(SENTINEL, None, subset=df.columns)
 
 
-def add_datetime(df: DataFrame, date_col: str = "Date", time_col: str = "Time",
-                 out_col: str = "DateTime") -> DataFrame:
-    """P2 — derive a timestamp from unpadded Date+Time strings.
+def add_datetime(df: DataFrame) -> DataFrame:
+    """P2 — derive ``DateTime`` from the unpadded Date+Time strings.
 
     Reference Cleaning.scala:36-41 (`to_timestamp(concat_ws(...), "d/M/yyyy H:mm:ss")`);
     unparseable rows become null and are accounted for in before_stats.
     """
-    return df.withColumn(out_col, to_event_datetime(date_col, time_col))
+    return df.withColumn("DateTime", to_event_datetime())
 
 
 @dataclass
@@ -63,8 +64,7 @@ class BeforeStats:
     per_column_nulls: dict[str, int]
 
 
-def compute_before_stats(df: DataFrame, num_cols: list[str] | None = None,
-                         ts_col: str = "DateTime") -> BeforeStats:
+def compute_before_stats(df: DataFrame) -> BeforeStats:
     """Single-query profiling of null/dup pathologies.
 
     The reference runs 6+ separate count jobs (Cleaning.scala:53-89); here
@@ -73,17 +73,16 @@ def compute_before_stats(df: DataFrame, num_cols: list[str] | None = None,
     Cleaning.scala:65-66) shares the scan. Rows with a null timestamp form
     one group of their own, counted but never as duplicates.
     """
-    num_cols = num_cols or NUM_COLS
     null_counts = {
-        "any_null": any_null(num_cols),
-        "all_null": all_null(num_cols),
-        **{f"nulls_{c}": F.col(c).isNull() for c in num_cols},
+        "any_null": any_null(NUM_COLS),
+        "all_null": all_null(NUM_COLS),
+        **{f"nulls_{c}": F.col(c).isNull() for c in NUM_COLS},
     }
-    per_ts = df.groupBy(ts_col).agg(
+    per_ts = df.groupBy("DateTime").agg(
         F.count(F.lit(1)).alias("n"),
         *[F.count_if(cond).alias(name) for name, cond in null_counts.items()],
     )
-    null_ts = F.col(ts_col).isNull()
+    null_ts = F.col("DateTime").isNull()
     row = per_ts.agg(
         F.sum("n").alias("total_rows"),
         F.sum(F.when(null_ts, F.col("n"))).alias("null_dt"),
@@ -96,7 +95,7 @@ def compute_before_stats(df: DataFrame, num_cols: list[str] | None = None,
         any_null_measurement=row["any_null"] or 0,
         all_null_measurement=row["all_null"] or 0,
         duplicate_timestamps=row["dups"] or 0,
-        per_column_nulls={c: (row[f"nulls_{c}"] or 0) for c in num_cols},
+        per_column_nulls={c: (row[f"nulls_{c}"] or 0) for c in NUM_COLS},
     )
 
 
@@ -105,7 +104,7 @@ def drop_missing(df: DataFrame, num_cols: list[str] | None = None) -> DataFrame:
     return df.na.drop("any", subset=num_cols or NUM_COLS)
 
 
-def cast_numerics(df: DataFrame, num_cols: list[str] | None = None) -> DataFrame:
+def cast_numerics(df: DataFrame) -> DataFrame:
     """P7 — cast measurement columns string→double (Cleaning.scala:97-101).
 
     Invalid numerics become null, counted by :func:`count_cast_failures`.
@@ -113,38 +112,30 @@ def cast_numerics(df: DataFrame, num_cols: list[str] | None = None) -> DataFrame
     a plain cast on malformed input raises instead of reproducing the
     reference's Spark-3 null-on-failure semantics.
     """
-    return df.withColumns({c: F.col(c).try_cast("double") for c in (num_cols or NUM_COLS)})
+    return df.withColumns({c: F.col(c).try_cast("double") for c in NUM_COLS})
 
 
-def count_cast_failures(before: DataFrame, after: DataFrame,
-                        num_cols: list[str] | None = None) -> dict[str, int]:
+def count_cast_failures(before: DataFrame, after: DataFrame) -> dict[str, int]:
     """Cast-failure accounting (Cleaning.scala:104-106) in ONE job per table.
 
     A failure is a value that was non-null pre-cast and null post-cast.
     The reference runs 7 separate count jobs; here we join nothing and
     aggregate each side once.
     """
-    num_cols = num_cols or NUM_COLS
-    pre = before.agg(*null_counts_exprs(num_cols)).first()
-    post = after.agg(*null_counts_exprs(num_cols)).first()
-    return {c: (post[f"nulls_{c}"] or 0) - (pre[f"nulls_{c}"] or 0) for c in num_cols}
+    pre = before.agg(*null_counts_exprs(NUM_COLS)).first()
+    post = after.agg(*null_counts_exprs(NUM_COLS)).first()
+    return {c: (post[f"nulls_{c}"] or 0) - (pre[f"nulls_{c}"] or 0) for c in NUM_COLS}
 
 
-def drop_full_row_dups(df: DataFrame, key_cols: list[str] | None = None,
-                       ts_col: str = "DateTime",
-                       num_cols: list[str] | None = None) -> DataFrame:
+def drop_full_row_dups(df: DataFrame) -> DataFrame:
     """P8 — dropDuplicates on DateTime + all measurements (Cleaning.scala:117-120)."""
-    keys = key_cols or [ts_col, *(num_cols or NUM_COLS)]
-    return df.dropDuplicates(keys)
+    return df.dropDuplicates(["DateTime", *NUM_COLS])
 
 
-def count_full_row_dups(df: DataFrame, key_cols: list[str] | None = None,
-                        ts_col: str = "DateTime",
-                        num_cols: list[str] | None = None) -> int:
+def count_full_row_dups(df: DataFrame) -> int:
     """A2 — number of redundant full-row duplicates (Cleaning.scala:109-115)."""
-    keys = key_cols or [ts_col, *(num_cols or NUM_COLS)]
     row = (
-        df.groupBy(*keys).count().filter(F.col("count") > 1)
+        df.groupBy("DateTime", *NUM_COLS).count().filter(F.col("count") > 1)
         .agg(F.coalesce(F.sum(F.col("count") - 1), F.lit(0)).alias("dups"))
         .first()
     )
@@ -152,11 +143,12 @@ def count_full_row_dups(df: DataFrame, key_cols: list[str] | None = None,
 
 
 def detect_cadence_gaps(df: DataFrame, ts_col: str = "DateTime",
-                        expected_gap_sec: int = 60,
                         tiebreak_cols: list[str] | None = None) -> DataFrame:
     """W1 — lag-based cadence-gap detection (Cleaning.scala:68-79).
 
-    Returns rows whose gap to the previous reading ≠ ``expected_gap_sec``.
+    Returns rows whose gap to the previous reading is not the expected
+    60 s, with ``prev_ts`` and ``gap_sec`` added. Rows with a null
+    ``ts_col`` are left out.
     Scale note: the semantics require a global order, which Spark executes
     as a single-partition window — correct but serial (SURVEY §4.3.3). At
     cluster scale, pre-aggregate or partition by a coarse time bucket and
@@ -173,32 +165,32 @@ def detect_cadence_gaps(df: DataFrame, ts_col: str = "DateTime",
             "gap_sec",
             (F.unix_timestamp(ts_col) - F.unix_timestamp("prev_ts")).cast("long"),
         )
-        .filter(F.col("prev_ts").isNotNull() & (F.col("gap_sec") != expected_gap_sec))
+        .filter(F.col("prev_ts").isNotNull() & (F.col("gap_sec") != 60))
     )
 
 
-def detect_cadence_gaps_partitioned(df: DataFrame, partition_cols: list[str],
-                                    ts_col: str = "ts",
-                                    min_gap_sec: int = 60) -> DataFrame:
-    """Scalable gap detection: lag within a partition key (e.g. per device/user).
+def detect_cadence_gaps_partitioned(df: DataFrame, partition_cols: list[str]) -> DataFrame:
+    """Scalable gap detection: lag of ``ts`` within a partition key (e.g.
+    per device/user), keeping gaps over 60 s.
 
     The 100 TB-safe variant — the window shuffles by ``partition_cols``
     instead of funnelling everything through one partition.
     """
-    w = Window.partitionBy(*partition_cols).orderBy(ts_col)
+    w = Window.partitionBy(*partition_cols).orderBy("ts")
     return (
-        df.withColumn("prev_ts", F.lag(ts_col, 1).over(w))
+        df.withColumn("prev_ts", F.lag("ts", 1).over(w))
         .withColumn(
             "gap_sec",
-            (F.unix_timestamp(ts_col) - F.unix_timestamp("prev_ts")).cast("long"),
+            (F.unix_timestamp("ts") - F.unix_timestamp("prev_ts")).cast("long"),
         )
-        .filter(F.col("prev_ts").isNotNull() & (F.col("gap_sec") > min_gap_sec))
+        .filter(F.col("prev_ts").isNotNull() & (F.col("gap_sec") > 60))
     )
 
 
 def outlier_bounds_iqr(df: DataFrame, cols: list[str] | None = None,
-                       k: float = 1.5, relative_error: float = 0.001) -> dict[str, tuple[float, float]]:
-    """A11 — IQR outlier bounds via approxQuantile (Cleaning.scala:123-152).
+                       relative_error: float = 0.001) -> dict[str, tuple[float, float]]:
+    """A11 — IQR outlier bounds via approxQuantile (Cleaning.scala:123-152):
+    Tukey's fences, 1.5 IQR beyond the quartiles.
 
     ONE multi-column approxQuantile call (Greenwald-Khanna) instead of the
     reference's per-column loop. Returns {col: (lower, upper)}; a column
@@ -220,19 +212,18 @@ def outlier_bounds_iqr(df: DataFrame, cols: list[str] | None = None,
         if qs:
             q1, q3 = qs
             iqr = q3 - q1
-            out[c] = (q1 - k * iqr, q3 + k * iqr)
+            out[c] = (q1 - 1.5 * iqr, q3 + 1.5 * iqr)
     return out
 
 
-def outlier_report_iqr(df: DataFrame, cols: list[str] | None = None,
-                       k: float = 1.5) -> DataFrame:
+def outlier_report_iqr(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """P9 + A12 — per-column outlier counts outside the IQR fence.
 
     All per-column counts fold into one aggregation job; a column without
     a fence (no non-null value) counts 0.
     """
     cols = cols or NUM_COLS
-    bounds = outlier_bounds_iqr(df, cols, k)
+    bounds = outlier_bounds_iqr(df, cols)
     exprs = []
     for c in cols:
         outside = F.lit(False)
@@ -249,20 +240,19 @@ def prepare_raw(df: DataFrame) -> DataFrame:
     return add_datetime(replace_sentinels_with_null(df))
 
 
-def clean_prepared(df: DataFrame, num_cols: list[str] | None = None) -> DataFrame:
+def clean_prepared(df: DataFrame) -> DataFrame:
     """Cast → drop → dedup over the output of :func:`prepare_raw`
     (Cleaning.scala:92-120)."""
-    num_cols = num_cols or NUM_COLS
-    out = cast_numerics(df, num_cols)
-    out = drop_missing(out, num_cols)
+    out = cast_numerics(df)
+    out = drop_missing(out)
     out = out.filter(F.col("DateTime").isNotNull())
-    return drop_full_row_dups(out, num_cols=num_cols)
+    return drop_full_row_dups(out)
 
 
-def clean_pipeline(df: DataFrame, num_cols: list[str] | None = None) -> DataFrame:
+def clean_pipeline(df: DataFrame) -> DataFrame:
     """Full cleaning pipeline: sentinels → DateTime → cast → drop → dedup.
 
     Composition of the reference's Cleaning stages as one lazy plan —
     Catalyst collapses the stacked projections into a single stage.
     """
-    return clean_prepared(prepare_raw(df), num_cols)
+    return clean_prepared(prepare_raw(df))

@@ -19,11 +19,6 @@ def threshold_filter(df: DataFrame, col: str, threshold: float) -> DataFrame:
     return df.filter(F.col(col) > threshold)
 
 
-def count_rows(df: DataFrame) -> int:
-    """A12 — count action (RDDOperations.scala:47 etc.)."""
-    return df.count()
-
-
 def totals_by_key(df: DataFrame, key: Column, value: str,
                   key_name: str = "key", total_name: str = "total") -> DataFrame:
     """A13/A15 — per-key sums; replaces groupByKey/reduceByKey+sum
@@ -40,28 +35,28 @@ def argmax(df: DataFrame, key_col: str, value_col: str) -> DataFrame:
     )
 
 
-def top_k(df: DataFrame, order_col: str, k: int, ascending: bool = False) -> DataFrame:
-    """O3/O4 — top-k by measure; Catalyst plans sort+limit as
+def top_k(df: DataFrame, order_col: str, k: int) -> DataFrame:
+    """O3/O4 — top-k by descending measure; Catalyst plans sort+limit as
     TakeOrderedAndProject (true top-k, no global sort —
     RDDOperations.scala:197-206's sortByKey+take)."""
-    order = F.asc(order_col) if ascending else F.desc(order_col)
-    return df.orderBy(order).limit(k)
+    return df.orderBy(F.desc(order_col)).limit(k)
 
 
 def categorize(df: DataFrame, col: str, buckets: list[tuple[float, str]],
-               default_label: str, out_col: str = "category") -> DataFrame:
+               default_label: str) -> DataFrame:
     """A14 — when-chain bucketing; replaces the map+reduceByKey categorizer
     (RDDOperations.scala:121-137).
 
     ``buckets`` is a list of (upper_bound_exclusive, label) in ascending
-    order; values ≥ the last bound get ``default_label``.
+    order; values ≥ the last bound get ``default_label``. The label goes
+    to a ``category`` column.
     """
     expr: Column | None = None
     for bound, label in buckets:
         cond = F.col(col) < bound
         expr = F.when(cond, label) if expr is None else expr.when(cond, label)
     assert expr is not None
-    return df.withColumn(out_col, expr.otherwise(default_label))
+    return df.withColumn("category", expr.otherwise(default_label))
 
 
 def category_counts(df: DataFrame, col: str, buckets: list[tuple[float, str]],

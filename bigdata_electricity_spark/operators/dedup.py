@@ -8,6 +8,9 @@ the training-data-pipeline dedup ladder, each designed shuffle-aware:
 - MinHash/LSH banding turns all-pairs O(n²) into per-bucket candidate
   generation (the only scalable shape at 100 TB);
 - Jaccard verification runs only on blocked candidate pairs.
+
+Every operator reads the documents table's ``doc_id`` and ``text``
+columns; rename another corpus's columns to these first.
 """
 
 from __future__ import annotations
@@ -19,23 +22,16 @@ from pyspark.sql import DataFrame, Window, functions as F
 from .text import normalize_text
 
 
-def exact_dup_groups(df: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def exact_dup_groups(df: DataFrame) -> DataFrame:
     """Exact dedup via content-hash groupBy (fp, keep_id, n_copies).
 
     The shuffle moves only (hash, id) pairs — never document bodies.
     """
     return (
-        df.select(F.col(id_col), F.md5(F.encode(normalize_text(F.col(text_col)), "UTF-8")).alias("fp"))
+        df.select("doc_id", F.md5(F.encode(normalize_text(F.col("text")), "UTF-8")).alias("fp"))
         .groupBy("fp")
-        .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("n_copies"))
+        .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("n_copies"))
     )
-
-
-def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep the lowest-id representative of each exact-duplicate group."""
-    w = Window.partitionBy(F.md5(F.encode(normalize_text(F.col(text_col)), "UTF-8"))).orderBy(id_col)
-    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
 
 
 def shingles(col, n: int = 3):
@@ -44,7 +40,7 @@ def shingles(col, n: int = 3):
     PERFORMANCE: higher-order functions run interpreted with no
     cross-expression CSE, so the inlined split/normalize here is
     re-evaluated once per shingle. Fine for a single projection that is
-    immediately materialized (the minhash path); for anything that
+    immediately materialized; for anything that
     explodes or re-reads the shingles, materialize the token array in
     its own projection first and use :func:`token_shingles`.
     """
@@ -81,32 +77,6 @@ def token_shingles(tokens_col, n: int = 3):
             lambda i: F.concat_ws(" ", F.slice(c, i + 1, n)),
         ),
     ).otherwise(F.array().cast("array<string>"))
-
-
-def minhash_signature(col, num_hashes: int = 32, shingle_n: int = 3):
-    """MinHash signature as array<bigint>: min over shingles of
-    xxhash64(shingle, seed_i) per hash function. Pure expression —
-    explode-free (the per-row shingle array is transformed in place).
-
-    The per-hash seed must be bound via a closure factory: a two-arg
-    lambda to F.transform would receive the ARRAY INDEX as its second
-    argument, silently shadowing the seed.
-
-    PERFORMANCE: this inlines the shingle expression ``num_hashes``
-    times, and higher-order functions run interpreted (CodegenFallback)
-    with no cross-expression CSE — so the shingles are recomputed per
-    hash (measured 16× slower at 32 hashes). Prefer projecting
-    :func:`shingles` into a column first and building the hash array
-    from that column, as :func:`minhash_lsh_candidates` does.
-    """
-    sh = shingles(col, shingle_n)
-
-    def hash_with_seed(seed: int):
-        return lambda s: F.xxhash64(s, F.lit(seed))
-
-    return F.array(
-        *[F.array_min(F.transform(sh, hash_with_seed(i))) for i in range(num_hashes)]
-    )
 
 
 def minhash_signatures(df: DataFrame, text_col: str = "text",
@@ -266,8 +236,7 @@ def simhash64_udf():
     return _simhash
 
 
-def simhash_near_dups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                      max_hamming: int = 8) -> DataFrame:
+def simhash_near_dups(df: DataFrame, max_hamming: int = 8) -> DataFrame:
     """SimHash near-dup pairs: block on each of the four 16-bit fingerprint
     quarters (the standard rotated-table scheme), verify Hamming distance
     within blocks.
@@ -278,7 +247,7 @@ def simhash_near_dups(df: DataFrame, text_col: str = "text", id_col: str = "doc_
     O(bucket²) instead of O(n²); pairs colliding in several quarters are
     deduplicated before the Hamming verify.
     """
-    fp = df.select(F.col(id_col).alias("id"), simhash64_udf()(F.col(text_col)).alias("fp"))
+    fp = df.select(F.col("doc_id").alias("id"), simhash64_udf()(F.col("text")).alias("fp"))
     blocked = fp.select(
         "id", "fp",
         F.explode(F.array(*[
@@ -304,8 +273,7 @@ def simhash_near_dups(df: DataFrame, text_col: str = "text", id_col: str = "doc_
     )
 
 
-def simhash_group_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                        max_hamming: int = 8) -> DataFrame:
+def simhash_group_pairs(df: DataFrame, max_hamming: int = 8) -> DataFrame:
     """SimHash near-dup relation at FINGERPRINT granularity — the scale
     twin of :func:`simhash_near_dups` (r9 density-controlled sweep).
 
@@ -337,7 +305,7 @@ def simhash_group_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
     the member ids.
     """
     fp = df.select(
-        F.col(id_col).alias("id"), simhash64_udf()(F.col(text_col)).alias("fp")
+        F.col("doc_id").alias("id"), simhash64_udf()(F.col("text")).alias("fp")
     )
     groups = fp.groupBy("fp").agg(
         F.min("id").alias("rep_id"), F.count(F.lit(1)).alias("n_members")
@@ -384,8 +352,7 @@ def simhash_group_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
     return cross.unionByName(selfs)
 
 
-def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                        block_cols: list[str] | None = None,
+def ngram_jaccard_pairs(df: DataFrame, block_cols: list[str] | None = None,
                         threshold: float = 0.5) -> DataFrame:
     """Token-set Jaccard similarity over blocked candidate pairs.
 
@@ -412,11 +379,11 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
     source-blocking is already within 1.4× of the true-pair floor.
     """
     tokens = F.transform(
-        F.array_distinct(F.split(normalize_text(F.col(text_col)), " ")),
+        F.array_distinct(F.split(normalize_text(F.col("text")), " ")),
         lambda t: F.xxhash64(t),
     )
     base = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         *[F.col(c) for c in (block_cols or [])],
         tokens.alias("toks"),
     ).withColumn("__n", F.size("toks"))
@@ -447,8 +414,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
     )
 
 
-def containment_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                      block_cols: list[str] | None = None,
+def containment_pairs(df: DataFrame, block_cols: list[str] | None = None,
                       threshold: float = 0.8) -> DataFrame:
     """Asymmetric token-set containment C(A→B) = |A∩B| / |A| over blocked
     pairs, A oriented as the smaller set (ties by id).
@@ -465,11 +431,11 @@ def containment_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_
     (xxhash64 longs, collision P < 1e-12 per pair).
     """
     tokens = F.transform(
-        F.array_distinct(F.split(normalize_text(F.col(text_col)), " ")),
+        F.array_distinct(F.split(normalize_text(F.col("text")), " ")),
         lambda t: F.xxhash64(t),
     )
     base = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         *[F.col(c) for c in (block_cols or [])],
         tokens.alias("toks"),
     ).withColumn("__n", F.size("toks"))
@@ -520,8 +486,7 @@ def containment_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_
 # strings) and still produce the identical final pair set.
 
 
-def _token_base(df: DataFrame, text_col: str, id_col: str,
-                block_cols: list[str] | None = None,
+def _token_base(df: DataFrame, block_cols: list[str] | None = None,
                 checkpoint: bool = True) -> DataFrame:
     """(id, [blocks], toks, __n) hashed distinct-token arrays.
 
@@ -536,11 +501,11 @@ def _token_base(df: DataFrame, text_col: str, id_col: str,
     scans an ExistingRDD, the uncheckpointed one a parquet scan whose
     ReadSchema is just doc_id, text and source)."""
     tokens = F.transform(
-        F.array_distinct(F.split(normalize_text(F.col(text_col)), " ")),
+        F.array_distinct(F.split(normalize_text(F.col("text")), " ")),
         lambda t: F.xxhash64(t),
     )
     out = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         *[F.col(c) for c in (block_cols or [])],
         tokens.alias("toks"),
     ).withColumn("__n", F.size("toks"))
@@ -572,8 +537,7 @@ def _pair_cond(left: str, right: str, block_cols: list[str] | None):
     return cond
 
 
-def prefix_filtered_jaccard_pairs(df: DataFrame, text_col: str = "text",
-                                  id_col: str = "doc_id",
+def prefix_filtered_jaccard_pairs(df: DataFrame,
                                   block_cols: list[str] | None = None,
                                   threshold: float = 0.6) -> DataFrame:
     """Exact token-set Jaccard pairs ≥ threshold, candidates bounded by
@@ -594,7 +558,7 @@ def prefix_filtered_jaccard_pairs(df: DataFrame, text_col: str = "text",
     shuffle keys on ids or 8-byte token hashes — document bodies never
     move after the first projection.
     """
-    base = _token_base(df, text_col, id_col, block_cols)
+    base = _token_base(df, block_cols)
     ranked = _df_ranked_postings(base, block_cols)
     prefix = ranked.filter(
         F.col("rk") <= F.col("__n") - F.ceil(F.lit(threshold) * F.col("__n")) + 1
@@ -642,8 +606,7 @@ def prefix_filtered_jaccard_pairs(df: DataFrame, text_col: str = "text",
     )
 
 
-def prefix_filtered_containment_pairs(df: DataFrame, text_col: str = "text",
-                                      id_col: str = "doc_id",
+def prefix_filtered_containment_pairs(df: DataFrame,
                                       block_cols: list[str] | None = None,
                                       threshold: float = 0.8) -> DataFrame:
     """Exact containment pairs C(A→B) = |A∩B|/|A| ≥ threshold, with the
@@ -662,7 +625,7 @@ def prefix_filtered_containment_pairs(df: DataFrame, text_col: str = "text",
     :func:`containment_pairs`: the smaller token set, ties to the lower
     id.
     """
-    base = _token_base(df, text_col, id_col, block_cols)
+    base = _token_base(df, block_cols)
     ranked = _df_ranked_postings(base, block_cols)
     prefix = ranked.filter(
         F.col("rk") <= F.col("__n") - F.ceil(F.lit(threshold) * F.col("__n")) + 1
@@ -718,7 +681,6 @@ def prefix_filtered_containment_pairs(df: DataFrame, text_col: str = "text",
 
 
 def incremental_jaccard_flags(corpus: DataFrame, batch: DataFrame,
-                              text_col: str = "text", id_col: str = "doc_id",
                               block_cols: list[str] | None = None,
                               threshold: float = 0.6) -> DataFrame:
     """Incremental dedup: flag each NEW-batch doc that near-duplicates
@@ -755,13 +717,11 @@ def incremental_jaccard_flags(corpus: DataFrame, batch: DataFrame,
     DataFrames to parquet and serves from the reloaded copies to
     certify that split end-to-end.
     """
-    index = build_incremental_index(corpus, text_col, id_col, block_cols, threshold)
-    return incremental_flags_from_index(index, batch, text_col, id_col,
-                                        block_cols, threshold)
+    index = build_incremental_index(corpus, block_cols, threshold)
+    return incremental_flags_from_index(index, batch, block_cols, threshold)
 
 
 def bounded_eval_jaccard_matches(evalset: DataFrame, batch: DataFrame,
-                                 text_col: str = "text", id_col: str = "doc_id",
                                  carry_cols: list[str] | None = None,
                                  threshold: float = 0.5) -> DataFrame:
     """Token-set Jaccard match counts of a large batch against a BOUNDED
@@ -817,8 +777,7 @@ def bounded_eval_jaccard_matches(evalset: DataFrame, batch: DataFrame,
     # substituted into it — re-tokenizing every row twice (the same
     # pushdown trap the token_shingles guard documents).
     ebase = _token_base(
-        evalset.filter(F.col(text_col).isNotNull()), text_col, id_col,
-        checkpoint=False,
+        evalset.filter(F.col("text").isNotNull()), checkpoint=False,
     )
     ev_rows = ebase.select("toks", "__n").collect()
     nb_np = np.asarray([r["__n"] for r in ev_rows], dtype=np.int64)
@@ -897,8 +856,8 @@ def bounded_eval_jaccard_matches(evalset: DataFrame, batch: DataFrame,
                 out["best_jaccard"] = best
                 yield pd.DataFrame(out)
 
-    tbase = _token_base(batch.filter(F.col(text_col).isNotNull()),
-                        text_col, id_col, carry, checkpoint=False)
+    tbase = _token_base(batch.filter(F.col("text").isNotNull()), carry,
+                        checkpoint=False)
     # Carry-column types are derived from the input schema (r13 ADVICE:
     # the former hard-coded `string` silently mis-declared non-string
     # carries).
@@ -909,8 +868,7 @@ def bounded_eval_jaccard_matches(evalset: DataFrame, batch: DataFrame,
     )
 
 
-def build_incremental_index(corpus: DataFrame, text_col: str = "text",
-                            id_col: str = "doc_id",
+def build_incremental_index(corpus: DataFrame,
                             block_cols: list[str] | None = None,
                             threshold: float = 0.6) -> dict[str, DataFrame]:
     """The corpus-only half of incremental dedup — everything here is a
@@ -931,7 +889,7 @@ def build_incremental_index(corpus: DataFrame, text_col: str = "text",
     serve parameters match. Persisting callers should write these two
     alongside the parquet (a one-row manifest) and restore them into
     the reloaded dict."""
-    cbase = _token_base(corpus, text_col, id_col, block_cols)
+    cbase = _token_base(corpus, block_cols)
     blocks = block_cols or []
     cpost = cbase.select("id", "__n", *blocks, F.explode("toks").alias("tok"))
     tok_df = cpost.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
@@ -952,7 +910,6 @@ def build_incremental_index(corpus: DataFrame, text_col: str = "text",
 
 
 def incremental_flags_from_index(index: dict[str, DataFrame], batch: DataFrame,
-                                 text_col: str = "text", id_col: str = "doc_id",
                                  block_cols: list[str] | None = None,
                                  threshold: float = 0.6) -> DataFrame:
     """The per-batch half of incremental dedup: rank the batch against
@@ -986,7 +943,7 @@ def incremental_flags_from_index(index: dict[str, DataFrame], batch: DataFrame,
             f"block_cols={list(block_cols or [])}: candidate blocking is baked "
             "into the persisted prefix postings"
         )
-    bbase = _token_base(batch, text_col, id_col, block_cols)
+    bbase = _token_base(batch, block_cols)
     blocks = block_cols or []
     tok_df = index["tok_df"]
     bpost = bbase.select("id", "__n", *blocks, F.explode("toks").alias("tok"))
@@ -1049,16 +1006,15 @@ def incremental_flags_from_index(index: dict[str, DataFrame], batch: DataFrame,
     )
 
 
-def lsh_signature_for(n_docs: int, target_recall: float = 0.98,
-                      j_t: float = 0.8, j_bg: float = 0.1) -> tuple[int, int]:
+def lsh_signature_for(n_docs: int) -> tuple[int, int]:
     """(num_hashes, bands) for a corpus of ``n_docs`` distinct documents —
     the dedup-side analogue of `sim_lsh_hyperplane_scaled`'s
     bits-scale-with-n discipline (r10 VERDICT task 1).
 
     Two constraints, in tension:
 
-    - RECALL: a pair at Jaccard ``j_t`` must become a candidate with
-      probability ≥ ``target_recall``; the banded S-curve gives
+    - RECALL: a pair at Jaccard j_t = 0.8 must become a candidate with
+      probability ≥ R = 0.98; the banded S-curve gives
       b ≥ ln(1 − R) / ln(1 − j_tʳ) for rows-per-band r.
     - FALSE-CANDIDATE MASS: background (non-duplicate) pairs collide at
       ≈ b·j_bgʳ each, so total false candidates ≈ b·n²·E[j^r] — which
@@ -1079,12 +1035,11 @@ def lsh_signature_for(n_docs: int, target_recall: float = 0.98,
     while n_docs > n0:
         r += 1
         n0 *= 10
-    b = math.ceil(math.log(1.0 - target_recall) / math.log(1.0 - j_t ** r))
+    b = math.ceil(math.log(1.0 - 0.98) / math.log(1.0 - 0.8 ** r))
     return r * b, b
 
 
-def lsh_dedup_clusters(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", threshold: float = 0.6,
+def lsh_dedup_clusters(df: DataFrame, threshold: float = 0.6,
                        num_hashes: int | None = None, bands: int | None = None,
                        n_docs: int | None = None,
                        per_node_cap: int = 4) -> DataFrame:
@@ -1211,7 +1166,7 @@ def lsh_dedup_clusters(df: DataFrame, text_col: str = "text",
     # Stage 0 — token-set contraction. all_base is the ONE tokenization
     # pass over the full corpus (checkpointed); everything downstream
     # (signature, verify arrays, sizes) touches representatives only.
-    all_base = _token_base(df, text_col, id_col)
+    all_base = _token_base(df)
     tokless = F.col("__st").isNull() | (F.size("__st") == 0)
     fpd = all_base.select("id", F.array_sort("toks").alias("__st")).select(
         "id",
@@ -1237,9 +1192,8 @@ def lsh_dedup_clusters(df: DataFrame, text_col: str = "text",
         F.min("id").alias("rep")
     ).localCheckpoint(eager=False)  # feeds base, the sigs, and the expand
     member_map = fpd.join(grp, ["__f1", "__f2"]).select("id", "rep")
-    rep_ids = grp.select(F.col("rep").alias(id_col))
     base = all_base.join(grp.select(F.col("rep").alias("id")), "id", "left_semi")
-    nodes = rep_ids.select(F.col(id_col).alias("id"))
+    nodes = grp.select(F.col("rep").alias("id"))
 
     # Stage 1 — signatures + banded postings (checkpointed: reused by
     # the full-signature union, the spanning edges, and the exhaustive
@@ -1399,15 +1353,13 @@ def lsh_dedup_clusters(df: DataFrame, text_col: str = "text",
         F.col("id").alias("rep"), F.col("component").alias("cluster_id")
     )
     return member_map.join(rep_comp, "rep").select(
-        F.col("id").alias(id_col),
+        F.col("id").alias("doc_id"),
         "cluster_id",
         (F.col("id") == F.col("cluster_id")).alias("is_keeper"),
     )
 
 
-def build_window_index(corpus: DataFrame, width: int = 8,
-                       text_col: str = "text",
-                       id_col: str = "doc_id") -> dict:
+def build_window_index(corpus: DataFrame, width: int = 8) -> dict:
     """The corpus-only half of incremental shifted-substring dedup: the
     DISTINCT rolling ``width``-token windows of the corpus (one row per
     distinct window string), plus the build parameters. Pure function
@@ -1424,7 +1376,7 @@ def build_window_index(corpus: DataFrame, width: int = 8,
     production key is xxhash64(w) (8 bytes — the
     `decon_ngram_overlap` rolling-hash discipline).
     """
-    toks = corpus.select(F.split(F.col(text_col), " ").alias("t"))
+    toks = corpus.select(F.split(F.col("text"), " ").alias("t"))
     wins = toks.select(
         F.explode(
             F.expr(
@@ -1436,10 +1388,7 @@ def build_window_index(corpus: DataFrame, width: int = 8,
     return {"windows": wins, "width": width}
 
 
-def clip_against_index(index: dict, batch: DataFrame,
-                       text_col: str = "text",
-                       id_col: str = "doc_id",
-                       width: int = 8) -> DataFrame:
+def clip_against_index(index: dict, batch: DataFrame, width: int = 8) -> DataFrame:
     """The per-batch half: clip each NEW document against the corpus
     window index — a batch window is duplicate iff the corpus contains
     it (the corpus always wins; batch docs are NOT paired with each
@@ -1461,8 +1410,7 @@ def clip_against_index(index: dict, batch: DataFrame,
             "distinct-window set — rebuild or serve at the build width"
         )
     windows = index["windows"]
-    toks = batch.select(F.col(id_col).alias("doc_id"),
-                        F.split(F.col(text_col), " ").alias("t"))
+    toks = batch.select("doc_id", F.split(F.col("text"), " ").alias("t"))
     wins = toks.select(
         "doc_id",
         F.posexplode(

@@ -67,11 +67,9 @@ def banded_signature_col(vec: Column, planes: list[list[float]], bands: int) -> 
 
 
 def lsh_near_dup_pairs(embeddings: DataFrame, dim: int, k_bits: int = 16,
-                       bands: int = 4, threshold: float = 0.9,
-                       seed: int = 42,
-                       id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Near-duplicate vector pairs above cosine ``threshold`` via banded
-    hyperplane LSH.
+                       bands: int = 4, threshold: float = 0.9) -> DataFrame:
+    """Near-duplicate ``(vec_id, embedding)`` pairs above cosine
+    ``threshold`` via banded hyperplane LSH.
 
     The k-bit signature is split into ``bands`` sub-signatures; vectors
     sharing ANY band bucket become candidates (banding trades precision
@@ -82,7 +80,7 @@ def lsh_near_dup_pairs(embeddings: DataFrame, dim: int, k_bits: int = 16,
     """
     if k_bits % bands != 0:
         raise ValueError(f"k_bits={k_bits} not divisible by bands={bands}")
-    planes = hyperplanes(dim, k_bits, seed)
+    planes = hyperplanes(dim, k_bits)
 
     # Normalize each vector ONCE per row: candidate verification then
     # needs a single dot product per pair instead of dot + two norms —
@@ -95,9 +93,9 @@ def lsh_near_dup_pairs(embeddings: DataFrame, dim: int, k_bits: int = 16,
     # unit_vector keeps it in argument position, immune to the
     # pushdown/collapse re-inlining found in r13 (functions/vectors.py).
     base = embeddings.select(
-        F.col(id_col).alias("id"),
-        unit_vector(F.col(vec_col)).alias("unit"),
-        banded_signature_col(F.col(vec_col), planes, bands).alias("sigs"),
+        F.col("vec_id").alias("id"),
+        unit_vector(F.col("embedding")).alias("unit"),
+        banded_signature_col(F.col("embedding"), planes, bands).alias("sigs"),
     ).localCheckpoint(eager=False)
 
     # Candidate generation carries ONLY ids through the band fan-out and

@@ -25,15 +25,15 @@ DECODED_SCHEMA = (
 )
 
 
-def attach_binary_payload(df: DataFrame, text_col: str = "text",
-                          out_col: str = "payload") -> DataFrame:
-    """Materialize an opaque binary column (stand-in for image/audio bytes).
+def attach_binary_payload(df: DataFrame) -> DataFrame:
+    """Materialize an opaque binary ``payload`` column (stand-in for
+    image/audio bytes).
 
     In production this column arrives from the source parquet; here it is
     synthesized from the text column (UTF-8 bytes) so the binary-column
     code path is exercised end-to-end.
     """
-    return df.withColumn(out_col, F.encode(F.col(text_col), "UTF-8"))
+    return df.withColumn("payload", F.encode(F.col("text"), "UTF-8"))
 
 
 def decode_media_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -71,10 +71,9 @@ def decode_media_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
         )
 
 
-def decode_media(df: DataFrame, id_col: str = "doc_id",
-                 payload_col: str = "payload") -> DataFrame:
+def decode_media(df: DataFrame) -> DataFrame:
     """Run the (stubbed) decoder over the binary column, Arrow-batched."""
-    return df.select(F.col(id_col).alias("doc_id"), F.col(payload_col).alias("payload")).mapInPandas(
+    return df.select("doc_id", "payload").mapInPandas(
         decode_media_batch, schema=DECODED_SCHEMA
     )
 
@@ -82,8 +81,7 @@ def decode_media(df: DataFrame, id_col: str = "doc_id",
 RESIZED_SCHEMA = "doc_id long, width int, height int, scale double"
 
 
-def resize_metadata(df: DataFrame, target_width: int = 224,
-                    id_col: str = "doc_id") -> DataFrame:
+def resize_metadata(df: DataFrame, target_width: int = 224) -> DataFrame:
     """Resize stage over decoded metadata (STUB — no PIL in container).
 
     A real deployment resizes pixel buffers here; the stub recomputes the
@@ -109,8 +107,7 @@ def resize_metadata(df: DataFrame, target_width: int = 224,
 FRAMES_SCHEMA = "doc_id long, frame_idx int, frame_checksum string"
 
 
-def frame_sample(df: DataFrame, every_n: int = 4, id_col: str = "doc_id",
-                 payload_col: str = "payload") -> DataFrame:
+def frame_sample(df: DataFrame, every_n: int = 4) -> DataFrame:
     """Frame-sampling stage for video-like payloads (STUB — no ffmpeg).
 
     Treats the binary payload as a sequence of fixed-size 'frames'
@@ -138,6 +135,6 @@ def frame_sample(df: DataFrame, every_n: int = 4, id_col: str = "doc_id",
                 "frame_checksum": pd.Series(sums, dtype="object"),
             })
 
-    return df.select(F.col(id_col).alias("doc_id"), F.col(payload_col).alias("payload")).mapInPandas(
+    return df.select("doc_id", "payload").mapInPandas(
         sample_batch, schema=FRAMES_SCHEMA
     )

@@ -16,20 +16,18 @@ from pyspark.sql import DataFrame, functions as F
 from .cleaning import NUM_COLS
 
 
-def aggregate_hourly(df: DataFrame, ts_col: str = "DateTime",
-                     num_cols: list[str] | None = None,
-                     out_ts_col: str = "Hour") -> DataFrame:
-    """A3/R3 — truncate to hour and average every measurement.
+def aggregate_hourly(df: DataFrame, num_cols: list[str] | None = None) -> DataFrame:
+    """A3/R3 — truncate ``DateTime`` to ``Hour`` and average every measurement.
 
     Reference reduction.scala:10-24: ``date_trunc("hour", ...)`` +
     one avg per numeric column, ordered by hour.
     """
     num_cols = num_cols or NUM_COLS
     return (
-        df.withColumn(out_ts_col, F.date_trunc("hour", F.col(ts_col)))
-        .groupBy(out_ts_col)
+        df.withColumn("Hour", F.date_trunc("hour", F.col("DateTime")))
+        .groupBy("Hour")
         .agg(*[F.avg(c).alias(f"avg_{c}") for c in num_cols])
-        .orderBy(out_ts_col)
+        .orderBy("Hour")
     )
 
 
@@ -46,16 +44,15 @@ def sample_rows(df: DataFrame, fraction: float = 0.5, seed: int = 42) -> DataFra
     return df.sample(withReplacement=False, fraction=fraction, seed=seed)
 
 
-def stratified_sample(df: DataFrame, strata_col: str, fractions: dict,
-                      seed: int = 42) -> DataFrame:
+def stratified_sample(df: DataFrame, strata_col: str, fractions: dict) -> DataFrame:
     """R1-extension — per-stratum Bernoulli sampling (``sampleBy``).
 
     The scale-correct way to downsample skewed categories independently
     (e.g. keep 1% of 'view' events but 100% of 'purchase'): per-partition
-    filtering with no shuffle, like ``sample``. Seed-deterministic within
-    Spark → rows-only for oracle purposes.
+    filtering with no shuffle, like ``sample``. Seed 42, deterministic
+    within Spark → rows-only for oracle purposes.
     """
-    return df.sampleBy(strata_col, fractions, seed=seed)
+    return df.sampleBy(strata_col, fractions, seed=42)
 
 
 # The reference keeps Hour + 6 of the 7 averaged measurements,
@@ -71,10 +68,10 @@ DEFAULT_KEEP_COLS = [
 ]
 
 
-def select_features(df: DataFrame, keep: list[str] | None = None) -> DataFrame:
+def select_features(df: DataFrame) -> DataFrame:
     """P10/R4 — column-pruning projection (reduction.scala:32-43),
-    keeping :data:`DEFAULT_KEEP_COLS` unless ``keep`` is given."""
-    return df.select(*(keep or DEFAULT_KEEP_COLS))
+    keeping :data:`DEFAULT_KEEP_COLS`."""
+    return df.select(*DEFAULT_KEEP_COLS)
 
 
 def reduce_pipeline(df: DataFrame, sample_fraction: float = 0.5, seed: int = 42) -> DataFrame:

@@ -7,6 +7,10 @@ assignment) so the pairwise work is per-bucket, never all-pairs.
 
 Vector math uses higher-order functions (functions/vectors.py) — JVM-side
 double accumulation, no Arrow boundary on the hot path.
+
+The search operators read the embeddings table's ``vec_id`` and
+``embedding`` columns; the IVF build/serve pair reads ``vec_id`` and the
+pre-cast ``v`` vector.
 """
 
 from __future__ import annotations
@@ -19,9 +23,8 @@ from pyspark.sql import DataFrame, Window, functions as F
 from ..functions.vectors import cosine_similarity, dot_product, l2_norm, unit_vector
 
 
-def _unit_base(embeddings: DataFrame, id_col: str, vec_col: str,
-               bucket_col: str) -> DataFrame:
-    """(id, bucket, unit): vectors pre-normalized ONCE per row so every
+def _unit_base(embeddings: DataFrame, bucket_col: str) -> DataFrame:
+    """(id, bucket, unit) from ``vec_id`` and ``embedding``: vectors pre-normalized ONCE per row so every
     downstream pair comparison is a single dot product instead of
     dot + two norms — HOFs run interpreted with no CSE, and pairs
     outnumber rows quadratically within buckets, so per-pair expression
@@ -34,44 +37,41 @@ def _unit_base(embeddings: DataFrame, id_col: str, vec_col: str,
     their norm is an ANSI divide-by-zero. Oracles apply the same
     WHERE nrm > 0 (plans/similarity_queries._DUCK_UNITS)."""
     return (
-        embeddings.filter(l2_norm(F.col(vec_col)) > 0)
+        embeddings.filter(l2_norm(F.col("embedding")) > 0)
         .select(
-            F.col(id_col).alias("id"),
+            F.col("vec_id").alias("id"),
             F.col(bucket_col).alias("bucket"),
-            unit_vector(F.col(vec_col)).alias("unit"),
+            unit_vector(F.col("embedding")).alias("unit"),
         )
     )
 
 
-def brute_force_topk(embeddings: DataFrame, query_vec_id: int, k: int = 10,
-                     id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def brute_force_topk(embeddings: DataFrame, query_vec_id: int, k: int = 10) -> DataFrame:
     """Exact top-k nearest neighbours of one query vector by cosine.
 
     Broadcast the single query row against the full table (a map-side
     scan: no shuffle except the final k-row TakeOrdered merge). Ties break
     on id for determinism.
     """
-    query = embeddings.filter(F.col(id_col) == query_vec_id).select(
-        F.col(vec_col).alias("__query_vec")
+    query = embeddings.filter(F.col("vec_id") == query_vec_id).select(
+        F.col("embedding").alias("__query_vec")
     )
     scored = (
-        embeddings.filter(F.col(id_col) != query_vec_id)
+        embeddings.filter(F.col("vec_id") != query_vec_id)
         .crossJoin(F.broadcast(query))
         .select(
-            id_col,
-            cosine_similarity(F.col(vec_col), F.col("__query_vec")).alias("cosine_raw"),
+            "vec_id",
+            cosine_similarity(F.col("embedding"), F.col("__query_vec")).alias("cosine_raw"),
         )
     )
     return (
-        scored.orderBy(F.desc("cosine_raw"), F.asc(id_col))
+        scored.orderBy(F.desc("cosine_raw"), F.asc("vec_id"))
         .limit(k)
-        .select(id_col, F.round("cosine_raw", 6).alias("cosine"))
+        .select("vec_id", F.round("cosine_raw", 6).alias("cosine"))
     )
 
 
-def bucketed_nearest_neighbor(embeddings: DataFrame,
-                              id_col: str = "vec_id", vec_col: str = "embedding",
-                              bucket_col: str = "label") -> DataFrame:
+def bucketed_nearest_neighbor(embeddings: DataFrame) -> DataFrame:
     """IVF-style ANN: nearest neighbour within the same coarse bucket.
 
     The self-join keys on the bucket, so candidate pairs are |bucket|²
@@ -79,7 +79,7 @@ def bucketed_nearest_neighbor(embeddings: DataFrame,
     (bucket assignment would come from a trained coarse quantizer; the
     testdata ``label`` plays that role).
     """
-    base = _unit_base(embeddings, id_col, vec_col, bucket_col)
+    base = _unit_base(embeddings, "label")
     a, b = base.alias("a"), base.alias("b")
     pairs = a.join(
         b, (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.id") != F.col("b.id"))
@@ -101,12 +101,11 @@ def bucketed_nearest_neighbor(embeddings: DataFrame,
 
 
 def pairwise_near_dups(embeddings: DataFrame, threshold: float,
-                       id_col: str = "vec_id", vec_col: str = "embedding",
                        bucket_col: str = "label") -> DataFrame:
     """Embedding-cosine near-duplicate pairs above ``threshold``, blocked
     by the coarse bucket (the embedding-space analogue of MinHash-LSH
     candidate verification)."""
-    base = _unit_base(embeddings, id_col, vec_col, bucket_col)
+    base = _unit_base(embeddings, bucket_col)
     a, b = base.alias("a"), base.alias("b")
     return (
         a.join(b, (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.id") < F.col("b.id")))
@@ -121,12 +120,11 @@ def pairwise_near_dups(embeddings: DataFrame, threshold: float,
 
 
 def pairwise_near_dups_sampled(embeddings: DataFrame, threshold: float,
-                               sample_mod: int, seed: int = 7,
-                               id_col: str = "vec_id", vec_col: str = "embedding",
+                               sample_mod: int,
                                bucket_col: str = "label") -> DataFrame:
     """DOULION-style deterministic edge sample of the bucketed near-dup
     graph: exactly the pairs of :func:`pairwise_near_dups` whose
-    ``pmod(xxhash64(id_a, id_b, seed), sample_mod) == 0`` — a 1/p edge
+    ``pmod(xxhash64(id_a, id_b, 7), sample_mod) == 0`` — a 1/p edge
     sample that is a pure FUNCTION of the pair, so it is reproducible
     across runs and engines (Tsourakakis et al., "DOULION: Counting
     Triangles in Massive Graphs with a Coin", KDD'09 — the coin here is
@@ -139,7 +137,7 @@ def pairwise_near_dups_sampled(embeddings: DataFrame, threshold: float,
     through every candidate pair — at 100× the bench SF that is the
     entire cost of the exact entry (~500-byte rows × n^1.5 pairs).
     """
-    base = _unit_base(embeddings, id_col, vec_col, bucket_col)
+    base = _unit_base(embeddings, bucket_col)
     ids = base.select("id", "bucket")
     a, b = ids.alias("a"), ids.alias("b")
     sampled = (
@@ -149,7 +147,7 @@ def pairwise_near_dups_sampled(embeddings: DataFrame, threshold: float,
             & (F.col("a.id") < F.col("b.id"))
             & (
                 F.pmod(
-                    F.xxhash64(F.col("a.id"), F.col("b.id"), F.lit(seed)),
+                    F.xxhash64(F.col("a.id"), F.col("b.id"), F.lit(7)),
                     F.lit(sample_mod),
                 )
                 == 0
@@ -205,8 +203,7 @@ def nearest_centroid_udf(centroids: list[tuple[int, list[float]]]):
     return _assign
 
 
-def brute_force_topk_batch(embeddings: DataFrame, query_ids: list[int], k: int = 3,
-                           id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def brute_force_topk_batch(embeddings: DataFrame, query_ids: list[int], k: int = 3) -> DataFrame:
     """Exact top-k neighbours for a BATCH of query vectors in one pass.
 
     The query rows (tiny: a search request batch) broadcast against the
@@ -215,29 +212,28 @@ def brute_force_topk_batch(embeddings: DataFrame, query_ids: list[int], k: int =
     per-query-partitioned window takes the top k. This is the serving
     shape: N concurrent searches amortize a single corpus scan.
     """
-    queries = embeddings.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
+    queries = embeddings.filter(F.col("vec_id").isin(query_ids)).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qvec")
     )
     scored = (
         embeddings.crossJoin(F.broadcast(queries))
-        .filter(F.col(id_col) != F.col("query_id"))
+        .filter(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
-            id_col,
-            cosine_similarity(F.col(vec_col), F.col("__qvec")).alias("cosine_raw"),
+            "vec_id",
+            cosine_similarity(F.col("embedding"), F.col("__qvec")).alias("cosine_raw"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_raw"), F.asc(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_raw"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", "rank", id_col, F.round("cosine_raw", 6).alias("cosine"))
+        .select("query_id", "rank", "vec_id", F.round("cosine_raw", 6).alias("cosine"))
         .orderBy("query_id", "rank")
     )
 
 
-def brute_force_topk_arrow(embeddings: DataFrame, query_vec_id: int, k: int = 10,
-                           id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def brute_force_topk_arrow(embeddings: DataFrame, query_vec_id: int, k: int = 10) -> DataFrame:
     """Arrow/numpy twin of :func:`brute_force_topk`: cosine scoring as a
     vectorized Pandas UDF — one BLAS matrix-vector product per Arrow
     batch instead of a per-row interpreted HOF fold.
@@ -254,7 +250,7 @@ def brute_force_topk_arrow(embeddings: DataFrame, query_vec_id: int, k: int = 10
     """
     import numpy as np
 
-    qrow = embeddings.filter(F.col(id_col) == query_vec_id).select(vec_col).head()
+    qrow = embeddings.filter(F.col("vec_id") == query_vec_id).select("embedding").head()
     if qrow is None:
         raise ValueError(f"query vector {query_vec_id} not found")
     q = np.asarray(qrow[0], dtype=np.float64)
@@ -267,11 +263,11 @@ def brute_force_topk_arrow(embeddings: DataFrame, query_vec_id: int, k: int = 10
         return pd.Series((m @ qn) / norms)
 
     return (
-        embeddings.filter(F.col(id_col) != query_vec_id)
-        .select(id_col, cos_q(F.col(vec_col)).alias("cosine_raw"))
-        .orderBy(F.desc("cosine_raw"), F.asc(id_col))
+        embeddings.filter(F.col("vec_id") != query_vec_id)
+        .select("vec_id", cos_q(F.col("embedding")).alias("cosine_raw"))
+        .orderBy(F.desc("cosine_raw"), F.asc("vec_id"))
         .limit(k)
-        .select(id_col, F.round("cosine_raw", 6).alias("cosine"))
+        .select("vec_id", F.round("cosine_raw", 6).alias("cosine"))
     )
 
 
@@ -291,31 +287,30 @@ def brute_force_topk_arrow(embeddings: DataFrame, query_vec_id: int, k: int = 10
 # identical relation (certified by sim_index_roundtrip's shared oracle).
 
 
-def assignment_partitions(par: int, n_corpus: int, nlist: int,
-                          rows_per_task: int = 8_000_000) -> int:
+def assignment_partitions(par: int, n_corpus: int, nlist: int) -> int:
     """Partition count for the IVF assignment stage, sized to the
     n×nlist scored intermediate: min(struct) is not hash-aggregable,
     so each task SORTS its slice of the scored stream —
-    ``rows_per_task`` ≈ 8M (id, cid, d2) rows ≈ 200 MB of sort buffer,
+    8M (id, cid, d2) rows per task ≈ 200 MB of sort buffer,
     comfortable under an 8 GiB/32-thread local JVM and a
     4 GiB-executor cluster alike. Never shrinks below the caller's
     compute-spread ``par``."""
-    return max(par, -(-n_corpus * nlist // rows_per_task))
+    return max(par, -(-n_corpus * nlist // 8_000_000))
 
 
 def build_ivf_index(corpus: DataFrame, nlist: int, dim: int, par: int,
-                    id_col: str = "vec_id", vec_col: str = "v",
                     n_corpus: int | None = None) -> dict:
-    """The corpus-only half of IVF ANN serving: ``cent`` (cid, c) —
-    nlist seeded centroids (the nlist smallest corpus ids: deterministic,
-    engine-portable); ``lists`` (id, cid, v, nv) — every corpus vector
+    """The corpus-only half of IVF ANN serving over ``(vec_id, v)``
+    vectors: ``cent`` (cid, c) — nlist seeded centroids (the nlist
+    smallest corpus ids: deterministic, engine-portable); ``lists``
+    (id, cid, v, nv) — every corpus vector
     assigned to its nearest centroid via the map-side min(struct(d2,
     cid)) aggregate (the n×√n scored stream never shuffles), with its
     L2 norm precomputed ONCE so serving pays a single dot per candidate.
 
-    The dict records the build parameters (nlist, dim, id/vec column
-    names) as plain values — persisting callers write them as a JSON
-    manifest beside the parquet, exactly like the dedup index.
+    The dict records the build parameters (nlist, dim) as plain values
+    — persisting callers write them as a JSON manifest beside the
+    parquet, exactly like the dedup index.
 
     Scale: build cost is n×nlist distance terms (unrolled fixed-dim —
     compiled, not interpreted); at 100 TB the build shards per partition
@@ -345,27 +340,26 @@ def build_ivf_index(corpus: DataFrame, nlist: int, dim: int, par: int,
         par = assignment_partitions(par, n_corpus, nlist)
 
     cent = (
-        corpus.orderBy(id_col)
+        corpus.orderBy("vec_id")
         .limit(nlist)
-        .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("c"))
+        .select(F.col("vec_id").alias("cid"), F.col("v").alias("c"))
     )
-    corpus_p = corpus.repartition(par, id_col)
+    corpus_p = corpus.repartition(par, "vec_id")
     assign = (
         corpus_p.crossJoin(F.broadcast(cent))
         .select(
-            id_col, "cid",
-            squared_l2_unrolled(F.col(vec_col), F.col("c"), dim).alias("d2"),
+            "vec_id", "cid",
+            squared_l2_unrolled(F.col("v"), F.col("c"), dim).alias("d2"),
         )
-        .groupBy(id_col)
+        .groupBy("vec_id")
         .agg(F.min(F.struct("d2", "cid")).alias("__m"))
-        .select(id_col, F.col("__m.cid").alias("cid"))
+        .select("vec_id", F.col("__m.cid").alias("cid"))
     )
-    lists = corpus_p.join(assign, id_col).select(
-        F.col(id_col).alias("id"), "cid", F.col(vec_col).alias("v"),
-        l2_norm_unrolled(F.col(vec_col), dim).alias("nv"),
+    lists = corpus_p.join(assign, "vec_id").select(
+        F.col("vec_id").alias("id"), "cid", "v",
+        l2_norm_unrolled(F.col("v"), dim).alias("nv"),
     )
-    return {"cent": cent, "lists": lists, "nlist": nlist, "dim": dim,
-            "id_col": id_col, "vec_col": vec_col}
+    return {"cent": cent, "lists": lists, "nlist": nlist, "dim": dim}
 
 
 def serve_ivf_topk(index: dict, batch: DataFrame, k: int = 3,
@@ -407,14 +401,14 @@ def serve_ivf_topk(index: dict, batch: DataFrame, k: int = 3,
         squared_l2_unrolled,
     )
 
-    dim, id_col, vec_col = index["dim"], index["id_col"], index["vec_col"]
+    dim = index["dim"]
     cent, lists = index["cent"], index["lists"]
     broadcast_batch = n_batch is None or n_batch <= broadcast_threshold
     if par is not None:
         lists = lists.repartition(par, "cid")
     qc = batch.crossJoin(F.broadcast(cent)).select(
-        F.col(id_col).alias("qid"), "cid",
-        squared_l2_unrolled(F.col(vec_col), F.col("c"), dim).alias("d2"),
+        F.col("vec_id").alias("qid"), "cid",
+        squared_l2_unrolled(F.col("v"), F.col("c"), dim).alias("d2"),
     )
     w_probe = Window.partitionBy("qid").orderBy("d2", "cid")
     probe = (
@@ -423,8 +417,8 @@ def serve_ivf_topk(index: dict, batch: DataFrame, k: int = 3,
         .select("qid", "cid")
     )
     bq = batch.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"),
-        l2_norm_unrolled(F.col(vec_col), dim).alias("nq"),
+        F.col("vec_id").alias("qid"), F.col("v").alias("qv"),
+        l2_norm_unrolled(F.col("v"), dim).alias("nq"),
     )
     # JOIN ORDER (r13): attach query vectors to the probe winners
     # (|batch|×nprobe rows) BEFORE joining the lists. The earlier shape
@@ -516,21 +510,21 @@ def refresh_ivf_index(index: dict, delta: DataFrame, par: int) -> dict:
     """
     from ..functions.vectors import l2_norm_unrolled, squared_l2_unrolled
 
-    dim, id_col, vec_col = index["dim"], index["id_col"], index["vec_col"]
+    dim = index["dim"]
     cent = index["cent"]
-    delta_p = delta.repartition(par, id_col)
+    delta_p = delta.repartition(par, "vec_id")
     assign = (
         delta_p.crossJoin(F.broadcast(cent))
         .select(
-            id_col, "cid",
-            squared_l2_unrolled(F.col(vec_col), F.col("c"), dim).alias("d2"),
+            "vec_id", "cid",
+            squared_l2_unrolled(F.col("v"), F.col("c"), dim).alias("d2"),
         )
-        .groupBy(id_col)
+        .groupBy("vec_id")
         .agg(F.min(F.struct("d2", "cid")).alias("__m"))
-        .select(id_col, F.col("__m.cid").alias("cid"))
+        .select("vec_id", F.col("__m.cid").alias("cid"))
     )
-    new_lists = delta_p.join(assign, id_col).select(
-        F.col(id_col).alias("id"), "cid", F.col(vec_col).alias("v"),
-        l2_norm_unrolled(F.col(vec_col), dim).alias("nv"),
+    new_lists = delta_p.join(assign, "vec_id").select(
+        F.col("vec_id").alias("id"), "cid", "v",
+        l2_norm_unrolled(F.col("v"), dim).alias("nv"),
     )
     return {**index, "lists": index["lists"].unionByName(new_lists)}

@@ -15,9 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def salted_join(fact: DataFrame, dim: DataFrame, on: str, salt_buckets: int = 8,
-                how: str = "inner") -> DataFrame:
-    """Join ``fact ⋈ dim`` on column ``on`` with the fact side salted.
+def salted_join(fact: DataFrame, dim: DataFrame, on: str, salt_buckets: int = 8) -> DataFrame:
+    """Inner join ``fact ⋈ dim`` on column ``on`` with the fact side salted.
 
     The dimension side is exploded ×``salt_buckets`` (fine for dimension
     tables; never salt two fact tables this way — pick the smaller side
@@ -31,5 +30,5 @@ def salted_join(fact: DataFrame, dim: DataFrame, on: str, salt_buckets: int = 8,
     replicated_dim = dim.withColumn(
         "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)]))
     )
-    out = salted_fact.join(replicated_dim, on=[on, "__salt"], how=how)
+    out = salted_fact.join(replicated_dim, on=[on, "__salt"])
     return out.drop("__salt")

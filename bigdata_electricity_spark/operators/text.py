@@ -8,7 +8,7 @@ hot path stays inside whole-stage codegen at 100 TB.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
 TOKEN_RE = r"\S+"
 WORD_OR_PUNCT_RE = r"\w+|[^\w\s]"  # BPE-ish pre-tokenizer split
@@ -53,15 +53,16 @@ def punct_ratio(col: Column) -> Column:
     )
 
 
-def quality_score(col: Column, target_tokens: int = 50) -> Column:
-    """Composite quality score in [0,1]: length saturation × diversity.
+def quality_score(col: Column) -> Column:
+    """Composite quality score in [0,1]: length saturation at 50 tokens ×
+    diversity.
 
     Mirrors the shape of published quality heuristics (length,
     repetition); deliberately simple and SQL-expressible so the oracle can
     verify it.
     """
     n_tokens = token_count(col).cast("double")
-    length_component = F.least(n_tokens / F.lit(float(target_tokens)), F.lit(1.0))
+    length_component = F.least(n_tokens / F.lit(50.0), F.lit(1.0))
     return length_component * 0.5 + distinct_token_ratio(col) * 0.5
 
 
@@ -113,22 +114,6 @@ def fingerprint(col: Column) -> Column:
     """Document fingerprint: md5 of the normalized text. Content-addressed
     identity for exact dedup; stable across engines (md5 of UTF-8 bytes)."""
     return F.md5(F.encode(normalize_text(col), "UTF-8"))
-
-
-def text_profile(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Full per-document text profile in one projection."""
-    c = F.col(text_col)
-    return df.select(
-        id_col,
-        F.length(c).alias("n_chars"),
-        token_count(c).alias("n_tokens"),
-        bpe_ish_token_count(c).alias("n_bpe_tokens"),
-        F.round(distinct_token_ratio(c), 6).alias("distinct_ratio"),
-        F.round(punct_ratio(c), 6).alias("punct_ratio"),
-        F.round(quality_score(c), 6).alias("quality"),
-        predict_language(c).alias("predicted_lang"),
-        fingerprint(c).alias("fp"),
-    )
 
 
 # PII redaction — ordered so structured classes win before the generic

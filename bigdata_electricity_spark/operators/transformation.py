@@ -12,11 +12,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 
-def add_time_derived(df: DataFrame, ts_col: str = "Hour") -> DataFrame:
-    """Derive date / hour_of_day from the hourly timestamp (Transformation.scala:12-13)."""
+def add_time_derived(df: DataFrame) -> DataFrame:
+    """Derive date / hour_of_day from the hourly timestamp ``Hour``
+    (Transformation.scala:12-13)."""
     return df.withColumns({
-        "date": F.to_date(F.col(ts_col)),
-        "hour_of_day": F.hour(F.col(ts_col)),
+        "date": F.to_date(F.col("Hour")),
+        "hour_of_day": F.hour(F.col("Hour")),
     })
 
 
@@ -41,25 +42,21 @@ def one_hot_month(ts_or_date: Column) -> dict[str, Column]:
     }
 
 
-def one_hot_encode(df: DataFrame, ts_col: str = "Hour") -> DataFrame:
-    """Apply both manual one-hots in a single projection."""
-    return df.withColumns({**one_hot_dow(F.col(ts_col)), **one_hot_month(F.col(ts_col))})
+def one_hot_encode(df: DataFrame) -> DataFrame:
+    """Apply both manual one-hots of ``Hour`` in a single projection."""
+    return df.withColumns({**one_hot_dow(F.col("Hour")), **one_hot_month(F.col("Hour"))})
 
 
-def add_engineered(df: DataFrame,
-                   components: list[str] | None = None,
-                   out_col: str = "total_sub_metering") -> DataFrame:
-    """P12 — arithmetic projection: sum of sub-meter averages
-    (Transformation.scala:41-48)."""
-    components = components or ["avg_Sub_metering_1", "avg_Sub_metering_2", "avg_Sub_metering_3"]
-    total = F.col(components[0])
-    for c in components[1:]:
-        total = total + F.col(c)
-    return df.withColumn(out_col, total)
+def add_engineered(df: DataFrame) -> DataFrame:
+    """P12 — arithmetic projection: ``total_sub_metering``, the sum of the
+    three sub-meter averages (Transformation.scala:41-48)."""
+    total = (F.col("avg_Sub_metering_1") + F.col("avg_Sub_metering_2")
+             + F.col("avg_Sub_metering_3"))
+    return df.withColumn("total_sub_metering", total)
 
 
-def min_max_scale(df: DataFrame, cols: list[str], suffix: str = "_scaled") -> DataFrame:
-    """M7/P13/A4 — per-column min-max scaling to [0,1].
+def min_max_scale(df: DataFrame, cols: list[str]) -> DataFrame:
+    """M7/P13/A4 — per-column min-max scaling to [0,1], into ``{c}_scaled``.
 
     Reference Transformation.scala:51-68 runs one agg job per column and
     divides by zero when max==min; here: ONE global agg for every column
@@ -76,9 +73,9 @@ def min_max_scale(df: DataFrame, cols: list[str], suffix: str = "_scaled") -> Da
     for c in cols:
         lo, hi = stats[f"min_{c}"], stats[f"max_{c}"]
         if lo is None or hi is None or hi == lo:
-            projections[c + suffix] = F.lit(0.0)
+            projections[f"{c}_scaled"] = F.lit(0.0)
         else:
-            projections[c + suffix] = (F.col(c) - F.lit(lo)) / F.lit(hi - lo)
+            projections[f"{c}_scaled"] = (F.col(c) - F.lit(lo)) / F.lit(hi - lo)
     return df.withColumns(projections)
 
 
@@ -90,13 +87,12 @@ DEFAULT_SCALE_COLS = [
 ]
 
 
-def transform_pipeline(df: DataFrame, ts_col: str = "Hour",
-                       scale_cols: list[str] | None = None) -> DataFrame:
+def transform_pipeline(df: DataFrame) -> DataFrame:
     """Time-derived → one-hot → engineered → min-max scale
     (Transformation.scala:71-89), producing the 33-column analytical table
     (FIXTURES.md A2)."""
-    out = add_time_derived(df, ts_col)
-    out = one_hot_encode(out, ts_col)
+    out = add_time_derived(df)
+    out = one_hot_encode(out)
     out = add_engineered(out)
-    out = min_max_scale(out, scale_cols or DEFAULT_SCALE_COLS)
+    out = min_max_scale(out, DEFAULT_SCALE_COLS)
     return out

@@ -9,8 +9,9 @@ or dirty rows.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..operators.cleaning import detect_cadence_gaps
 from ..sources.loaders import load_table
 from ..functions.rounding import dround, hround
 from .registry import query
@@ -123,20 +124,17 @@ def clean_dedup_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def clean_gap_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1 — lag-based cadence-gap detection (Cleaning.scala:68-79).
 
-    Global-order window (reference semantics). Correct but serial — the
-    scalable variant partitions by a coarse key first
-    (operators.cleaning.detect_cadence_gaps_partitioned); kept global here
-    because gap detection is inherently a total-order property.
+    Global-order window (reference semantics) via
+    :func:`~bigdata_electricity_spark.operators.cleaning.detect_cadence_gaps`.
+    Correct but serial — the scalable variant partitions by a coarse key
+    first (operators.cleaning.detect_cadence_gaps_partitioned); kept
+    global here because gap detection is inherently a total-order
+    property.
     """
     events = load_table(spark, sf_dir, "events")
-    w = Window.orderBy("ts", "event_id")
     return (
-        events.withColumn("prev_ts", F.lag("ts", 1).over(w))
-        .withColumn(
-            "gap_sec",
-            (F.unix_timestamp("ts") - F.unix_timestamp("prev_ts")).cast("long"),
-        )
-        .filter(F.col("prev_ts").isNotNull() & (F.col("gap_sec") > 600))
+        detect_cadence_gaps(events, ts_col="ts", tiebreak_cols=["event_id"])
+        .filter(F.col("gap_sec") > 600)
         .select("event_id", "gap_sec")
         .orderBy("event_id")
     )

@@ -189,15 +189,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str,
-                   tables: tuple[str, ...] = TESTDATA_TABLES) -> dict[str, DataFrame]:
-    """Load tables and register each as a temp view (S5).
+def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """Load every :data:`TESTDATA_TABLES` table and register each as a
+    temp view (S5).
 
     Mirrors the reference's temp-view + spark.sql pattern
     (SQLOperations.scala:25) generalized to the whole star schema.
     """
     out: dict[str, DataFrame] = {}
-    for name in tables:
+    for name in TESTDATA_TABLES:
         df = load_table(spark, sf_dir, name)
         df.createOrReplaceTempView(name)
         out[name] = df
@@ -208,7 +208,7 @@ def register_views(spark: SparkSession, sf_dir: str,
 # Household-power CSV scans (reference-parity sources)
 # ---------------------------------------------------------------------------
 
-def load_household_raw(spark: SparkSession, path: str, sep: str = ";") -> DataFrame:
+def load_household_raw(spark: SparkSession, path: str) -> DataFrame:
     """S1 — raw scan: header, ``;`` separator, every column string.
 
     inferSchema is deliberately false so ``"?"`` sentinel handling and
@@ -217,7 +217,7 @@ def load_household_raw(spark: SparkSession, path: str, sep: str = ";") -> DataFr
     configure(spark)
     return (
         spark.read.option("header", "true")
-        .option("sep", sep)
+        .option("sep", ";")
         .option("inferSchema", "false")
         .csv(path)
     )

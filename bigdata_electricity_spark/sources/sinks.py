@@ -54,7 +54,7 @@ def run_table(base: str) -> str:
     return f"{safe}_pid{os.getpid()}"
 
 
-def save_single_csv(df: DataFrame, out_path: str, header: bool = True) -> str:
+def save_single_csv(df: DataFrame, out_path: str) -> str:
     """S6 — export a (small) DataFrame as exactly one CSV file at ``out_path``.
 
     Mirrors reference Cleaning.scala:155-178 semantics: overwrite, header,
@@ -63,7 +63,7 @@ def save_single_csv(df: DataFrame, out_path: str, header: bool = True) -> str:
     shutil is equivalent and avoids py4j round-trips).
     """
     tmp_dir = out_path + "__tmp"
-    (df.coalesce(1).write.option("header", str(header).lower())
+    (df.coalesce(1).write.option("header", "true")
        .mode("overwrite").csv(tmp_dir))
     part = glob.glob(os.path.join(tmp_dir, "part-*.csv"))
     if not part:  # e.g. compressed part files

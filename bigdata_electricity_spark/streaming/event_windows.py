@@ -138,80 +138,6 @@ def streaming_user_running_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(name).orderBy("user_id")
 
 
-def tws_available() -> bool:
-    """transformWithStateInPandas needs a working google.protobuf for its
-    state-server protocol; this container ships a broken partial install
-    (import of google.protobuf.descriptor fails), so the TWS variant is
-    gated. The applyInPandasWithState twin has no such dependency."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def streaming_user_stats_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same per-user running stats via transformWithStateInPandas —
-    Spark 4's successor stateful API (StatefulProcessor + typed state
-    handle). Kept alongside the applyInPandasWithState variant so both
-    stateful surfaces are exercised; results must match it exactly
-    (asserted in tests, which skip where :func:`tws_available` is False).
-
-    Scale: identical state-store characteristics; the new API adds typed
-    value/list/map state and timers for production state evolution.
-    """
-    if not tws_available():
-        raise NotImplementedError(
-            "transformWithStateInPandas requires google.protobuf, "
-            "not functional in this environment (see tws_available)"
-        )
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class UserStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "agg", "count long, total double, vmax double"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            count, total, vmax = (
-                self._state.get() if self._state.exists() else (0, 0.0, float("-inf"))
-            )
-            for pdf in rows:
-                count += len(pdf)
-                total += float(pdf["value"].sum())
-                vmax = max(vmax, float(pdf["value"].max()))
-            self._state.update((count, total, vmax))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [count],
-                    "total_value": [math.floor(total * 100.0 + 0.5) / 100.0],
-                    "max_value": [math.floor(vmax * 100.0 + 0.5) / 100.0],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    name = f"stream_user_tws_{next(_COUNTER)}"
-    events = _read_events_stream(spark, sf_dir)
-    result = (
-        events.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            UserStats(),
-            outputStructType="user_id long, n_events long, total_value double, max_value double",
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-    _run_to_completion(result, name, mode="update")
-    return spark.table(name).orderBy("user_id")
-
-
 def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user session windows (30-min gap) with a 10-minute watermark.
 
@@ -293,42 +219,6 @@ def streaming_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
-def streaming_foreach_batch_export(spark: SparkSession, sf_dir: str, out_dir: str) -> int:
-    """foreachBatch sink: each micro-batch of a per-type rollup is
-    APPENDED to a parquet directory with its batch id stamped on.
-
-    foreachBatch is the production write path for sinks without native
-    streaming support (JDBC, lakehouse tables): the batch DataFrame is a
-    normal DataFrame inside the callback, so any batch writer works, and
-    the (batch_id, epoch) pair gives exactly-once bookkeeping on
-    replayable sources. Returns the number of micro-batches written.
-    """
-    from pyspark.sql import functions as F
-
-    events = _read_events_stream(spark, sf_dir)
-    agg = events.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum("value"), 2).alias("total_value"),
-    )
-    seen: list[int] = []
-
-    def write_batch(batch_df, batch_id: int) -> None:
-        seen.append(batch_id)
-        (batch_df.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("append").parquet(out_dir))
-
-    query = (
-        agg.writeStream.outputMode("complete")
-        .foreachBatch(write_batch)
-        .start()
-    )
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
-    return len(seen)
-
-
 def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream interval join: views joined to the same user's
     purchases within the following hour, both sides watermarked.
@@ -377,7 +267,7 @@ def streaming_hourly_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     drains — asserted in tests/test_streaming_multimodal.py. Complete
     output mode (same as the other windowed entries here): at 100 TB use
     append mode + watermark-expired finalized windows into a parquet
-    sink (`foreachBatch` pattern in streaming_export_parquet).
+    sink (the `foreachBatch` pattern of `streaming_foreach_batch_upsert`).
     """
     name = f"stream_ohlc_{next(_COUNTER)}"
     events = _read_events_stream(spark, sf_dir)

@@ -19,7 +19,7 @@ def kv(spark):
 
 def test_threshold_filter_and_count(kv):
     out = O.threshold_filter(kv, "v", 3.0)
-    assert O.count_rows(out) == 3
+    assert out.count() == 3
 
 
 def test_totals_by_key(kv):

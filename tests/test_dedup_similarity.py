@@ -34,11 +34,6 @@ def test_exact_dup_groups(dup_docs):
     assert groups[4] == 1
 
 
-def test_dedup_exact_keeps_lowest_id(dup_docs):
-    kept = sorted(r["doc_id"] for r in D.dedup_exact(dup_docs).collect())
-    assert kept == [1, 4, 5, 6]
-
-
 def test_minhash_lsh_finds_near_dup(dup_docs):
     pairs = {(r["id_a"], r["id_b"]) for r in D.minhash_lsh_candidates(dup_docs).collect()}
     assert (1, 2) in pairs         # identical docs always collide

@@ -33,7 +33,6 @@ def _empty_docs(spark):
 def test_dedup_ops_on_empty(spark):
     empty = _empty_docs(spark)
     assert D.exact_dup_groups(empty).count() == 0
-    assert D.dedup_exact(empty).count() == 0
     assert D.minhash_lsh_candidates(empty).count() == 0
     assert D.ngram_jaccard_pairs(empty).count() == 0
 

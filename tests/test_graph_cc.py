@@ -47,7 +47,6 @@ def test_long_chain_converges_within_diameter(spark):
     assert set(got.values()) == {0}
 
 
-@pytest.mark.heavy
 def test_cc_matches_union_find_property(spark):
     """Random graphs: distributed label propagation must equal a
     driver-side union-find (the sequential ground truth)."""
@@ -205,7 +204,7 @@ def test_capped_verify_equals_oneshot_closure_on_corpus(spark):
     cand = minhash_lsh_candidates(
         docs, "text", "doc_id", num_hashes=32, bands=8, shingle_n=1
     )
-    base = _token_base(docs, "text", "doc_id")
+    base = _token_base(docs)
     va = base.select(
         F.col("id").alias("id_a"), F.col("toks").alias("ta"), F.col("__n").alias("na")
     )

@@ -17,7 +17,6 @@ from bigdata_electricity_spark.operators.cleaning import (
     drop_missing,
     outlier_bounds_iqr,
 )
-from bigdata_electricity_spark.operators.dedup import minhash_signature
 from bigdata_electricity_spark.operators.reduction import reduce_pipeline
 from bigdata_electricity_spark.sources.loaders import load_household_typed
 
@@ -83,18 +82,3 @@ def test_load_household_typed_infers_schema(spark, tmp_path):
     # S2 infers ints/doubles (single-column frame: ; is the raw-file sep,
     # the typed loader uses the default comma — mirror reference usage)
     assert df.count() == 2
-
-
-def test_minhash_signature_shape_and_determinism(spark):
-    df = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog"),
-         (2, "the quick brown fox jumps over the lazy dog"),
-         (3, "completely different text with other words entirely")],
-        "doc_id long, text string",
-    )
-    sigs = {r["doc_id"]: r["sig"] for r in df.select(
-        "doc_id", minhash_signature(F.col("text"), num_hashes=8).alias("sig")
-    ).collect()}
-    assert len(sigs[1]) == 8
-    assert sigs[1] == sigs[2]          # identical text -> identical signature
-    assert sigs[1] != sigs[3]          # different text -> different signature

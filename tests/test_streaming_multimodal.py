@@ -57,22 +57,6 @@ def test_streaming_stateful_matches_batch_agg(spark):
             b["n_events"], b["total_value"], b["max_value"]), uid
 
 
-def test_streaming_tws_matches_apply_variant(spark):
-    import pytest
-
-    from bigdata_electricity_spark.streaming.event_windows import (
-        streaming_user_running_stats,
-        streaming_user_stats_tws,
-        tws_available,
-    )
-
-    if not tws_available():
-        pytest.skip("google.protobuf broken in container; TWS gated")
-    a = sorted(map(tuple, streaming_user_stats_tws(spark, SF_DIR).collect()))
-    b = sorted(map(tuple, streaming_user_running_stats(spark, SF_DIR).collect()))
-    assert a == b
-
-
 def test_multimodal_decode_plumbing(spark):
     docs = spark.createDataFrame(
         [(1, "hello world"), (2, "xyz")], ["doc_id", "text"]
@@ -155,29 +139,6 @@ def test_streaming_dedup_collapses_doubled_stream(spark):
     }
     # The 2× unioned stream must dedup back to exactly the batch counts.
     assert got == want
-
-
-def test_foreach_batch_export_matches_batch(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from bigdata_electricity_spark.sources.loaders import load_table
-    from bigdata_electricity_spark.streaming.event_windows import (
-        streaming_foreach_batch_export,
-    )
-
-    out = str(tmp_path / "stream_export")
-    n_batches = streaming_foreach_batch_export(spark, SF_DIR, out)
-    assert n_batches >= 1
-    # The LAST batch (complete mode) must equal the batch aggregate.
-    written = spark.read.parquet(out)
-    last = written.filter(F.col("batch_id") == n_batches - 1).drop("batch_id")
-    batch = (
-        load_table(spark, SF_DIR, "events")
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"),
-             F.round(F.sum("value"), 2).alias("total_value"))
-    )
-    assert {tuple(r) for r in last.collect()} == {tuple(r) for r in batch.collect()}
 
 
 def test_stream_stream_join_matches_batch(spark):

@@ -86,12 +86,3 @@ def test_fingerprint_normalization_invariance(spark):
     fps = [r["fp"] for r in df.select(T.fingerprint(F.col("text")).alias("fp")).collect()]
     assert fps[0] == fps[1]
     assert fps[0] != fps[2]
-
-
-def test_text_profile_schema(docs):
-    out = T.text_profile(docs)
-    assert out.columns == [
-        "doc_id", "n_chars", "n_tokens", "n_bpe_tokens",
-        "distinct_ratio", "punct_ratio", "quality", "predicted_lang", "fp",
-    ]
-    assert out.count() == 6
