@@ -30,10 +30,15 @@ run releases what it had cached before it raises. Spark keys caches by
 plan, so two open results over the same file share them, and closing
 either releases them for both.
 
-The caches are planned with adaptive execution, like the uncached
-plans (a rule of ``session.RUNTIME_CONFS``), so they keep those plans'
-partition layout, and with it the seeded sample and the train/test
-split.
+Partition layout. S1 reads the CSV with a pinned schema and runs no
+job to do it. A CSV that Spark reads as one split (the single-split rule
+of ``sources.loaders``) is declared one partition, so the profile, the
+dedup, the hourly rollup and its sort, and Q1-Q5 plan no shuffle, and
+each cache holds one partition. A larger CSV or a directory of CSVs
+keeps Spark's split plan and its exchanges. The caches are planned with
+adaptive execution, like the uncached plans (a rule of
+``session.RUNTIME_CONFS``), so they keep those plans' partition layout,
+and with it the seeded sample and the train/test split.
 """
 
 from __future__ import annotations

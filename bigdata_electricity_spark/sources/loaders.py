@@ -10,10 +10,14 @@ Every testdata table is read through one catalog (:func:`table_entry`),
 the engine's only reader of part-file listings and parquet footers. The
 first read of a table version infers its schema (one Spark job) and
 reads its footers; every later read pins that schema and runs no job.
-A table Spark reads as one split is declared one partition, so the
-planner adds no exchange above it. Scale notes: parquet scans get
-predicate pushdown + column pruning from Catalyst for free; the loaders
-never cache or collect.
+S1 pins the household columns as strings and checks each file's header
+against them inside the scan, so it runs no job either.
+
+One single-split rule (:func:`_is_single_split`) serves both sources: a
+parquet table or a household CSV that Spark reads as one split is
+declared one partition, so the planner adds no exchange above it.
+Scale notes: parquet scans get predicate pushdown + column pruning from
+Catalyst for free; the loaders never cache or collect.
 """
 
 from __future__ import annotations
@@ -22,9 +26,10 @@ import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..session import configure
+from .household_fixture import COLUMNS
 
 TESTDATA_TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -128,16 +133,17 @@ def table_entry(spark: SparkSession, path: str) -> TableEntry:
     return entry
 
 
-def _is_single_split(spark: SparkSession, entry: TableEntry) -> bool:
-    """Whether Spark reads the table as exactly one split at any core count.
+def _is_single_split(spark: SparkSession, parts: int, nbytes: int) -> bool:
+    """Whether Spark reads ``parts`` files of ``nbytes`` in total as exactly
+    one split at any core count.
 
     Spark splits files at ``min(maxPartitionBytes, max(openCostInBytes,
-    bytes per core))`` bytes, so one part file no larger than
+    bytes per core))`` bytes, so one file no larger than
     ``min(openCostInBytes, maxPartitionBytes)`` is always one split.
     """
     conf = spark._jsparkSession.sessionState().conf()
-    return entry.parts == 1 and entry.bytes <= min(conf.filesOpenCostInBytes(),
-                                                   conf.filesMaxPartitionBytes())
+    return parts == 1 and nbytes <= min(conf.filesOpenCostInBytes(),
+                                        conf.filesMaxPartitionBytes())
 
 
 def parquet_row_count(spark: SparkSession, path: str) -> int:
@@ -181,7 +187,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = f"{sf_dir}/{name}.parquet"
     entry = table_entry(spark, path)
     df = spark.read.schema(entry.schema).parquet(path)
-    if _is_single_split(spark, entry):
+    if _is_single_split(spark, entry.parts, entry.bytes):
         df = df.coalesce(1)
     if name == "events" and entry.dtypes.get("ts") == "bigint":
         entry.assert_ts_is_parquet_nanos()
@@ -209,25 +215,38 @@ def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 # ---------------------------------------------------------------------------
 
 def load_household_raw(spark: SparkSession, path: str) -> DataFrame:
-    """S1 — raw scan: header, ``;`` separator, every column string.
+    """S1 — raw scan: ``;`` separator, every column string (lazy, no job).
 
-    inferSchema is deliberately false so ``"?"`` sentinel handling and
-    cast-failure accounting stay possible (reference Cleaning.scala:22-28).
+    The schema is pinned to the household columns, all strings, so
+    ``"?"`` sentinel handling and cast-failure accounting stay possible
+    (reference Cleaning.scala:22-28) and no job reads the header to name
+    the columns. ``enforceSchema`` is off, so the scan task still checks
+    each file's header against those names, in order: a file whose
+    columns are missing or reordered fails its read instead of loading
+    values under the wrong names. A single local file that Spark reads as
+    one split is declared one partition, the rule :func:`load_table`
+    applies to parquet; a larger file or a directory keeps Spark's split
+    plan.
     """
     configure(spark)
-    return (
-        spark.read.option("header", "true")
+    df = (
+        spark.read.schema(StructType([StructField(c, StringType()) for c in COLUMNS]))
+        .option("header", "true")
+        .option("enforceSchema", "false")
         .option("sep", ";")
-        .option("inferSchema", "false")
         .csv(path)
     )
+    if os.path.isfile(path) and _is_single_split(spark, 1, os.path.getsize(path)):
+        df = df.coalesce(1)
+    return df
 
 
 def load_household_typed(spark: SparkSession, path: str) -> DataFrame:
     """S2 — typed scan with schema inference (reference SQLOperations.scala:12-15).
 
-    Kept for reference parity; production paths should pass an explicit
-    schema or use parquet intermediates (inference costs an extra scan).
+    Kept for reference parity. Inference costs an extra scan, so the
+    engine's own paths read S1, which pins its schema, or parquet
+    intermediates.
     """
     configure(spark)
     return (

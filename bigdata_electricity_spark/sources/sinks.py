@@ -5,10 +5,12 @@ Transformation.scala:92-115, reduction.scala:52-76): coalesce(1) → write
 CSV into a temp dir → rename the part file → delete the temp dir. One
 shared implementation here (SURVEY §4.3.5).
 
-``coalesce(1)`` lives ONLY inside this explicit export operator — never on
-a compute path (it would serialize the whole plan through one task at
-scale). For big outputs use :func:`write_parquet` which keeps
-parallelism and is the engine's interchange format (SURVEY §4.3.4).
+Among the sinks, ``coalesce(1)`` lives ONLY inside this explicit export
+operator (it serializes the whole plan through one task at scale); the
+only other one is the loaders' single-split rule, on inputs Spark
+already reads as one task. For big outputs use :func:`write_parquet`
+which keeps parallelism and is the engine's interchange format (SURVEY
+§4.3.4).
 """
 
 from __future__ import annotations

@@ -120,17 +120,18 @@ def spark():
 
 @pytest.fixture(scope="module")
 def distributed_plans():
-    """Plan every table scan the way large inputs get it.
+    """Plan every source scan the way large inputs get it.
 
-    The table catalog declares a one-split table as one partition, so at
-    sf0.001 the planner drops the exchanges the plan-shape guards check.
-    Turning the single-split rule off makes those modules inspect the
+    The single-split rule declares a parquet table or a household CSV
+    that Spark reads as one split as one partition, so at sf0.001 and at
+    fixture sizes the planner drops the exchanges the plan-shape guards
+    check. Turning the rule off makes those modules inspect the
     distributed plan (every exchange in place) at test-data sizes.
     """
     from bigdata_electricity_spark.sources import loaders
 
     with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(loaders, "_is_single_split", lambda spark, entry: False)
+        mp.setattr(loaders, "_is_single_split", lambda spark, parts, nbytes: False)
         yield
 
 

@@ -25,10 +25,11 @@ from bigdata_electricity_spark.sources.loaders import load_household_raw
 from tests.conftest import COLUMNS, make_household_rows
 
 # Spark jobs that one fixture pipeline and its consumption ran on the
-# 8-core test session once the CSV was parsed once and the cleaned and
+# 8-core test session once the CSV was read with a pinned schema as one
+# partition (no header job, no shuffle), parsed once, and the cleaned and
 # sampled tables were cached; the lazy plans, which re-ran the lineage
 # from the CSV on every action, ran 98.
-JOB_BUDGET = 42
+JOB_BUDGET = 20
 
 
 def _write_csv(path, rows) -> str:
@@ -41,6 +42,10 @@ def _write_csv(path, rows) -> str:
 
 def _persisted(spark) -> int:
     return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+
+def _persisted_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
 
 def _consume(cleaned, sql_results, ml_metrics):
@@ -205,7 +210,7 @@ DEGENERATE_INPUTS = {
 def test_pipeline_degenerate_input(spark, tmp_path, case):
     rows = DEGENERATE_INPUTS[case]()
     src = _write_csv(tmp_path / "power.csv", rows)
-    before = _persisted(spark)
+    before = _persisted_ids(spark)
     with run_reference_pipeline(spark, src, export_csv_path=str(tmp_path / "out.csv")) as res:
         assert res.before_stats.total_rows == len(rows)
         n_clean = res.cleaned.count()
@@ -216,4 +221,6 @@ def test_pipeline_degenerate_input(spark, tmp_path, case):
         assert res.ml_metrics is None  # at most one hourly row: not fitted
         for df in res.sql_results.values():
             df.collect()
-    assert _persisted(spark) == before
+    # No RDD the run persisted is left. Compared by id, not by count: the
+    # context cleaner may meanwhile drop checkpoints earlier tests leaked.
+    assert _persisted_ids(spark) <= before

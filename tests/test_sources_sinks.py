@@ -7,6 +7,9 @@ import os
 import subprocess
 import sys
 
+import pytest
+
+from bigdata_electricity_spark.sources.household_fixture import COLUMNS
 from bigdata_electricity_spark.sources.loaders import (
     TESTDATA_TABLES,
     load_household_raw,
@@ -146,16 +149,26 @@ def test_register_views_sql(spark):
 
 
 def test_household_raw_loader(spark, tmp_path):
-    p = tmp_path / "power.csv"
-    p.write_text(
-        "Date;Time;Global_active_power;Global_reactive_power;Voltage;"
-        "Global_intensity;Sub_metering_1;Sub_metering_2;Sub_metering_3\n"
+    body = (
         "7/3/2007;0:05:00;1.5;0.1;240.0;6.2;0.0;1.0;17.0\n"
         "7/3/2007;0:06:00;?;?;?;?;?;?;?\n"
     )
+    p = tmp_path / "power.csv"
+    p.write_text(";".join(COLUMNS) + "\n" + body)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
     df = load_household_raw(spark, str(p))
-    assert df.count() == 2
+    assert set(tracker.getJobIdsForGroup(None)) == before  # pinned schema: no header job
+    assert df.columns == COLUMNS
     assert all(t == "string" for _, t in df.dtypes)  # S1: no inferSchema
+    assert df.count() == 2
+
+    # The header is still checked against the pinned names, so a file
+    # with reordered columns fails instead of loading shifted values.
+    reordered = tmp_path / "reordered.csv"
+    reordered.write_text(";".join(reversed(COLUMNS)) + "\n" + body)
+    with pytest.raises(Exception, match="CSV header does not conform to the schema"):
+        load_household_raw(spark, str(reordered)).collect()
 
 
 def test_save_single_csv(spark, tmp_path):

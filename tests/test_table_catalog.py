@@ -4,7 +4,8 @@
 sizes and mtimes, ``nanosAsLong``) and reads it with that schema
 afterwards, which runs no Spark job. A table Spark reads as one split is
 declared one partition, so the planner adds no shuffle above it; larger
-tables keep the distributed plan.
+tables keep the distributed plan. The household CSV loader applies the
+same rule to a single CSV file.
 """
 
 from __future__ import annotations
@@ -16,8 +17,15 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from bigdata_electricity_spark.operators.cleaning import clean_pipeline
+from bigdata_electricity_spark.operators.reduction import reduce_pipeline
+from bigdata_electricity_spark.operators.transformation import transform_pipeline
+from bigdata_electricity_spark.pipeline import POWER_SQL
 from bigdata_electricity_spark.plans import REGISTRY
+from bigdata_electricity_spark.sources import loaders
+from bigdata_electricity_spark.sources.household_fixture import stage_household_csv
 from bigdata_electricity_spark.sources.loaders import (
+    load_household_raw,
     load_table,
     parquet_row_count,
     table_entry,
@@ -60,6 +68,31 @@ def test_multi_split_lineitem_keeps_its_exchange(spark):
     lines = plan.splitlines()
     scan = next(i for i, ln in enumerate(lines) if "sf0.1/lineitem.parquet" in ln)
     assert "Coalesce" not in lines[scan - 1]
+
+
+def _household_plans(spark) -> dict[str, str]:
+    """Plans of the fixture CSV's cleaned and sampled tables and of Q1-Q5."""
+    cleaned = clean_pipeline(load_household_raw(spark, stage_household_csv(SF0001)))
+    sampled = reduce_pipeline(cleaned)
+    transform_pipeline(sampled).createOrReplaceTempView("power_data")
+    plans = {"cleaned": _plan(cleaned), "sampled": _plan(sampled)}
+    plans.update({name: _plan(spark.sql(q)) for name, q in POWER_SQL.items()})
+    return plans
+
+
+def test_single_split_household_csv_plans_without_shuffles(spark):
+    plans = _household_plans(spark)
+    assert "Coalesce 1" in plans["cleaned"], plans["cleaned"]
+    for name, plan in plans.items():
+        assert not _SHUFFLE.search(plan), (name, plan)
+
+
+def test_household_dedup_shuffles_without_the_rule(spark, monkeypatch):
+    monkeypatch.setattr(loaders, "_is_single_split", lambda spark, parts, nbytes: False)
+    plan = _household_plans(spark)["cleaned"]
+    # The dedup's keys (DateTime and the measurements) come in set order.
+    assert re.search(r"Exchange hashpartitioning\([^)]*\bDateTime#", plan), plan
+    assert "Coalesce" not in plan, plan
 
 
 def test_warm_load_runs_no_job(spark):
