@@ -19,6 +19,7 @@ import math
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .. import materialise
 from .text import normalize_text
 
 
@@ -495,11 +496,9 @@ def _token_base(df: DataFrame, block_cols: list[str] | None = None,
     don't re-tokenize per consumer. Single-pass consumers (the bounded
     Arrow fast path, an immediate collect) pass ``checkpoint=False``:
     the checkpoint would materialize the ENTIRE tokenized relation to
-    executor storage before the one pass, and — because the plan then
-    scans an ExistingRDD — it also hides the parquet scan from column
-    pruning/pushdown (r14, VERDICT r13 task 6: the checkpointed plan
-    scans an ExistingRDD, the uncheckpointed one a parquet scan whose
-    ReadSchema is just doc_id, text and source)."""
+    executor storage before the one pass, and its plan scans an
+    ExistingRDD where the uncheckpointed one scans parquet with a
+    ReadSchema of just doc_id, text and source."""
     tokens = F.transform(
         F.array_distinct(F.split(normalize_text(F.col("text")), " ")),
         lambda t: F.xxhash64(t),
@@ -509,10 +508,8 @@ def _token_base(df: DataFrame, block_cols: list[str] | None = None,
         *[F.col(c) for c in (block_cols or [])],
         tokens.alias("toks"),
     ).withColumn("__n", F.size("toks"))
-    if checkpoint:
-        # reused: postings + both verify sides
-        out = out.localCheckpoint(eager=False)
-    return out
+    # reused: postings + both verify sides
+    return materialise.checkpoint(out) if checkpoint else out
 
 
 def _df_ranked_postings(base: DataFrame,
@@ -1143,11 +1140,7 @@ def lsh_dedup_clusters(df: DataFrame, threshold: float = 0.6,
     keeps. Output is per-doc (n rows), never per-pair — the whole point
     at scale.
     """
-    from .graph import (
-        _release_checkpoints,
-        _tracked_checkpoint,
-        connected_components,
-    )
+    from .graph import connected_components
 
     if (num_hashes is None) != (bands is None):
         # Deriving the missing half from the law would silently ignore
@@ -1168,29 +1161,27 @@ def lsh_dedup_clusters(df: DataFrame, threshold: float = 0.6,
     # (signature, verify arrays, sizes) touches representatives only.
     all_base = _token_base(df)
     tokless = F.col("__st").isNull() | (F.size("__st") == 0)
-    fpd = all_base.select("id", F.array_sort("toks").alias("__st")).select(
-        "id",
-        F.when(tokless, F.col("id")).otherwise(F.xxhash64("__st")).alias("__f1"),
-        F.when(tokless, -F.col("id")).otherwise(
-            F.xxhash64(F.lit(1), "__st")
-        ).alias("__f2"),
-    ).localCheckpoint(eager=False)
-    # ^ checkpointed (r14): fpd feeds BOTH the group aggregate and the
-    # member expand join; uncheckpointed, each consumer re-evaluates the
-    # array_sort + two xxhash64 fingerprints, and the expand join's
-    # pushed-down IsNotNull(key) filters inline the whole CASE/array_sort
-    # pipeline AGAIN below the projection (2 more interpreted array_sort
-    # evaluations per row — visible in the uncheckpointed physical plan as
-    # the Filter directly above the scan). One n×(id,f1,f2)
-    # materialization ends all of it.
+    fpd = materialise.checkpoint(
+        all_base.select("id", F.array_sort("toks").alias("__st")).select(
+            "id",
+            F.when(tokless, F.col("id")).otherwise(F.xxhash64("__st")).alias("__f1"),
+            F.when(tokless, -F.col("id")).otherwise(
+                F.xxhash64(F.lit(1), "__st")
+            ).alias("__f2"),
+        )
+    )
+    # ^ checkpointed: fpd feeds the group aggregate and the member expand
+    # join; uncheckpointed, each consumer re-evaluates the array_sort and
+    # both fingerprints, and the join's pushed-down IsNotNull filters
+    # inline them once more below the projection.
     # 128-bit fingerprint (two independently-seeded xxhash64 over the
     # SORTED distinct-token-hash array — set-equal docs hash equal
     # regardless of token order); collision would need ~2⁶⁴ groups.
     # Token-LESS docs fingerprint as (id, −id) — each its own
     # representative (r11 ADVICE; see stage 0 above).
-    grp = fpd.groupBy("__f1", "__f2").agg(
-        F.min("id").alias("rep")
-    ).localCheckpoint(eager=False)  # feeds base, the sigs, and the expand
+    grp = materialise.checkpoint(  # feeds base, the sigs, and the expand
+        fpd.groupBy("__f1", "__f2").agg(F.min("id").alias("rep"))
+    )
     member_map = fpd.join(grp, ["__f1", "__f2"]).select("id", "rep")
     base = all_base.join(grp.select(F.col("rep").alias("id")), "id", "left_semi")
     nodes = grp.select(F.col("rep").alias("id"))
@@ -1216,7 +1207,7 @@ def lsh_dedup_clusters(df: DataFrame, threshold: float = 0.6,
     shing = base.filter(F.col("__n") > 0).select(
         "id", F.transform("toks", lambda x: F.xxhash64(x)).alias("__sh")
     )
-    sig, sig_ids = _tracked_checkpoint(
+    sig = materialise.checkpoint(
         shing.select(
             "id",
             F.array(
@@ -1227,9 +1218,7 @@ def lsh_dedup_clusters(df: DataFrame, threshold: float = 0.6,
             ).alias("sig"),
         )
     )
-    banded, banded_ids = _tracked_checkpoint(
-        banded_postings(sig, num_hashes, bands)
-    )
+    banded = materialise.checkpoint(banded_postings(sig, num_hashes, bands))
 
     # Stage 2 — full-signature candidate pairs. Signature-identical
     # docs are near-certain duplicates, but the per-pair false-match
@@ -1285,7 +1274,7 @@ def lsh_dedup_clusters(df: DataFrame, threshold: float = 0.6,
         .filter(jaccard >= F.lit(threshold))
         .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     )
-    comp, comp_ids = _tracked_checkpoint(connected_components(nodes, edges1))
+    comp = materialise.checkpoint(connected_components(nodes, edges1))
 
     # Stage 4 — exhaustive cross-component verify. The bucket self-join
     # runs INTS-ONLY (id, band, bucket, component, token count): the
@@ -1333,7 +1322,7 @@ def lsh_dedup_clusters(df: DataFrame, threshold: float = 0.6,
     # Component-level contraction: CC runs over current components.
     cnodes = comp.select(F.col("component").alias("id")).distinct()
     mapping = connected_components(cnodes, merges)
-    final_comp, final_ids = _tracked_checkpoint(
+    final_comp = materialise.checkpoint(
         comp.join(
             mapping.select(
                 F.col("id").alias("component"), F.col("component").alias("__new")
@@ -1342,7 +1331,7 @@ def lsh_dedup_clusters(df: DataFrame, threshold: float = 0.6,
         ).select("id", F.col("__new").alias("component"))
     )
     final_comp.count()  # materialize before releasing the parents
-    _release_checkpoints(final_comp, comp_ids | banded_ids | sig_ids)
+    materialise.release(comp, banded, sig)
 
     # Expand representatives back to members (ids-only join). The
     # component label is the min doc id over the component's REPS,

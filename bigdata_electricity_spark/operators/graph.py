@@ -30,9 +30,9 @@ Scale notes (100 TB tier):
   skew is bounded: large-star emits edges keyed by the LARGER endpoint,
   so a massive near-clique contracts toward its min without funneling
   every edge through one reducer key first;
-- lineage is truncated every half-phase via localCheckpoint, otherwise
-  the iterated plan grows and re-executes from the scan (on a cluster,
-  prefer a reliable checkpoint dir);
+- lineage is truncated every half-phase via ``materialise.checkpoint``,
+  otherwise the iterated plan grows and re-executes from the scan (on a
+  cluster, prefer a reliable checkpoint dir);
 - convergence is one (count, bit_xor-of-hash) fingerprint action per
   iteration over the current edge set — order-independent and
   overflow-free under ANSI mode (a 64-bit hash-sum would overflow).
@@ -40,60 +40,14 @@ Scale notes (100 TB tier):
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
 
-# Checkpoint storage for the iterated edge sets: SERIALIZED + spillable.
-# The default deserialized level unrolls whole partitions as UnsafeRow
-# copies on-heap; with 32 concurrent tasks on a 100M-edge graph the
-# unroll blows the heap before the spill check fires (measured: 8g
-# driver OOM inside MemoryStore.putIteratorAsValues, r9 sf3f sweep).
-# Serialized blocks unroll incrementally into compact byte buffers and
-# overflow to disk cleanly; the ser/deser cost is noise next to the
-# per-iteration shuffles.
-_CKPT_LEVEL = StorageLevel.MEMORY_AND_DISK  # serialized (deserialized=False); _DESER is the default
-
-
-def _tracked_checkpoint(df: DataFrame) -> tuple[DataFrame, set[int]]:
-    """``localCheckpoint`` plus the ids of the checkpoint RDDs it
-    registered, so the caller can ACTUALLY free the blocks later.
-
-    ``DataFrame.unpersist()`` on a localCheckpoint-ed frame is a no-op
-    (verified on PySpark 4.1.2, r9 ADVICE): the persisted RDD is the
-    internal checkpoint RDD, which stays in ``getPersistentRDDs`` after
-    the DataFrame-level call, so "eager release" through the Dataset API
-    never happens — blocks survive until ContextCleaner GC. The
-    checkpoint RDD is registered AT CALL TIME even for lazy checkpoints
-    (``RDD.localCheckpoint`` persists immediately), so a before/after
-    snapshot of the persistent-RDD registry captures exactly the new
-    ids.
-    """
-    sc = df.sparkSession.sparkContext
-    before = set(sc._jsc.getPersistentRDDs().keys())
-    out = df.localCheckpoint(eager=False, storageLevel=_CKPT_LEVEL)
-    new = set(sc._jsc.getPersistentRDDs().keys()) - before
-    return out, new
-
-
-def _release_checkpoints(df: DataFrame, rdd_ids: set[int]) -> None:
-    """Free a dead checkpoint's blocks via the underlying persisted RDDs.
-
-    Only call once every downstream consumer has materialized its OWN
-    checkpoint: a locally-checkpointed frame cannot be recomputed after
-    its blocks are dropped (lineage is truncated by design).
-    """
-    jmap = df.sparkSession.sparkContext._jsc.getPersistentRDDs()
-    for rid in rdd_ids:
-        jrdd = jmap.get(rid)
-        if jrdd is not None:
-            jrdd.unpersist(True)
+from ..materialise import checkpoint, release
 
 
 def _star_labels(edges: DataFrame, max_iter: int) -> DataFrame:
     """Contract ``edges`` (columns u, v) to (id, component) star roots."""
-    E, E_ids = _tracked_checkpoint(
-        edges.filter(F.col("u") != F.col("v")).distinct()
-    )
+    E = checkpoint(edges.filter(F.col("u") != F.col("v")).distinct())
     for _ in range(max_iter):
         # large-star: around every node u, connect each strictly-larger
         # neighbor v to m = min(Γ(u) ∪ {u}). Keyed by u over BOTH edge
@@ -102,7 +56,7 @@ def _star_labels(edges: DataFrame, max_iter: int) -> DataFrame:
             E.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
         mins = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-        large, large_ids = _tracked_checkpoint(
+        large = checkpoint(
             sym.join(mins, "u")
             .filter(F.col("v") > F.col("u"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
@@ -115,7 +69,7 @@ def _star_labels(edges: DataFrame, max_iter: int) -> DataFrame:
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
         )
         mins2 = oriented.groupBy("u").agg(F.min("v").alias("m"))
-        small, small_ids = _tracked_checkpoint(
+        small = checkpoint(
             oriented.join(mins2, "u")
             .filter(F.col("v") != F.col("m"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
@@ -170,20 +124,11 @@ def _star_labels(edges: DataFrame, max_iter: int) -> DataFrame:
             (fp_row["sc"], fp_row["sh"]) == (fp_row["lc"], fp_row["lh"])
             and fp_row["d2"] == 0
         )
-        # The fingerprint action has materialized `small`'s checkpoint,
-        # so the PREVIOUS iteration's edge set and this iteration's
-        # intermediate `large` are dead blocks from here on. Release
-        # them eagerly THROUGH THE CHECKPOINT RDDS (r10 — the former
-        # DataFrame.unpersist calls were silently no-ops; until then the
-        # serialized+spillable storage level was doing all the work):
-        # without the release the loop retains every iteration's full
-        # edge set in the storage pool, and a 40M-edge near-dup graph
-        # keeps k dead copies spilled across the local dirs (r9 sf1f
-        # sweep — dedup_lsh_clusters OOMed an 8g driver before the
-        # level fix). Same logic on a cluster: k retained copies of a
-        # 100 TB-tier edge set is k× wasted executor storage.
-        _release_checkpoints(small, large_ids | E_ids)
-        E, E_ids = small, small_ids
+        # The fingerprint action has materialized `small`, so the previous
+        # edge set and this iteration's `large` are dead: free them now
+        # (``materialise`` explains why through the checkpoint RDDs).
+        release(large, E)
+        E = small
         if converged:
             break
     return E.select(F.col("u").alias("id"), F.col("v").alias("component"))

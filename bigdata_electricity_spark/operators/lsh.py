@@ -21,6 +21,7 @@ import random
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.vectors import cosine_similarity, dot_product, l2_norm, unit_vector
+from ..materialise import checkpoint
 
 
 def hyperplanes(dim: int, k: int = 16, seed: int = 42) -> list[list[float]]:
@@ -92,11 +93,11 @@ def lsh_near_dup_pairs(embeddings: DataFrame, dim: int, k_bits: int = 16,
     # HOF-CSE trap; measured 15.6s, WORSE than no normalization) —
     # unit_vector keeps it in argument position, immune to the
     # pushdown/collapse re-inlining found in r13 (functions/vectors.py).
-    base = embeddings.select(
+    base = checkpoint(embeddings.select(
         F.col("vec_id").alias("id"),
         unit_vector(F.col("embedding")).alias("unit"),
         banded_signature_col(F.col("embedding"), planes, bands).alias("sigs"),
-    ).localCheckpoint(eager=False)
+    ))
 
     # Candidate generation carries ONLY ids through the band fan-out and
     # self-join; unit vectors re-attach AFTER the pair set is deduped.

@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..materialise import checkpoint
+
 
 def running_offsets_scalable(sized: DataFrame, id_col: str = "doc_id",
                              size_col: str = "n_tokens",
@@ -38,20 +40,16 @@ def running_offsets_scalable(sized: DataFrame, id_col: str = "doc_id",
     # and the returned plan would otherwise re-sample independently and
     # could place boundary rows in different __pid partitions once the
     # input is large enough for partial sampling — silently misaligning
-    # every base offset. The lazy localCheckpoint makes both jobs read
-    # the SAME materialized partitioning.
+    # every base offset. The lazy checkpoint makes both jobs read the
+    # SAME materialized partitioning.
     #
-    # Tradeoff: localCheckpoint materializes the full dataset on
-    # executor block storage and TRUNCATES lineage — an executor lost
-    # after materialization cannot recompute its blocks, failing the
-    # job, and the materialization itself is memory/disk pressure at
-    # the 100 TB tier. A production cluster run should either point
-    # spark.checkpoint.dir at reliable storage and use .checkpoint()
-    # (recoverable, costs an HDFS/S3 write of the sized table — small:
-    # (id, size) pairs only), or precompute deterministic range
-    # boundaries (exact per-key quantiles) so both jobs partition by
-    # the same explicit ranges with no materialization at all.
-    parts = parts.localCheckpoint(eager=False)
+    # Tradeoff: an executor lost after materialization cannot recompute
+    # the checkpoint's blocks (see ``materialise``), failing the job. A
+    # production cluster run should either use a reliable checkpoint
+    # dir (a small write: (id, size) pairs only), or precompute exact
+    # per-key range boundaries so both jobs partition by the same
+    # explicit ranges with no materialization at all.
+    parts = checkpoint(parts)
 
     # One row per partition: (pid, subtotal). Collected to the driver —
     # this is the only driver-side data and it is O(#partitions).
@@ -104,7 +102,7 @@ def exclusive_prefix_sums(df: DataFrame, order_col: str,
     )
     # Pin the range-partition assignment before the first action — same
     # per-execution-seed hazard as running_offsets_scalable above.
-    parts = parts.localCheckpoint(eager=False)
+    parts = checkpoint(parts)
     subtot_rows = (
         parts.groupBy("__pid")
         .agg(*[F.sum(c).alias(c) for c in size_cols])

@@ -22,13 +22,11 @@ pipeline caches exactly three tables, each read by several actions:
   projection over it, so the min/max stats, the export, Q1-Q5 and the
   regression all read one seeded sample, drawn once per pipeline.
 
-Release rule: the :class:`PipelineResult` owns the last two caches and
-unpersists them on ``close()`` or on leaving its ``with`` block, or when
-an unclosed result is garbage-collected. After that every artifact is
-still usable; it is recomputed from the CSV on each action. A failed
-run releases what it had cached before it raises. Spark keys caches by
-plan, so two open results over the same file share them, and closing
-either releases them for both.
+Release: the :class:`PipelineResult` owns the last two caches, by the
+rule of ``materialise``. Released, every artifact is still usable and
+recomputed from the CSV on each action. Spark keys caches by plan, so
+two open results over the same file share them, and closing either
+releases them for both.
 
 Partition layout. S1 reads the CSV with a pinned schema and runs no
 job to do it. A CSV that Spark reads as one split (the single-split rule
@@ -48,6 +46,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .materialise import Owner, cache, release
 from .ml.regression import run_regression_pipeline
 from .operators.cleaning import (
     BeforeStats,
@@ -60,18 +59,6 @@ from .operators.reduction import reduce_pipeline
 from .operators.transformation import transform_pipeline
 from .sources.loaders import load_household_raw
 from .sources.sinks import save_single_csv
-
-
-def _cache(df: DataFrame, cached: list[DataFrame]) -> DataFrame:
-    """Cache ``df`` and record it in ``cached``."""
-    df = df.cache()
-    cached.append(df)
-    return df
-
-
-def _unpersist(frames: list[DataFrame]) -> None:
-    for df in frames:
-        df.unpersist()
 
 
 @dataclass
@@ -89,19 +76,20 @@ class PipelineResult:
     cleaned: DataFrame
     transformed: DataFrame
     outlier_report: dict[str, int]
+    owner: Owner = field(repr=False)
     sql_results: dict[str, DataFrame] = field(default_factory=dict)
     ml_metrics: DataFrame | None = None
     export_path: str | None = None
-    cached: list[DataFrame] = field(default_factory=list, repr=False)
 
     def __post_init__(self) -> None:
-        # The finalizer holds the cache list, never the result itself. At
+        # The finalizer holds the owner, never the result itself. It may
+        # release the owner's frames because they are caches only. At
         # interpreter exit the session may be gone, and its caches with it.
-        self._release = weakref.finalize(self, _unpersist, self.cached)
+        self._release = weakref.finalize(self, self.owner.close)
         self._release.atexit = False
 
     def close(self) -> None:
-        """Unpersist what the pipeline cached (idempotent)."""
+        """Release what the pipeline cached (idempotent)."""
         self._release()
 
     def __enter__(self) -> PipelineResult:
@@ -179,20 +167,19 @@ def run_reference_pipeline(spark: SparkSession, raw_csv_path: str,
 
     The result holds caches (see the module docstring); release them with
     ``with run_reference_pipeline(...) as result:`` or ``result.close()``.
+    A failed run releases them before it raises.
     """
-    cached: list[DataFrame] = []
+    owner = Owner()
     try:
-        prepped = _cache(prepare_raw(load_household_raw(spark, raw_csv_path)), cached)
+        prepped = cache(prepare_raw(load_household_raw(spark, raw_csv_path)))
         before = compute_before_stats(prepped)
 
-        cleaned = _cache(clean_prepared(prepped), cached)
+        cleaned = cache(clean_prepared(prepped))
         outliers = outlier_report_iqr(cleaned).first().asDict()
         # cleaned is materialised now, so its cache no longer reads prepped's.
-        cached.remove(prepped)
-        prepped.unpersist()
+        release(prepped)
 
-        sampled = _cache(reduce_pipeline(cleaned, sample_fraction=sample_fraction, seed=seed),
-                         cached)
+        sampled = cache(reduce_pipeline(cleaned, sample_fraction=sample_fraction, seed=seed))
         transformed = transform_pipeline(sampled)
 
         export_path = None
@@ -206,15 +193,16 @@ def run_reference_pipeline(spark: SparkSession, raw_csv_path: str,
             transformed, label_col=ML_LABEL, feature_cols=ML_FEATURES, seed=seed
         )
     except BaseException:
-        _unpersist(cached)
+        owner.close()
         raise
+    owner.stop()
     return PipelineResult(
         before_stats=before,
         cleaned=cleaned,
         transformed=transformed,
         outlier_report=outliers,
+        owner=owner,
         sql_results=sql_results,
         ml_metrics=ml_metrics,
         export_path=export_path,
-        cached=cached,
     )

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.rounding import dround, hround
+from ..materialise import checkpoint
 from ..sources.loaders import load_table
 from .registry import REGISTRY, query
 
@@ -763,9 +764,7 @@ def vocab_bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("word", "freq", merged_sym.alias("sym"))
         )
-    enc = sym_tab.select("word", "freq", F.split("sym", " ").alias("toks")).localCheckpoint(
-        eager=False
-    )
+    enc = checkpoint(sym_tab.select("word", "freq", F.split("sym", " ").alias("toks")))
     totals = enc.agg(
         F.sum(F.col("freq") * F.length("word")).cast("long").alias("total_chars"),
         F.sum(F.col("freq") * F.size("toks")).cast("long").alias("total_tokens"),
@@ -856,7 +855,7 @@ def corpus_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("k") <= F.col("nd"))
         .select("k")
     )
-    stats = (
+    stats = checkpoint(
         toks.crossJoin(F.broadcast(cps))
         .groupBy("k")
         .agg(
@@ -869,7 +868,6 @@ def corpus_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("vocab"),
         )
-        .localCheckpoint(eager=False)
     )
     pts = stats.select(
         F.log(F.col("n_tokens").cast("double")).alias("lx"),

@@ -758,6 +758,7 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import shutil
 
+    from ..materialise import Owner
     from ..operators.dedup import incremental_jaccard_flags
     from ..sources.sinks import run_dir
 
@@ -773,19 +774,22 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def flag_batch(batch_df, batch_id: int) -> None:
-        flags = incremental_jaccard_flags(
-            corpus, batch_df, block_cols=["source"], threshold=0.6
-        )
-        (
-            flags.select(
-                F.col("id").alias("doc_id"),
-                "n_matches",
-                hround("best_jaccard", 4).alias("best_jaccard"),
-                "is_dup",
+        # Runs on a Py4J thread: the batch owns what it materialises, all
+        # dead once its write returns.
+        with Owner():
+            flags = incremental_jaccard_flags(
+                corpus, batch_df, block_cols=["source"], threshold=0.6
             )
-            .write.mode("append")
-            .parquet(out)
-        )
+            (
+                flags.select(
+                    F.col("id").alias("doc_id"),
+                    "n_matches",
+                    hround("best_jaccard", 4).alias("best_jaccard"),
+                    "is_dup",
+                )
+                .write.mode("append")
+                .parquet(out)
+            )
 
     query_handle = (
         stream.writeStream.outputMode("append").foreachBatch(flag_batch).start()

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.rounding import dround, hround
+from ..materialise import checkpoint
 from ..sources.loaders import load_table
 from .registry import query
 
@@ -472,14 +473,13 @@ def embedding_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = cent.select("vec_id", F.col("j").alias("cj"), F.col("xc").alias("xa"))
     b = cent.select("vec_id", F.col("j").alias("ck"), F.col("xc").alias("xb"))
-    cov = (
+    # Referenced by every iteration + the Rayleigh quotient; without
+    # lineage truncation the 20M-row covariance join re-executes per
+    # reference (Catalyst does not CSE whole subplans across joins).
+    cov = checkpoint(
         a.join(b, "vec_id")
         .groupBy(F.col("cj").alias("j"), F.col("ck").alias("k"))
         .agg(hround(F.sum(F.col("xa") * F.col("xb")) / F.lit(float(n - 1)), 9).alias("c"))
-        # referenced by every iteration + the Rayleigh quotient; without
-        # lineage truncation the 20M-row covariance join re-executes per
-        # reference (Catalyst does not CSE whole subplans across joins)
-        .localCheckpoint(eager=False)
     )
     v = mu.select("j", F.lit(0.125).alias("v"))
     for _ in range(3):
@@ -577,14 +577,13 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
     b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
-    edges = (
+    edges = checkpoint(
         a.join(b, "ok")
         .filter(F.col("u") < F.col("v"))
         .groupBy("u", "v")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .filter(F.col("cnt") >= 2)
         .select("u", "v")
-        .localCheckpoint(eager=False)
     )
     stats: list[DataFrame] = []
     for r in range(1, KCORE_ROUNDS + 1):
@@ -594,10 +593,9 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("deg"))
         )
         bad = deg.filter(F.col("deg") < KCORE_K).select("node")
-        edges = (
+        edges = checkpoint(
             edges.join(F.broadcast(bad), edges.u == bad.node, "left_anti")
             .join(F.broadcast(bad), F.col("v") == bad.node, "left_anti")
-            .localCheckpoint(eager=False)
         )
         n_removed = bad.agg(F.count(F.lit(1)).alias("n_removed"))
         n_nodes = (
@@ -934,12 +932,12 @@ def ml_gd_linreg_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         hround(F.stddev_samp("fy"), 9).alias("sy"),
         F.count(F.lit(1)).cast("double").alias("n"),
     )
-    d = feats.crossJoin(F.broadcast(stats)).select(
+    d = checkpoint(feats.crossJoin(F.broadcast(stats)).select(
         ((F.col("f1") - F.col("m1")) / F.col("s1")).alias("x1"),
         ((F.col("f2") - F.col("m2")) / F.col("s2")).alias("x2"),
         ((F.col("fy") - F.col("my")) / F.col("sy")).alias("y"),
         "n",
-    ).localCheckpoint(eager=False)  # referenced 2x per GD round
+    ))  # referenced 2x per GD round
     p = stats.select(
         F.lit(0.0).alias("w1"), F.lit(0.0).alias("w2"), F.lit(0.0).alias("b")
     )
@@ -1394,7 +1392,7 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", F.lag("event_type").over(w).alias("prev_type")
     ).filter(F.col("prev_type").isNotNull())
     wp = Window.partitionBy("prev_type")
-    pmat = (
+    pmat = checkpoint(  # corpus-scan lag referenced per round
         seq.groupBy("prev_type", F.col("event_type").alias("next_type"))
         .agg(F.count(F.lit(1)).alias("n"))
         .select(
@@ -1402,7 +1400,6 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
             "next_type",
             hround(F.col("n").cast("double") / F.sum("n").over(wp), 9).alias("p"),
         )
-        .localCheckpoint(eager=False)  # corpus-scan lag referenced per round
     )
     states = pmat.select(F.col("prev_type").alias("st")).distinct()
     n_states = states.agg(F.count(F.lit(1)).alias("ns"))
@@ -1569,24 +1566,22 @@ def events_haar_multiscale(spark: SparkSession, sf_dir: str) -> DataFrame:
     spine = bounds.select(
         F.explode(F.sequence(F.col("t0"), F.col("t1"))).alias("th"), "t0"
     )
-    s = (
+    s = checkpoint(
         spine.join(hours, "th", "left")
         .select(
             (F.col("th") - F.col("t0")).alias("t"),
             F.coalesce("xv", F.lit(0.0)).alias("x"),
         )
-        .localCheckpoint(eager=False)
     )
     out_rows: list[DataFrame] = []
     for k in range(1, HAAR_LEVELS + 1):
         signed = F.when(F.col("t") % 2 == 0, F.col("x")).otherwise(-F.col("x"))
-        s = (
+        s = checkpoint(
             s.groupBy((F.col("t") / 2).cast("long").alias("t"))
             .agg(
                 hround(F.sum("x") / F.lit(2.0), 9).alias("a"),
                 hround(F.sum(signed) / F.lit(2.0), 9).alias("d"),
             )
-            .localCheckpoint(eager=False)
         )
         stats = s.agg(
             F.count(F.lit(1)).alias("n_coeffs"),
@@ -1665,7 +1660,7 @@ def funnel_absorbing_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", F.lag("event_type").over(w).alias("prev_type")
     ).filter(F.col("prev_type").isNotNull())
     wp = Window.partitionBy("prev_type")
-    pmat = (
+    pmat = checkpoint(
         seq.groupBy("prev_type", F.col("event_type").alias("next_type"))
         .agg(F.count(F.lit(1)).alias("n"))
         .select(
@@ -1674,7 +1669,6 @@ def funnel_absorbing_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
             hround(F.col("n").cast("double") / F.sum("n").over(wp), 9).alias("p"),
         )
         .filter(F.col("prev_type") != "purchase")
-        .localCheckpoint(eager=False)
     )
     direct = pmat.groupBy(F.col("prev_type").alias("st")).agg(
         F.sum(F.when(F.col("next_type") == "purchase", F.col("p"))).alias("pd")
@@ -1777,9 +1771,9 @@ def forecast_snaive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate-sized.
     """
     events = load_table(spark, sf_dir, "events")
-    hourly = events.groupBy(
+    hourly = checkpoint(events.groupBy(
         F.floor(F.unix_timestamp("ts") / F.lit(3600.0)).cast("long").alias("th")
-    ).agg(hround(F.sum("value"), 6).alias("xv")).localCheckpoint(eager=False)
+    ).agg(hround(F.sum("value"), 6).alias("xv")))
     cutoff = hourly.agg((F.max("th") - 168).alias("c"))
     train_mean = (
         hourly.crossJoin(F.broadcast(cutoff))
@@ -1946,15 +1940,14 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("cnt") >= 2)
         .select("u", "v")
     )
-    adj = (
+    adj = checkpoint(
         e.select(F.col("u").alias("node"), F.col("v").alias("nbr"))
         .unionByName(e.select(F.col("v").alias("node"), F.col("u").alias("nbr")))
-        .localCheckpoint(eager=False)
     )
     labels = adj.select("node").distinct().select("node", F.col("node").alias("lbl"))
     out_rows: list[DataFrame] = []
     for r in range(1, LP_ROUNDS + 1):
-        labels = (
+        labels = checkpoint(
             adj.join(labels.withColumnRenamed("node", "nbr"), "nbr")
             .groupBy("node", "lbl")
             .agg(F.count(F.lit(1)).alias("cnt"))
@@ -1966,7 +1959,6 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .filter(F.col("rn") == 1)
             .select("node", "lbl")
-            .localCheckpoint(eager=False)
         )
         comm = labels.groupBy("lbl").agg(F.count(F.lit(1)).alias("n"))
         stats = comm.agg(
@@ -2036,9 +2028,9 @@ def stats_spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum-of-products formula shared verbatim by the engines.
     """
     docs = load_table(spark, sf_dir, "documents")
-    feats = docs.select(
+    feats = checkpoint(docs.select(
         F.size(F.split("text", " ")).alias("x"), F.col("n_chars").alias("y")
-    ).localCheckpoint(eager=False)
+    ))
 
     def midranks(col: str):
         counts = feats.groupBy(col).agg(F.count(F.lit(1)).alias("cnt"))
@@ -2546,12 +2538,11 @@ def forecast_croston_intermittent(spark: SparkSession, sf_dir: str) -> DataFrame
     POINT, not per day).
     """
     li = load_table(spark, sf_dir, "lineitem")
-    dd = (
+    dd = checkpoint(  # feeds both smoothers
         li.groupBy(
             F.col("l_partkey"), F.to_date("l_shipdate").alias("d")
         )
         .agg(F.sum("l_quantity").cast("double").alias("q"))
-        .localCheckpoint(eager=False)  # feeds both smoothers
     )
     wasc = Window.partitionBy("l_partkey").orderBy("d")
     wdesc = Window.partitionBy("l_partkey").orderBy(F.desc("d"))

@@ -28,6 +28,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.rounding import dround, hround
+from ..materialise import checkpoint
 from ..sources.loaders import load_table
 from .registry import query
 
@@ -98,19 +99,18 @@ def ml_als_rank1_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
-    ratings = (
+    ratings = checkpoint(  # referenced 3x per round
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .groupBy(
             F.col("o_custkey").alias("u"), F.col("l_partkey").alias("i")
         )
         .agg(F.sum("l_quantity").cast("double").alias("r"))
-        .localCheckpoint(eager=False)  # referenced 3x per round
     )
     lam = F.lit(ALS_REG)
     v = ratings.select("i").distinct().select("i", F.lit(1.0).alias("vf"))
     out_rows: list[DataFrame] = []
     for r in range(1, ALS_ROUNDS + 1):
-        u = (
+        u = checkpoint(  # used by v-step, rmse, u_ss
             ratings.join(v, "i")
             .groupBy("u")
             .agg(
@@ -120,9 +120,8 @@ def ml_als_rank1_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
                     9,
                 ).alias("uf")
             )
-            .localCheckpoint(eager=False)  # used by v-step, rmse, u_ss
         )
-        v = (
+        v = checkpoint(
             ratings.join(u, "u")
             .groupBy("i")
             .agg(
@@ -132,7 +131,6 @@ def ml_als_rank1_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
                     9,
                 ).alias("vf")
             )
-            .localCheckpoint(eager=False)
         )
         rmse = (
             ratings.join(u, "u")
@@ -258,13 +256,12 @@ def ml_als_rank2_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
-    ratings = (
+    ratings = checkpoint(  # referenced 3× per round
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .groupBy(
             F.col("o_custkey").alias("u"), F.col("l_partkey").alias("i")
         )
         .agg(F.sum("l_quantity").cast("double").alias("r"))
-        .localCheckpoint(eager=False)  # referenced 3× per round
     )
     lam = F.lit(ALS_REG)
     v = ratings.select("i").distinct().select(
@@ -291,11 +288,11 @@ def ml_als_rank2_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         det = F.col("a11") * F.col("a22") - F.col("a12") * F.col("a12")
-        return cells.select(
+        return checkpoint(cells.select(
             group_key,
             hround((F.col("a22") * F.col("b1") - F.col("a12") * F.col("b2")) / det, 9).alias(out1),
             hround((F.col("a11") * F.col("b2") - F.col("a12") * F.col("b1")) / det, 9).alias(out2),
-        ).localCheckpoint(eager=False)  # used by next half-step, rmse, ss
+        ))  # used by next half-step, rmse, ss
 
     out_rows: list[DataFrame] = []
     for r in range(1, ALS2_ROUNDS + 1):
@@ -499,11 +496,11 @@ def ml_tree_depth2_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     toks = F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), 0)
-    feats = docs.select(
+    feats = checkpoint(docs.select(
         F.col("n_chars").cast("double").alias("f1"),
         F.size(F.array_distinct(toks)).cast("double").alias("f2"),
         F.size(toks).cast("double").alias("toks"),
-    ).localCheckpoint(eager=False)  # feeds edges, median, and rows
+    ))  # feeds edges, median, and rows
     probs = [b / TREE_BINS for b in range(1, TREE_BINS)]
     parr = F.array(*[F.lit(p) for p in probs])
     edges = feats.agg(
@@ -515,7 +512,7 @@ def ml_tree_depth2_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("e2"),
         hround(F.percentile("toks", F.lit(0.5)), 9).alias("m"),
     )
-    rows = (
+    rows = checkpoint(  # feeds both levels + accuracy
         feats.crossJoin(F.broadcast(edges))
         .select(
             F.when(F.col("toks") > F.col("m"), 1).otherwise(0).alias("y"),
@@ -528,7 +525,6 @@ def ml_tree_depth2_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
                 + F.size(F.filter("e2", lambda c: F.col("f2") > c))
             ).alias("b2"),
         )
-        .localCheckpoint(eager=False)  # feeds both levels + accuracy
     )
 
     def melt(df: DataFrame, keys: list[str]) -> DataFrame:
@@ -589,10 +585,9 @@ def ml_tree_depth2_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         <= F.col("cut_bin"),
         "L",
     ).otherwise("R")
-    sided = (
+    sided = checkpoint(  # feeds child split + leaves
         rows.crossJoin(F.broadcast(root_pick))
         .select("y", "b1", "b2", side.alias("side"))
-        .localCheckpoint(eager=False)  # feeds child split + leaves
     )
     child_pick = best_splits(sided, ["side"])
     leaves = (
@@ -744,14 +739,13 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
     a = op.select("ok", F.col("p").alias("pa"))
     b = op.select("ok", F.col("p").alias("pb"))
-    edges = (
+    edges = checkpoint(  # feeds und twice + the anti-join
         a.join(b, ["ok"])
         .filter(F.col("pa") < F.col("pb"))
         .groupBy("pa", "pb")
         .agg(F.count(F.lit(1)).alias("support"))
         .filter(F.col("support") >= AA_MIN_SUPPORT)
         .select("pa", "pb")
-        .localCheckpoint(eager=False)  # feeds und twice + the anti-join
     )
     und = edges.select(F.col("pa").alias("u"), F.col("pb").alias("v")).unionByName(
         edges.select(F.col("pb").alias("u"), F.col("pa").alias("v"))
@@ -852,28 +846,25 @@ def graph_hits_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
-    edges = (
+    edges = checkpoint(  # referenced twice per round
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .select(F.col("o_custkey").alias("u"), F.col("l_partkey").alias("i"))
         .distinct()
-        .localCheckpoint(eager=False)  # referenced twice per round
     )
     h = edges.select("u").distinct().select("u", F.lit(1.0).alias("h"))
     a = None
     for _ in range(HITS_ROUNDS):
         ar = edges.join(h, "u").groupBy("i").agg(F.sum("h").alias("a"))
         anorm = ar.agg(F.sqrt(F.sum(F.col("a") * F.col("a"))).alias("nrm"))
-        a = (
+        a = checkpoint(
             ar.crossJoin(F.broadcast(anorm))
             .select("i", hround(F.col("a") / F.col("nrm"), 9).alias("a"))
-            .localCheckpoint(eager=False)
         )
         hr = edges.join(a, "i").groupBy("u").agg(F.sum("a").alias("h"))
         hnorm = hr.agg(F.sqrt(F.sum(F.col("h") * F.col("h"))).alias("nrm"))
-        h = (
+        h = checkpoint(
             hr.crossJoin(F.broadcast(hnorm))
             .select("u", hround(F.col("h") / F.col("nrm"), 9).alias("h"))
-            .localCheckpoint(eager=False)
         )
     from pyspark.sql import Window
 
@@ -988,7 +979,7 @@ def ml_gmm_em_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     periodogram and perplexity entries.
     """
     events = load_table(spark, sf_dir, "events")
-    x = events.select(F.col("value").alias("x")).localCheckpoint(eager=False)
+    x = checkpoint(events.select(F.col("value").alias("x")))
     floor_ = F.lit(float(_GMM_VAR_FLOOR))
     init = x.agg(
         hround(F.percentile("x", F.lit(0.25)), 9).alias("mu1"),
@@ -1021,7 +1012,7 @@ def ml_gmm_em_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         scx = F.sum((F.lit(1.0) - F.col("r1")) * F.col("x"))
         srx2 = F.sum(F.col("r1") * F.col("x") * F.col("x"))
         scx2 = F.sum((F.lit(1.0) - F.col("r1")) * F.col("x") * F.col("x"))
-        state = resp.agg(
+        state = checkpoint(resp.agg(
             hround(srx / sr, 9).alias("mu1"),
             hround(scx / sc, 9).alias("mu2"),
             hround(
@@ -1031,7 +1022,7 @@ def ml_gmm_em_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.greatest(scx2 / sc - (scx / sc) * (scx / sc), floor_), 9
             ).alias("var2"),
             hround(F.avg("r1"), 9).alias("pi1"),
-        ).localCheckpoint(eager=False)  # feeds loglik + next round
+        ))  # feeds loglik + next round
         d1n, d2n = dens("mu1", "var1"), dens("mu2", "var2")
         ll = (
             x.crossJoin(F.broadcast(state))
@@ -1134,13 +1125,13 @@ def ml_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     split for robustness to id patterns.
     """
     docs = load_table(spark, sf_dir, "documents")
-    feats = docs.select(
+    feats = checkpoint(docs.select(
         (F.col("doc_id") % 2).alias("half"),
         F.col("n_chars").cast("double").alias("x"),
         F.size(
             F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), 0)
         ).cast("double").alias("y"),
-    ).localCheckpoint(eager=False)  # scanned by fit, quantile, coverage
+    ))  # scanned by fit, quantile, coverage
     cal = feats.filter(F.col("half") == 0)
     fit = cal.agg(
         F.count(F.lit(1)).alias("n_cal"),
@@ -1266,14 +1257,13 @@ def ml_poisson_glm_irls(spark: SparkSession, sf_dir: str) -> DataFrame:
     ALGORITHM, and the planted-exponential test certifies recovery.
     """
     events = load_table(spark, sf_dir, "events")
-    counts = (
+    counts = checkpoint(  # scanned per round + deviance
         events.groupBy(F.date_trunc("hour", F.col("ts")).alias("h"))
         .agg(
             F.count(F.lit(1)).cast("double").alias("y"),
             F.first(F.hour("ts")).cast("double").alias("x"),
         )
         .select("x", "y")
-        .localCheckpoint(eager=False)  # scanned per round + deviance
     )
     state = counts.agg(
         hround(F.log(F.avg("y")), 9).alias("a"), F.lit(0.0).alias("b")
@@ -1421,7 +1411,7 @@ def stats_kendall_tau_b(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda e: hround(e, 9),
         ).alias("cs")
     )
-    cells = (
+    cells = checkpoint(  # self-joined + two margin scans
         events.crossJoin(F.broadcast(cuts))
         .groupBy(
             F.hour("ts").alias("h"),
@@ -1430,7 +1420,6 @@ def stats_kendall_tau_b(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("dec_"),
         )
         .agg(F.count(F.lit(1)).cast("double").alias("c"))
-        .localCheckpoint(eager=False)  # self-joined + two margin scans
     )
     a = cells.select(F.col("h").alias("ha"), F.col("dec_").alias("da"), F.col("c").alias("ca"))
     b = cells.select(F.col("h").alias("hb"), F.col("dec_").alias("db"), F.col("c").alias("cb"))

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.rounding import dround, hround
+from ..materialise import checkpoint
 from ..sources.loaders import load_table
 from .registry import query
 
@@ -1449,7 +1450,7 @@ def stats_huber_mean_irls(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero. Updates 1e-9 lockstep-rounded; trajectory hash-checkable.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    x = li.select(F.col("l_extendedprice").alias("v")).localCheckpoint(eager=False)
+    x = checkpoint(li.select(F.col("l_extendedprice").alias("v")))
     m0 = x.agg(hround(F.percentile("v", F.lit(0.5)), 9).alias("m"))
     s0 = (
         x.crossJoin(F.broadcast(m0))

@@ -21,6 +21,7 @@ from ..functions.vectors import (
     squared_l2_unrolled,
     unit_vector,
 )
+from ..materialise import checkpoint
 from ..operators.dims import hint_dim
 from ..operators.similarity import (
     brute_force_topk,
@@ -1057,7 +1058,7 @@ def _triangle_profile(spark: SparkSession, e: DataFrame) -> DataFrame:
     """Exact (nodes, edges, triangles, wedges, clustering coeff) of an
     oriented (s < d) edge DataFrame — the MapReduce triangle-counting
     classic shared by `graph_triangle_stats` and its scaled twin."""
-    e = e.localCheckpoint(eager=False)
+    e = checkpoint(e)
     sym = e.union(e.select(F.col("d").alias("s"), F.col("s").alias("d")))
     deg = sym.groupBy("s").agg(F.count(F.lit(1)).alias("dg"))
     e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
@@ -1857,15 +1858,15 @@ def sample_kcenter_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # zero vectors have no direction (see _DUCK_UNITS); unit_vector keeps
     # the norm fold once-per-row under pushdown/collapse (r13, see
     # functions/vectors.py)
-    units = emb.filter(l2_norm(F.col("embedding")) > 0).select(
+    units = checkpoint(emb.filter(l2_norm(F.col("embedding")) > 0).select(
         "vec_id",
         unit_vector(F.col("embedding")).alias("unit"),
-    ).localCheckpoint(eager=False)
+    ))
     r9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)  # noqa: E731
     c1 = units.filter(F.col("vec_id") == 0).select(
         F.col("vec_id").alias("c_id"), F.col("unit").alias("c_unit")
     )
-    d = (
+    d = checkpoint(
         units.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(c1))
         .select(
@@ -1873,7 +1874,6 @@ def sample_kcenter_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
             "unit",
             r9(F.lit(1.0) - dot_product(F.col("unit"), F.col("c_unit"))).alias("d"),
         )
-        .localCheckpoint(eager=False)
     )
     sel_rows = [
         c1.crossJoin(F.broadcast(d.agg(hround(F.max("d"), 6).alias("radius_after"))))
@@ -1885,7 +1885,7 @@ def sample_kcenter_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
             .limit(1)
             .select(F.col("vec_id").alias("c_id"), F.col("unit").alias("c_unit"))
         )
-        d = (
+        d = checkpoint(
             d.crossJoin(F.broadcast(c))
             .filter(F.col("vec_id") != F.col("c_id"))
             .select(
@@ -1896,7 +1896,6 @@ def sample_kcenter_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
                     r9(F.lit(1.0) - dot_product(F.col("unit"), F.col("c_unit"))),
                 ).alias("d"),
             )
-            .localCheckpoint(eager=False)
         )
         sel_rows.append(
             c.crossJoin(F.broadcast(d.agg(hround(F.max("d"), 6).alias("radius_after"))))
@@ -2019,17 +2018,16 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding cloud, a real measured loss, hash-pinned.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    pts = emb.select(
+    pts = checkpoint(emb.select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    ).localCheckpoint(eager=False)
-    subs = (
+    ))
+    subs = checkpoint(
         pts.select(
             "vec_id",
             F.explode(F.sequence(F.lit(0), F.lit(PQ_SUBSPACES - 1))).alias("s"),
             "v",
         )
         .select("vec_id", "s", F.expr(f"slice(v, s * {PQ_SUBDIM} + 1, {PQ_SUBDIM})").alias("sv"))
-        .localCheckpoint(eager=False)
     )
 
     def l2(a, b):
@@ -2049,7 +2047,7 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rn", F.row_number().over(wvs.orderBy("d2", "cid")))
         .filter(F.col("rn") == 1)
     )
-    c1 = (
+    c1 = checkpoint(
         a1.select("s", "cid", F.posexplode("sv").alias("i", "x"))
         .groupBy("s", "cid", "i")
         .agg(hround(F.avg("x"), 9).alias("m"))
@@ -2059,7 +2057,6 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.array_sort(F.collect_list(F.struct("i", "m"))), lambda t: t["m"]
             ).alias("c")
         )
-        .localCheckpoint(eager=False)
     )
     codes = (
         subs.join(F.broadcast(c1), "s")

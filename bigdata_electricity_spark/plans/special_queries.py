@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.rounding import dround, hround
+from ..materialise import checkpoint
 from ..ml.regression import run_regression_pipeline
 from ..operators.multimodal import attach_binary_payload, decode_media
 from ..sources.loaders import load_table
@@ -1285,11 +1286,11 @@ def sketch_histogram_shard_quantiles(spark: SparkSession, sf_dir: str) -> DataFr
         .alias("shard_checksum")
     )
     merged = shard_hists.groupBy("bin").agg(F.sum("c").cast("double").alias("c"))
-    cum = merged.select(
+    cum = checkpoint(merged.select(
         "bin",
         "c",
         F.sum("c").over(Window.orderBy("bin")).alias("cw"),  # 64 rows
-    ).localCheckpoint(eager=False)  # referenced once per stat
+    ))  # referenced once per stat
     exact = events.agg(
         F.percentile("value", F.lit(0.5)).alias("x50"),
         F.percentile("value", F.lit(0.9)).alias("x90"),
@@ -1517,18 +1518,16 @@ def sketch_kmv_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("bigint").cast("double")
         / F.lit(281474976710656.0)
     )
-    uh = (
+    uh = checkpoint(  # feeds sketches AND exact overlap
         events.select("event_type", "user_id")
         .distinct()
         .select("event_type", "user_id", h.alias("h"))
-        .localCheckpoint(eager=False)  # feeds sketches AND exact overlap
     )
     w = Window.partitionBy("event_type").orderBy("h", "user_id")
-    sk = (
+    sk = checkpoint(
         uh.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= KMV_K)
         .drop("rn")
-        .localCheckpoint(eager=False)
     )
     types = sk.select("event_type").distinct()
     pairs = (

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..materialise import checkpoint
 from ..operators.text import (
     LANG_STOPWORDS,
     bpe_ish_token_count,
@@ -648,10 +649,9 @@ def text_vocab_js_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals = toks.groupBy("source").agg(
         F.sum("c").alias("tot"), F.count(F.lit(1)).alias("n_types")
     )
-    probs = (
+    probs = checkpoint(  # referenced 4x across the two sides
         toks.join(totals.select("source", "tot"), "source")
         .select("source", "tok", (F.col("c") / F.col("tot")).alias("p"))
-        .localCheckpoint(eager=False)  # referenced 4x across the two sides
     )
     pairs = (
         totals.select(F.col("source").alias("sa"))
@@ -814,15 +814,14 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     und = adj.groupBy("wa", "wb").agg(F.count(F.lit(1)).cast("double").alias("w"))
-    edges = (
+    edges = checkpoint(  # referenced once per round + wdeg
         und.select(F.col("wa").alias("src"), F.col("wb").alias("dst"), "w")
         .unionByName(und.select(F.col("wb").alias("src"), F.col("wa").alias("dst"), "w"))
-        .localCheckpoint(eager=False)  # referenced once per round + wdeg
     )
-    wdeg = edges.groupBy("src").agg(F.sum("w").alias("d")).localCheckpoint(eager=False)
+    wdeg = checkpoint(edges.groupBy("src").agg(F.sum("w").alias("d")))
     r = wdeg.select(F.col("src").alias("tok"), F.lit(1.0).alias("r"))
     for _ in range(TEXTRANK_ROUNDS):
-        r = (
+        r = checkpoint(
             edges.join(r.withColumnRenamed("tok", "src"), "src")
             .join(wdeg, "src")
             .groupBy(F.col("dst").alias("tok"))
@@ -834,7 +833,6 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
                     9,
                 ).alias("r")
             )
-            .localCheckpoint(eager=False)
         )
     top = (
         r.select(F.col("tok").alias("word"), hround("r", 6).alias("score"))

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..sources.loaders import load_table
 from ..functions.rounding import dround, hround
+from ..materialise import checkpoint
 from .registry import query
 
 _TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
@@ -1427,10 +1428,10 @@ def intervals_max_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
         "session_id",
         F.sum("new_session").over(w.rowsBetween(Window.unboundedPreceding, 0)),
     )
-    intervals = sess.groupBy("user_id", "session_id").agg(
+    intervals = checkpoint(sess.groupBy("user_id", "session_id").agg(
         F.unix_micros(F.min("ts").cast("timestamp")).alias("s_us"),
         F.unix_micros(F.max("ts").cast("timestamp")).alias("e_us"),
-    ).localCheckpoint(eager=False)  # endpoints + n_sessions
+    ))  # endpoints + n_sessions
     points = intervals.select(
         F.col("s_us").alias("t_us"), F.lit(1).alias("n_starts"), F.lit(0).alias("n_ends")
     ).unionByName(

@@ -40,10 +40,6 @@ def _write_csv(path, rows) -> str:
     return str(path)
 
 
-def _persisted(spark) -> int:
-    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-
-
 def _persisted_ids(spark) -> set[int]:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
@@ -160,19 +156,21 @@ def test_pipeline_matches_lazy_plans_and_releases_caches(spark, tmp_path):
     lazy = _consume(cleaned, {name: spark.sql(q) for name, q in POWER_SQL.items()},
                     run_regression_pipeline(transformed, ML_LABEL, ML_FEATURES, seed=42))
 
-    before = _persisted(spark)
+    # RDDs are compared by id: the context cleaner may meanwhile drop RDDs
+    # that earlier tests left persisted.
+    before = _persisted_ids(spark)
     with run_reference_pipeline(spark, src, sample_fraction=0.5, seed=42) as res:
-        assert _persisted(spark) == before + 2  # cleaned + sampled
+        assert len(_persisted_ids(spark) - before) == 2  # cleaned + sampled
         got = _consume(res.cleaned, res.sql_results, res.ml_metrics)
-    assert _persisted(spark) == before
+    assert _persisted_ids(spark) <= before
     assert _close(got, lazy)
     res.close()  # idempotent
 
     res = run_reference_pipeline(spark, src)
-    assert _persisted(spark) == before + 2
+    assert len(_persisted_ids(spark) - before) == 2
     del res
     gc.collect()
-    assert _persisted(spark) == before
+    assert _persisted_ids(spark) <= before
 
 
 def test_pipeline_job_budget(spark, tmp_path):

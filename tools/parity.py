@@ -29,6 +29,7 @@ import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bigdata_electricity_spark.materialise import Owner  # noqa: E402
 from bigdata_electricity_spark.plans import REGISTRY  # noqa: E402
 from bigdata_electricity_spark.session import get_spark  # noqa: E402
 from bigdata_electricity_spark.sources.loaders import TESTDATA_TABLES  # noqa: E402
@@ -65,10 +66,21 @@ def compare_one(spark, con, spec, sf_dir: str) -> str | None:
     order-insensitive value equality over name-sorted columns.
     Returns a failure description, or "rows-only (N rows)" prefixed with
     "ok:" for oracle-less specs.
+
+    The entry and its collect run inside one materialisation owner; an
+    RDD the entry persisted that is still persisted once the owner has
+    closed is a leak, and fails the entry. RDDs are compared by id: the
+    context cleaner may drop RDDs leaked earlier at any moment.
     """
-    sdf = spec.fn(spark, sf_dir)
-    s_cols = sdf.columns
-    s_rows = [tuple(r) for r in sdf.collect()]
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keys())
+    with Owner():
+        sdf = spec.fn(spark, sf_dir)
+        s_cols = sdf.columns
+        s_rows = [tuple(r) for r in sdf.collect()]
+    leaked = set(persisted().keys()) - before
+    if leaked:
+        return f"leaked {len(leaked)} persisted RDDs"
     if spec.oracle is None:
         return f"ok:rows-only ({len(s_rows)} rows)"
     res = con.execute(spec.oracle)
