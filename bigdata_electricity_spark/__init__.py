@@ -15,7 +15,7 @@ Layout:
                         dedup / similarity / text / multimodal operators
     plans/              the named-query registry (Spark impl + DuckDB oracle)
     streaming/          Structured Streaming variants of the event analytics
-    ml/                 regression pipeline (VectorAssembler→MinMaxScaler→LR)
+    ml/                 regression pipeline (OLS from one aggregate)
 """
 
 __version__ = "0.1.0"

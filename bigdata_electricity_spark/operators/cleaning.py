@@ -188,25 +188,26 @@ def detect_cadence_gaps_partitioned(df: DataFrame, partition_cols: list[str]) ->
 
 
 def outlier_bounds_iqr(df: DataFrame, cols: list[str] | None = None,
-                       relative_error: float = 0.001) -> dict[str, tuple[float, float]]:
-    """A11 — IQR outlier bounds via approxQuantile (Cleaning.scala:123-152):
-    Tukey's fences, 1.5 IQR beyond the quartiles.
+                       accuracy: int = 1000) -> dict[str, tuple[float, float]]:
+    """A11 — IQR outlier bounds (Cleaning.scala:123-152): Tukey's fences,
+    1.5 IQR beyond the quartiles.
 
-    ONE multi-column approxQuantile call (Greenwald-Khanna) instead of the
-    reference's per-column loop. Returns {col: (lower, upper)}; a column
-    with no non-null value has no fence and is left out.
+    ONE ``df.agg`` of ``percentile_approx`` (Greenwald-Khanna, the summary
+    ``approxQuantile`` builds) over the columns instead of the reference's
+    per-column loop. Returns {col: (lower, upper)}; a column with no
+    non-null value has no fence and is left out.
 
-    Rank error: ``relative_error`` is what Spark is asked for, not a
-    bound it keeps. It merges per-partition summaries, and the merged
-    error depends on the partition layout. Measured on five seeded
+    Rank error: ``1 / accuracy`` of the rows is what Spark is asked for,
+    not a bound it keeps. It merges per-partition summaries, and the
+    merged error depends on the partition layout. Measured on five seeded
     20,000-row household tables on 4 cores, the worst quartile was 0.0008
     of the rows from its exact rank; perfbench's notes record 0.003, and
     it checks the outlier counts against quartiles within 0.01 of the
-    exact ranks (perfbench/README.md). Pass ``relative_error=0.0`` for
-    exact quartiles.
+    exact ranks (perfbench/README.md). An ``accuracy`` of twice the row
+    count gives exact quartiles (at the row count one can be a rank off).
     """
     cols = cols or NUM_COLS
-    quantiles = df.stat.approxQuantile(cols, [0.25, 0.75], relative_error)
+    quantiles = df.agg(*[F.percentile_approx(c, [0.25, 0.75], accuracy) for c in cols]).first()
     out: dict[str, tuple[float, float]] = {}
     for c, qs in zip(cols, quantiles):
         if qs:

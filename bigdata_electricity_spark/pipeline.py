@@ -163,7 +163,8 @@ def run_reference_pipeline(spark: SparkSession, raw_csv_path: str,
          (Transformation.scala:92-115)
       7. SQL analytics Q1-Q5 on temp view power_data
          (SQLOperations.scala:25-153)
-      8. ML regression vs mean baseline (MLOperations.scala:12-167)
+      8. ML regression vs mean baseline, one fit and one metrics
+         aggregate (MLOperations.scala:12-167)
 
     The result holds caches (see the module docstring); release them with
     ``with run_reference_pipeline(...) as result:`` or ``result.close()``.

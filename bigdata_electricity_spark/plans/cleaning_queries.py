@@ -161,7 +161,7 @@ def clean_outlier_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exact interpolated percentiles (F.percentile ≡ quantile_cont) so the
     oracle can match; the production operator
-    (operators.cleaning.outlier_report_iqr) uses approxQuantile
+    (operators.cleaning.outlier_report_iqr) uses percentile_approx
     (Greenwald-Khanna) for the 100 TB path, where an exact percentile
     needs a full sort.
     """

@@ -38,7 +38,7 @@ def sample_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("ml_linear_regression")  # rows-only: solver floats (M1-M6)
 def ml_linear_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M1-M6 — assemble→scale→LR vs mean baseline on lineitem
+    """M1-M6 — OLS (one aggregate fit) vs mean baseline on lineitem
     (label l_extendedprice ~ quantity/discount/tax)."""
     li = load_table(spark, sf_dir, "lineitem")
     return run_regression_pipeline(

@@ -66,22 +66,32 @@ def test_regression_on_linear_target(spark):
     assert metrics["r2"]["baseline"] <= 0.01
 
 
-@pytest.mark.parametrize("noise", [0.0, 5.0])
-def test_regression_metrics_match_evaluator(spark, noise):
-    # The one-pass metrics against RegressionEvaluator, the oracle, over
-    # the same split and fit: the linear target above, and with noise.
+@pytest.mark.parametrize("features, row", [
+    (["x"], lambda i: (3.0 * i + 2.0, float(i))),
+    (["x"], lambda i: (3.0 * i + 2.0 + 5.0 * math.sin(i), float(i))),
+    # a ~240-offset, low-variance column beside the intercept: conditioning
+    (["x", "v", "z"], lambda i: (
+        3.0 * i + 400.0 * (240.0 + 0.01 * math.cos(i)) + 2.0 * math.sin(0.3 * i)
+        + math.sin(7.0 * i), float(i), 240.0 + 0.01 * math.cos(i), math.sin(0.3 * i))),
+    # a constant column and a collinear pair: the rank-deficient solve
+    (["x", "c", "w"], lambda i: (
+        3.0 * i + 2.0 + 5.0 * math.sin(i), float(i), 1.0, 2.0 * i - 7.0)),
+], ids=["linear", "noisy", "offset", "rank_deficient"])
+def test_regression_metrics_match_evaluator(spark, features, row):
+    # The one-aggregate fit and its one-pass metrics against MLlib's
+    # assemble → min-max scale → LinearRegression chain and
+    # RegressionEvaluator, the oracle, over the same split.
     from pyspark.ml.evaluation import RegressionEvaluator
     from pyspark.ml.feature import MinMaxScaler, VectorAssembler
     from pyspark.ml.regression import LinearRegression
 
-    df = spark.createDataFrame(
-        [(float(i), 3.0 * i + 2.0 + noise * math.sin(i)) for i in range(200)], ["x", "y"]
-    )
+    df = spark.createDataFrame([row(i) for i in range(200)], ["y", *features])
     got = {r["metric"]: (r["model"], r["baseline"])
-           for r in run_regression_pipeline(df, "y", ["x"]).collect()}
+           for r in run_regression_pipeline(df, "y", features).collect()}
 
-    train, test = df.select(F.col("y").alias("label"), "x").randomSplit([0.7, 0.3], seed=42)
-    assembler = VectorAssembler(inputCols=["x"], outputCol="features")
+    train, test = df.select(F.col("y").alias("label"), *features).randomSplit(
+        [0.7, 0.3], seed=42)
+    assembler = VectorAssembler(inputCols=features, outputCol="features")
     scaler = MinMaxScaler(inputCol="features", outputCol="scaledFeatures").fit(
         assembler.transform(train))
     model = LinearRegression(featuresCol="scaledFeatures", labelCol="label").fit(

@@ -243,7 +243,6 @@ def test_capped_verify_equals_oneshot_closure_on_corpus(spark):
     assert tight == want
 
 
-@pytest.mark.heavy
 def test_lsh_dedup_clusters_degenerate_inputs(spark):
     """Capped-verify loop on empty / single-doc / all-identical inputs:
     no round may fail on an empty window or an empty CC edge set."""

@@ -40,7 +40,8 @@ def test_outlier_bounds_iqr_fences(spark):
     # 1..100 + one wild point: q1≈25, q3≈75 → fence ≈ [-50, 150]
     vals = [(float(i),) for i in range(1, 101)] + [(1000.0,)]
     df = spark.createDataFrame(vals, f"{NUM_COLS[0]} double")
-    lo, hi = outlier_bounds_iqr(df, [NUM_COLS[0]], relative_error=0.0)[NUM_COLS[0]]
+    # an accuracy of twice the row count asks for exact quartiles
+    lo, hi = outlier_bounds_iqr(df, [NUM_COLS[0]], accuracy=2 * len(vals))[NUM_COLS[0]]
     assert lo < 1 and 100 < hi < 1000
     n_out = df.filter((F.col(NUM_COLS[0]) < lo) | (F.col(NUM_COLS[0]) > hi)).count()
     assert n_out == 1
