@@ -18,4 +18,12 @@ Layout:
     ml/                 regression pipeline (OLS from one aggregate)
 """
 
+import sys
+
+from pyspark import cloudpickle
+
 __version__ = "0.1.0"
+
+# Python workers need not have the package on their path: functions
+# defined in it are pickled with their code, not as an import by name.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])

@@ -1,9 +1,15 @@
 """The one place an intermediate result is materialised and released.
 
-:func:`checkpoint` cuts lineage with a lazy local checkpoint, for a
-frame that an iterated or multi-consumer plan reads several times;
+:func:`checkpoint` cuts lineage with a local checkpoint, for a frame
+that an iterated or multi-consumer plan reads several times;
 :func:`cache` keeps a reused table in memory; :func:`release` frees a
 frame's blocks now.
+
+A checkpoint's blocks are written by the first action that reads it,
+but the call itself is not always job-free. With adaptive execution on
+(``session.RUNTIME_CONFS``), planning the checkpoint's RDD runs each
+shuffle stage of the plan, one job per stage, at the call: measured, a
+projection ran 0 jobs, a ``groupBy`` 1, a ``groupBy`` plus a join 2.
 
 Release rule: whoever places a materialisation releases it. An
 :class:`Owner` releases, when it closes, every frame materialised on its
@@ -77,7 +83,8 @@ def _held(df: DataFrame) -> DataFrame:
 
 
 def checkpoint(df: DataFrame) -> DataFrame:
-    """A lazy local checkpoint of ``df`` at :data:`LEVEL`."""
+    """A local checkpoint of ``df`` at :data:`LEVEL`, written by its first
+    action (the call runs the plan's shuffle stages; see above)."""
     return _held(df.localCheckpoint(eager=False, storageLevel=LEVEL))
 
 

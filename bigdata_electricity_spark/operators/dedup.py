@@ -1077,31 +1077,17 @@ def lsh_dedup_clusters(df: DataFrame, threshold: float = 0.6,
        :func:`minhash_signatures` with ``shingle_n=1``, so the
        signature estimates TOKEN-SET Jaccard — the same relation the
        exact operators compute): bands·n skinny rows, checkpointed once
-       and reused by stages 2–4. No pair relation is ever built from
+       and reused by stages 2–3. No pair relation is ever built from
        them.
-    2. full-signature candidate pairs (r11 VERDICT task 2; verify
-       added r13 per r12 ADVICE): docs whose ENTIRE signature matches
-       are the same point to every band — one star pair per member to
-       the group min. These were originally unioned into the closure
-       UNVERIFIED on the t^num_hashes bound (0.6³² ≈ 8e-8), but that
-       bound is threshold-dependent: at threshold = 0.95 a J = 0.9
-       pair matches all 32 hashes with probability 0.9³² ≈ 3.4%, and
-       one false edge transitively fuses two clusters. Since the
-       full-signature pairs are only 50.8k of the 40.5M distinct
-       candidate pairs at sf1f (0.13%), they now flow through the SAME
-       exact-Jaccard verify as the stage-3 spanning pairs — precision
-       1.0 by construction at every threshold, cost unmeasurable.
-       Token-less docs are excluded structurally (no signature row).
-    3. spanning-edge verify: within each (band, bucket), every member
+    2. spanning-edge verify: within each (band, bucket), every member
        pairs with the bucket's ``per_node_cap`` smallest ids — ≤
        bands·cap·n pairs TOTAL (vs Σ C(bucket,2) ≈ 89.5M enumerated
        pairs at sf1f), generated by one per-bucket row_number, verified
        with exact Jaccard (the only stage that joins token arrays by
        pair id). A true duplicate quasi-clique collapses here: every
        member reaches a near-min id in some shared bucket. Verified
-       edges + full-signature edges feed star-contraction CC
-       (operators/graph.py).
-    4. exhaustive cross-component verify: the banded postings relabel
+       edges feed star-contraction CC (operators/graph.py).
+    3. exhaustive cross-component verify: the banded postings relabel
        by current component and self-join per (band, bucket) with
        INTS-ONLY rows (id, component, token count — ~40 bytes);
        id<, component≠ and the integer size-ratio prune evaluate during
@@ -1111,17 +1097,17 @@ def lsh_dedup_clusters(df: DataFrame, threshold: float = 0.6,
        join instead measured 66 s vs 3.0 s — the sort-merge inner loop
        copies the joined row per enumerated pair, so payload width IS
        the cost). The surviving cross-component candidates (1.95M at
-       sf1f, shrinking as stage 3 merges more) deduplicate to distinct
+       sf1f, shrinking as stage 2 merges more) deduplicate to distinct
        pairs and join the token arrays for the exact verify — the
        irreducible exactness work, since a cross-component candidate
        must be verified under any schedule. One pass is EXHAUSTIVE:
        every candidate pair is either verified here, verified in stage
-       3, or already intra-component — so the result is exactly the
+       2, or already intra-component — so the result is exactly the
        closure of the fully-verified candidate relation (cluster-set
        equality to the recursive-CTE closure stays pytest-proven,
-       tests/test_graph_cc.py), with precision 1 up to the quantified
-       stage-2 hash bound and recall the banded S-curve of candidate
-       generation, unchanged.
+       tests/test_graph_cc.py), with precision 1 and recall the banded
+       S-curve of candidate generation. Signature-identical docs share
+       every bucket, so this pass verifies them too.
 
     Scale accounting (sf1f, measured r12): 105 s → ~28 s composed
     (sf10f, 500k docs: 577.6 → 77.6 s — 138.9 s before the
@@ -1129,7 +1115,7 @@ def lsh_dedup_clusters(df: DataFrame, threshold: float = 0.6,
     materialized intermediate exceeds bands·n rows plus the
     still-cross-component pair set, vs the r11 shape's 40.5M-pair pool.
     At sf10f the eliminated pool was ~10× larger — the r9 disk-full
-    shape is now structurally impossible. The stage-4 enumeration cost
+    shape is now structurally impossible. The stage-3 enumeration cost
     is Σ_buckets C(k,2) integer compares (bucket occupancy is pinned by
     the signature law, so this is near-linear per decade —
     docs/RECALL_DENSITY.md's projection), and its array joins touch
@@ -1187,9 +1173,9 @@ def lsh_dedup_clusters(df: DataFrame, threshold: float = 0.6,
     nodes = grp.select(F.col("rep").alias("id"))
 
     # Stage 1 — signatures + banded postings (checkpointed: reused by
-    # the full-signature union, the spanning edges, and the exhaustive
-    # cross-component verify). At shingle_n=1 the signature is a pure
-    # function of the DISTINCT-token-hash array the contraction already
+    # the spanning edges and the exhaustive cross-component verify). At
+    # shingle_n=1 the signature is a pure function of the
+    # DISTINCT-token-hash array the contraction already
     # checkpointed (min over duplicates = min over distinct, and
     # :func:`minhash_signatures` hashes exactly xxhash64(token) →
     # xxhash64(that) → per-seed xxhash64), so it derives from ``base``
@@ -1200,7 +1186,7 @@ def lsh_dedup_clusters(df: DataFrame, threshold: float = 0.6,
         return lambda s: F.xxhash64(s, F.lit(seed))
 
     # Token-less docs (__n NULL or 0) are excluded STRUCTURALLY here —
-    # no signature, no banded posting, no stage-3/4 membership — so
+    # no signature, no banded posting, no stage-2/3 membership — so
     # their singleton-ness never depends on NULL/NaN semantics of the
     # verify expression or the session's sizeOfNull setting (r12
     # ADVICE). They remain in ``nodes`` and close as singletons.
@@ -1220,30 +1206,7 @@ def lsh_dedup_clusters(df: DataFrame, threshold: float = 0.6,
     )
     banded = materialise.checkpoint(banded_postings(sig, num_hashes, bands))
 
-    # Stage 2 — full-signature candidate pairs. Signature-identical
-    # docs are near-certain duplicates, but the per-pair false-match
-    # probability is J^num_hashes — negligible at threshold 0.6
-    # (0.6³² ≈ 8e-8) yet ~3.4% for a J=0.9 pair when a caller serves
-    # threshold=0.95, and ONE false edge transitively fuses two whole
-    # clusters (r12 ADVICE). Since these pairs are only ~0.13% of the
-    # candidate mass (measured sf1f), they are exact-verified alongside
-    # the stage-3 spanning pairs instead of unioning into the closure
-    # unverified — precision 1.0 now holds at EVERY threshold, not just
-    # the tested 0.6/0.8 points, at negligible cost. (sig already
-    # excludes token-less docs structurally.)
-    sigfp = sig.select(
-        "id",
-        F.xxhash64("sig").alias("__s1"),
-        F.xxhash64(F.lit(1), "sig").alias("__s2"),
-    )
-    wsig = Window.partitionBy("__s1", "__s2")
-    sig_pairs = (
-        sigfp.withColumn("__mn", F.min("id").over(wsig))
-        .filter(F.col("id") != F.col("__mn"))
-        .select(F.col("__mn").alias("id_a"), F.col("id").alias("id_b"))
-    )
-
-    # Stage 3 — spanning edges: each bucket member pairs with the
+    # Stage 2 — spanning edges: each bucket member pairs with the
     # bucket's per_node_cap smallest ids; exact-Jaccard verify is the
     # only per-pair array join, over ≤ bands·cap·n rows.
     va = base.select(
@@ -1267,16 +1230,14 @@ def lsh_dedup_clusters(df: DataFrame, threshold: float = 0.6,
         .dropDuplicates(["id_a", "id_b"])
     )
     edges1 = (
-        stars.unionByName(sig_pairs)
-        .dropDuplicates(["id_a", "id_b"])
-        .join(va, "id_a")
+        stars.join(va, "id_a")
         .join(vb, "id_b")
         .filter(jaccard >= F.lit(threshold))
         .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     )
     comp = materialise.checkpoint(connected_components(nodes, edges1))
 
-    # Stage 4 — exhaustive cross-component verify. The bucket self-join
+    # Stage 3 — exhaustive cross-component verify. The bucket self-join
     # runs INTS-ONLY (id, band, bucket, component, token count): the
     # intra-component quasi-clique mass (74% of enumerations at sf1f)
     # is rejected by an integer compare during the probe with ~40-byte
@@ -1284,7 +1245,7 @@ def lsh_dedup_clusters(df: DataFrame, threshold: float = 0.6,
     # measured 66 s vs 3.0 s at sf1f (the sort-merge inner loop copies
     # the joined row per enumerated pair, so payload width is the whole
     # cost). Only the surviving cross-component candidates (1.95M of
-    # 89.5M enumerations at sf1f, shrinking as stage 3 merges more)
+    # 89.5M enumerations at sf1f, shrinking as stage 2 merges more)
     # deduplicate to pairs and join the arrays for the exact verify —
     # the irreducible exactness work, since a cross-component candidate
     # must be verified no matter the schedule.

@@ -30,12 +30,15 @@ Scale notes (100 TB tier):
   skew is bounded: large-star emits edges keyed by the LARGER endpoint,
   so a massive near-clique contracts toward its min without funneling
   every edge through one reducer key first;
-- lineage is truncated every half-phase via ``materialise.checkpoint``,
-  otherwise the iterated plan grows and re-executes from the scan (on a
-  cluster, prefer a reliable checkpoint dir);
-- convergence is one (count, bit_xor-of-hash) fingerprint action per
-  iteration over the current edge set — order-independent and
-  overflow-free under ANSI mode (a 64-bit hash-sum would overflow).
+- lineage is truncated once per iteration, at the small-star output,
+  via ``materialise.checkpoint``, otherwise the iterated plan grows and
+  re-executes from the scan (on a cluster, prefer a reliable checkpoint
+  dir);
+- convergence is one exact check per iteration, one groupBy over the
+  small-star edges. Every such edge points from a child to a smaller
+  parent, and both phases keep each component connected. So once no
+  node has two parents and no parent has a parent, each component is
+  one star rooted at its minimum, which is the answer.
 """
 
 from __future__ import annotations
@@ -56,7 +59,7 @@ def _star_labels(edges: DataFrame, max_iter: int) -> DataFrame:
             E.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
         mins = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-        large = checkpoint(
+        large = (
             sym.join(mins, "u")
             .filter(F.col("v") > F.col("u"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
@@ -77,57 +80,20 @@ def _star_labels(edges: DataFrame, max_iter: int) -> DataFrame:
             .filter(F.col("u") != F.col("v"))
             .distinct()
         )
-        # Convergence, detected on the iteration that PRODUCES the
-        # fixpoint instead of one full (confirm) iteration later (r14;
-        # each iteration is a full shuffle barrier at scale, guide §2):
-        # the fixpoint is exactly "small is a DEPTH-1 star forest rooted
-        # at component minima", which two conditions certify together —
-        #   (a) small == large (small-star was the identity), i.e.
-        #       every node's smaller neighbors collapse to one min:
-        #       small is a parent-pointer forest; and
-        #   (b) no node is both a child and a parent in small
-        #       (depth 1) — (a) alone also holds on DEEPER
-        #       parent-pointer forests (a 14-node chain stalls it,
-        #       caught by test_transitive_closure_chain), so (b) is
-        #       load-bearing, not defensive.
-        # With (a)+(b): each tree is one star whose root is smaller
-        # than its children; both phases preserve component
-        # connectivity, so a component is ONE star and its root the
-        # component min — and both phases are identities on that, so
-        # the test is exact in both directions. All three probes run
-        # in ONE action (crossJoin of 1-row aggregates); `small` and
-        # `large` are checkpointed, so the extra scans are block reads.
-        depth2 = (
-            small.alias("ca")
-            .join(
-                small.alias("pb"),
-                F.col("ca.v") == F.col("pb.u"),
-                "left_semi",
-            )
-            .agg(F.count(F.lit(1)).alias("d2"))
-        )
-        fp_row = (
-            small.agg(
-                F.count(F.lit(1)).alias("sc"),
-                F.bit_xor(F.xxhash64("u", "v")).alias("sh"),
-            )
-            .crossJoin(
-                large.agg(
-                    F.count(F.lit(1)).alias("lc"),
-                    F.bit_xor(F.xxhash64("u", "v")).alias("lh"),
-                )
-            )
-            .crossJoin(depth2)
-            .first()
+        # Converged iff small is a depth-1 star forest (module
+        # docstring): one row per edge end, c = 1 at the child end; a
+        # node with a child row and any other row has two parents or is
+        # a parent too. The action also materialises ``small``.
+        roles = small.select(F.col("u").alias("n"), F.lit(1).alias("c")).union(
+            small.select(F.col("v").alias("n"), F.lit(0).alias("c"))
         )
         converged = (
-            (fp_row["sc"], fp_row["sh"]) == (fp_row["lc"], fp_row["lh"])
-            and fp_row["d2"] == 0
+            roles.groupBy("n")
+            .agg(F.max("c").alias("c"), F.count(F.lit(1)).alias("k"))
+            .filter((F.col("c") == 1) & (F.col("k") > 1))
+            .isEmpty()
         )
-        # The fingerprint action has materialized `small`, so the previous
-        # edge set and this iteration's `large` are dead: free them now
-        # (``materialise`` explains why through the checkpoint RDDs).
-        release(large, E)
+        release(E)  # the previous edge set is dead now
         E = small
         if converged:
             break

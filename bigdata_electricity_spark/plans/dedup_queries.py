@@ -326,7 +326,7 @@ def dedup_lsh_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     mass against n² pair growth).
 
     r12: the candidate-pair relation is never materialized — per-bucket
-    spanning edges + full-signature unions feed the closure, then ONE
+    spanning edges feed the closure, then ONE
     ints-only exhaustive cross-component bucket join certifies
     exactness (see the operator docstring; sf1f composed cost 105 →
     ~28 s, sf10f 577.6 → 77.6 s, recall/precision re-certified

@@ -8,6 +8,11 @@ from pyspark.sql import functions as F
 
 from bigdata_electricity_spark.operators.graph import connected_components
 
+# Spark jobs of connected_components on the 14-node chain, collect
+# included: per iteration, one checkpoint of the small-star edges and
+# one convergence check that materialises it.
+CHAIN_JOBS = 41
+
 
 def _cc(spark, node_ids, edge_pairs, max_iter=25):
     nodes = spark.createDataFrame([(i,) for i in node_ids], "id long")
@@ -165,28 +170,42 @@ def test_checkpoint_blocks_released_per_iteration(spark):
     checkpoint blocks — DataFrame.unpersist on a localCheckpoint-ed
     frame is a no-op, so the release goes through the underlying
     persistent-RDD registry. A 14-node chain needs several star
-    iterations (3 checkpoints each); if the release were still a no-op
-    the registry would grow by ~3 per iteration. Only the FINAL edge
-    set's checkpoint may survive."""
+    iterations (one checkpoint each); if the release were still a no-op
+    the registry would grow by one per iteration. Only the FINAL edge
+    set's checkpoint may survive.
+
+    The call's Spark jobs are counted too: each iteration runs one
+    exact convergence check on the small-star edges, which also
+    materialises their checkpoint. A second checkpoint per iteration or
+    a second check action raises the count."""
     sc = spark.sparkContext
     before = set(sc._jsc.getPersistentRDDs().keys())
-    got = _cc(spark, list(range(14)), [(i, i + 1) for i in range(13)])
+    group = "test-cc-chain-jobs"
+    sc.setJobGroup(group, "connected components on a 14-node chain")
+    try:
+        got = _cc(spark, list(range(14)), [(i, i + 1) for i in range(13)])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
     assert set(got.values()) == {0}
     leaked = set(sc._jsc.getPersistentRDDs().keys()) - before
     # final converged edge set only (one checkpoint RDD)
     assert len(leaked) <= 1, f"dead checkpoint RDDs retained: {sorted(leaked)}"
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= CHAIN_JOBS, jobs
 
 
 @pytest.mark.heavy
 def test_capped_verify_equals_oneshot_closure_on_corpus(spark):
     """r10 verify-schedule redesign, r12 restructure: the staged verify
-    (full-signature union → per-bucket spanning edges → exhaustive
-    colocated cross-component verify) must induce EXACTLY the partition
-    of the one-shot verify-every-candidate closure — on the real
-    sf0.001 corpus, not just planted fixtures. The schedule changes
-    WHICH true pairs get exact-verified (since r13 ALL candidate pairs,
-    full-signature ones included, pass exact verify — r12 ADVICE),
-    never the components they span."""
+    (per-bucket spanning edges → exhaustive colocated cross-component
+    verify) must induce EXACTLY the partition of the one-shot
+    verify-every-candidate closure — on the real sf0.001 corpus, not
+    just planted fixtures. The schedule changes WHICH true pairs get
+    exact-verified (every candidate pair that can merge two components
+    passes exact verify, signature-identical ones included), never the
+    components they span."""
     from pyspark.sql import functions as F
 
     from bigdata_electricity_spark.operators.dedup import (
@@ -302,9 +321,9 @@ def test_lsh_dedup_clusters_rejects_half_specified_signature(spark):
 
 @pytest.mark.heavy
 def test_lsh_dedup_sig_identical_below_threshold_pair_not_merged(spark):
-    """r12 ADVICE (stage 2): a pair whose FULL MinHash signature
+    """r12 ADVICE: a pair whose FULL MinHash signature
     collides but whose exact Jaccard is below the serve threshold must
-    NOT merge — before r13 the full-signature shortcut unioned such
+    NOT merge — before r13 a full-signature shortcut unioned such
     pairs into the closure unverified, and at high thresholds the
     t^num_hashes bound is far from negligible (0.9^32 ≈ 3.4% per
     J = 0.9 pair). Plant the collision deterministically: with a

@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import pytest
 
 import hashlib
@@ -11,6 +15,7 @@ from bigdata_electricity_spark.plans import REGISTRY
 from bigdata_electricity_spark.streaming.event_windows import streaming_tumbling_counts
 
 SF_DIR = "/root/testdata/sf0.001"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_streaming_tumbling_matches_batch(spark):
@@ -353,3 +358,35 @@ def test_streaming_incremental_sim_passes_microbatch_count(spark, monkeypatch):
     assert all(isinstance(n, int) and n > 0 for n in seen), seen
     assert sum(seen) == n_expected, (seen, n_expected)
     assert result.count() > 0
+
+
+def test_python_workers_need_not_import_the_package(tmp_path):
+    """Entries whose Python workers run package code (a mapInPandas
+    function, a batch and a streaming Python data source) pass their
+    oracle checks from another directory, with the package on the
+    driver's path only."""
+    names = ["multimodal_decode_meta", "pyds_synthetic_events", "streaming_python_source"]
+    script = tmp_path / "elsewhere.py"
+    script.write_text(
+        "import sys\n"
+        f"sys.path[:0] = [{ROOT!r}, {os.path.join(ROOT, 'tools')!r}]\n"
+        "from parity import compare_one, oracle_connection\n"
+        "from bigdata_electricity_spark.plans import REGISTRY\n"
+        "from bigdata_electricity_spark.session import get_spark\n"
+        "spark = get_spark('elsewhere', cores=2)\n"
+        f"con = oracle_connection({SF_DIR!r})\n"
+        f"for name in {names!r}:\n"
+        f"    print(name, compare_one(spark, con, REGISTRY[name], {SF_DIR!r}))\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEMORY"] = "1g"
+    out = subprocess.run([sys.executable, str(script)], cwd=tmp_path, env=env,
+                         capture_output=True, text=True, timeout=600)
+    assert out.returncode == 0, out.stderr[-2000:]
+    got = dict(line.split(" ", 1) for line in out.stdout.strip().splitlines())
+    assert got == {
+        "multimodal_decode_meta": "None",
+        "pyds_synthetic_events": "None",
+        "streaming_python_source": "ok:rows-only (10 rows)",
+    }, out.stdout
