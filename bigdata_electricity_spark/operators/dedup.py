@@ -9,6 +9,16 @@ the training-data-pipeline dedup ladder, each designed shuffle-aware:
   generation (the only scalable shape at 100 TB);
 - Jaccard verification runs only on blocked candidate pairs.
 
+The token-set operators (n-gram Jaccard and containment, their
+prefix-filtered twins, incremental dedup and the LSH closure) share one
+pipeline, and each of its steps has one implementation below:
+:func:`_token_base` (hashed distinct-token arrays),
+:func:`_df_ranked_postings` (document-frequency ranked postings),
+:func:`_prefix` (the prefix bound), :func:`_jaccard_candidates` (the
+pair-dependent prefix candidate join), :func:`_jaccard_verified` (the
+exact Jaccard verify) and :func:`_minhash` (the per-seed minimum
+signature).
+
 Every operator reads the documents table's ``doc_id`` and ``text``
 columns; rename another corpus's columns to these first.
 """
@@ -21,6 +31,166 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from .. import materialise
 from .text import normalize_text
+
+
+# ---------------------------------------------------------------------------
+# The token-set pipeline: one implementation of each shared step
+# ---------------------------------------------------------------------------
+#
+# The r8 sf1 audit (docs/SCALING_SF1.md) showed the fixed-cardinality
+# blocking of ngram_jaccard_pairs and containment_pairs (source / label)
+# going quadratic: block populations grow with the corpus while the
+# number of blocks does not, so per-block pairs grow as n². PPJoin-style
+# prefix filtering replaces the block key with a CONTENT-derived bound:
+# order each doc's tokens by ascending global document frequency; a pair
+# can reach the threshold only if it shares a token inside both docs'
+# short "prefix" of globally-rarest tokens, so candidates concentrate on
+# rare tokens and total candidate mass tracks the TRUE-pair mass, not
+# block². (r6 measured prefix filtering as a net loss at sf0.1 where
+# source blocking was within 1.4x of the true-pair floor — both
+# measurements stand; the crossover is the regime change the audit
+# exposed. Xiao et al., "Efficient Similarity Joins for Near Duplicate
+# Detection", WWW'08 — public algorithm.)
+#
+# Correctness of the filter (recall = 1, any global token order): if
+# |A∩B| ≥ ⌈t·|A|⌉, fewer than |A| − ⌈t·|A|⌉ + 1 of A's tokens are outside
+# B, so at least one of A's first |A| − ⌈t·|A|⌉ + 1 tokens (in ANY fixed
+# order) is shared. Verification is exact, so each engine may use its own
+# token order (Spark ranks xxhash64 longs, the DuckDB oracle ranks
+# strings) and still produce the identical final pair set.
+
+
+def _token_base(df: DataFrame, block_cols: list[str] | None = None,
+                checkpoint: bool = True) -> DataFrame:
+    """(id, [blocks], toks, __n) hashed distinct-token arrays.
+
+    ``checkpoint=True`` (default) truncates lineage so multi-consumer
+    plans (postings + both verify sides of the prefix-filter path)
+    don't re-tokenize per consumer. Single-pass consumers (the blocked
+    self-joins, the bounded Arrow fast path) pass ``checkpoint=False``:
+    the checkpoint would materialize the ENTIRE tokenized relation to
+    executor storage before the one pass, and its plan scans an
+    ExistingRDD where the uncheckpointed one scans parquet with a
+    ReadSchema of just doc_id, text and source."""
+    tokens = F.transform(
+        F.array_distinct(F.split(normalize_text(F.col("text")), " ")),
+        lambda t: F.xxhash64(t),
+    )
+    out = df.select(
+        F.col("doc_id").alias("id"),
+        *[F.col(c) for c in (block_cols or [])],
+        tokens.alias("toks"),
+    ).withColumn("__n", F.size("toks"))
+    # reused: postings + both verify sides
+    return materialise.checkpoint(out) if checkpoint else out
+
+
+def _minhash(shingle_hashes: str, num_hashes: int):
+    """array<bigint> MinHash signature of an array<bigint> column: per
+    seed, the minimum seeded xxhash64 over its elements."""
+    return F.array(*[
+        F.array_min(F.transform(shingle_hashes, lambda s: F.xxhash64(s, F.lit(seed))))
+        for seed in range(num_hashes)
+    ])
+
+
+def _df_ranked_postings(base: DataFrame, block_cols: list[str] | None = None,
+                        tok_df: DataFrame | None = None) -> tuple[DataFrame, DataFrame]:
+    """(ranked, tok_df): ``ranked`` is every (tok, id, __n, [blocks], df,
+    rk) posting, each doc's tokens ranked by ascending document frequency
+    ``df`` (ties by token hash — any total order works).
+
+    ``tok_df`` (tok → df) defaults to the frequencies over ``base``
+    itself. An incremental batch ranks against its corpus index's
+    frequencies instead; tokens the corpus has never seen get df 0, the
+    rarest."""
+    posting = base.select(
+        "id", "__n", *(block_cols or []), F.explode("toks").alias("tok")
+    )
+    if tok_df is None:
+        tok_df = posting.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
+    ranked = (
+        posting.join(tok_df, "tok", "left")
+        .withColumn("df", F.coalesce("df", F.lit(0)))
+        .withColumn("rk", F.row_number().over(Window.partitionBy("id").orderBy("df", "tok")))
+    )
+    return ranked, tok_df
+
+
+def _prefix(ranked: DataFrame, threshold: float) -> DataFrame:
+    """The ranked postings inside each doc's prefix: its first
+    n − ⌈t·n⌉ + 1 tokens (the bound above, recall 1)."""
+    return ranked.filter(
+        F.col("rk") <= F.col("__n") - F.ceil(F.lit(threshold) * F.col("__n")) + 1
+    )
+
+
+def _pair_cond(left: str, right: str, block_cols: list[str] | None):
+    cond = F.lit(True)
+    for c in block_cols or []:
+        cond = cond & (F.col(f"{left}.{c}") == F.col(f"{right}.{c}"))
+    return cond
+
+
+def _size_ratio_ok(left: str, right: str, threshold: float):
+    """Size-ratio prune (semantics-preserving): J(A,B) ≤ min(|A|,|B|) /
+    max(|A|,|B|), so pairs whose token-set sizes are too lopsided can
+    never reach the threshold — skip their intersect/union entirely."""
+    na, nb = F.col(f"{left}.__n"), F.col(f"{right}.__n")
+    return F.least(na, nb).cast("double") >= F.lit(threshold) * F.greatest(na, nb)
+
+
+def _jaccard_candidates(left: DataFrame, right: DataFrame, threshold: float,
+                        block_cols: list[str] | None, self_join: bool) -> DataFrame:
+    """Distinct (id_a, id_b) pairs of two prefix-posting frames that may
+    reach Jaccard ≥ threshold: a shared token inside both pair-dependent
+    prefixes, token-set sizes within the ratio bound, equal blocks. A
+    ``self_join`` keeps each unordered pair once, as id_a < id_b."""
+    pa, pb = left.alias("pa"), right.alias("pb")
+    # Pair-dependent tightening (classical prefix-filter theorem: if
+    # |A∩B| ≥ α, the SMALLEST common token lies within BOTH prefixes of
+    # length |·|−α+1): at join time both sizes are known, so α can be
+    # the pairwise ⌈t·max(|A|,|B|)⌉ instead of each side's static
+    # ⌈t·n⌉ — strictly fewer candidates, recall still 1.
+    alpha = F.ceil(F.lit(threshold) * F.greatest(F.col("pa.__n"), F.col("pb.__n")))
+    cond = F.col("pa.tok") == F.col("pb.tok")
+    if self_join:
+        cond = cond & (F.col("pa.id") < F.col("pb.id"))
+    cond = (
+        cond
+        & _pair_cond("pa", "pb", block_cols)
+        & _size_ratio_ok("pa", "pb", threshold)
+        & (F.col("pa.rk") <= F.col("pa.__n") - alpha + 1)
+        & (F.col("pb.rk") <= F.col("pb.__n") - alpha + 1)
+    )
+    return (
+        pa.join(pb, cond)
+        .select(F.col("pa.id").alias("id_a"), F.col("pb.id").alias("id_b"))
+        .distinct()
+    )
+
+
+def _jaccard_verified(cand: DataFrame, left: DataFrame, right: DataFrame,
+                      threshold: float) -> DataFrame:
+    """``cand``'s (id_a, id_b, ...) rows whose exact token-set Jaccard is
+    ≥ threshold, with it appended as ``jaccard``. ``left`` and ``right``
+    are the (id, toks, __n) frames that id_a and id_b index. toks are
+    distinct, so |A∪B| = |A|+|B|−|A∩B| — arithmetic instead of a second
+    array per pair."""
+    va = left.select(
+        F.col("id").alias("id_a"), F.col("toks").alias("__ta"), F.col("__n").alias("__na")
+    )
+    vb = right.select(
+        F.col("id").alias("id_b"), F.col("toks").alias("__tb"), F.col("__n").alias("__nb")
+    )
+    inter = F.size(F.array_intersect("__ta", "__tb"))
+    jaccard = inter.cast("double") / (F.col("__na") + F.col("__nb") - inter).cast("double")
+    return (
+        cand.join(va, "id_a")
+        .join(vb, "id_b")
+        .select(*cand.columns, jaccard.alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
+    )
 
 
 def exact_dup_groups(df: DataFrame) -> DataFrame:
@@ -115,16 +285,7 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
             ),
         ).alias("__sh"),
     )
-
-    def hash_with_seed(seed: int):
-        return lambda s: F.xxhash64(s, F.lit(seed))
-
-    return shingled.select(
-        "id",
-        F.array(
-            *[F.array_min(F.transform("__sh", hash_with_seed(i))) for i in range(num_hashes)]
-        ).alias("sig"),
-    )
+    return shingled.select("id", _minhash("__sh", num_hashes).alias("sig"))
 
 
 def banded_postings(sig: DataFrame, num_hashes: int = 32,
@@ -379,25 +540,12 @@ def ngram_jaccard_pairs(df: DataFrame, block_cols: list[str] | None = None,
     keep only when candidates ≫ true pairs (weak blocking); this corpus'
     source-blocking is already within 1.4× of the true-pair floor.
     """
-    tokens = F.transform(
-        F.array_distinct(F.split(normalize_text(F.col("text")), " ")),
-        lambda t: F.xxhash64(t),
-    )
-    base = df.select(
-        F.col("doc_id").alias("id"),
-        *[F.col(c) for c in (block_cols or [])],
-        tokens.alias("toks"),
-    ).withColumn("__n", F.size("toks"))
+    base = _token_base(df, block_cols, checkpoint=False)
     a, b = base.alias("a"), base.alias("b")
-    cond = F.col("a.id") < F.col("b.id")
-    for c in block_cols or []:
-        cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
-    # Size-ratio prune (semantics-preserving): J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|),
-    # so pairs whose token-set sizes are too lopsided can never reach the
-    # threshold — skip the O(|A|+|B|) intersect/union for them entirely.
-    cond = cond & (
-        F.least(F.col("a.__n"), F.col("b.__n")).cast("double")
-        >= F.lit(threshold) * F.greatest(F.col("a.__n"), F.col("b.__n"))
+    cond = (
+        (F.col("a.id") < F.col("b.id"))
+        & _pair_cond("a", "b", block_cols)
+        & _size_ratio_ok("a", "b", threshold)
     )
     # toks are distinct, so |A∪B| = |A|+|B|−|A∩B| — pure arithmetic
     # instead of materializing a second array per candidate pair.
@@ -431,19 +579,9 @@ def containment_pairs(df: DataFrame, block_cols: list[str] | None = None,
     Same hashed-token representation as :func:`ngram_jaccard_pairs`
     (xxhash64 longs, collision P < 1e-12 per pair).
     """
-    tokens = F.transform(
-        F.array_distinct(F.split(normalize_text(F.col("text")), " ")),
-        lambda t: F.xxhash64(t),
-    )
-    base = df.select(
-        F.col("doc_id").alias("id"),
-        *[F.col(c) for c in (block_cols or [])],
-        tokens.alias("toks"),
-    ).withColumn("__n", F.size("toks"))
+    base = _token_base(df, block_cols, checkpoint=False)
     a, b = base.alias("a"), base.alias("b")
-    cond = F.col("a.id") < F.col("b.id")
-    for c in block_cols or []:
-        cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
+    cond = (F.col("a.id") < F.col("b.id")) & _pair_cond("a", "b", block_cols)
     inter = F.size(F.array_intersect(F.col("a.toks"), F.col("b.toks")))
     # containee = smaller token set; equal sizes orient by id (a first).
     a_is_containee = F.col("a.__n") <= F.col("b.__n")
@@ -459,79 +597,6 @@ def containment_pairs(df: DataFrame, block_cols: list[str] | None = None,
         )
         .filter(F.col("containment") >= threshold)
     )
-
-
-# ---------------------------------------------------------------------------
-# Prefix-filtered candidate generation (the r8 scale fix)
-# ---------------------------------------------------------------------------
-#
-# The r8 sf1 audit (docs/SCALING_SF1.md) showed the fixed-cardinality
-# blocking above (source / label) going quadratic: block populations grow
-# with the corpus while the number of blocks does not, so per-block pairs
-# grow as n². PPJoin-style prefix filtering replaces the block key with a
-# CONTENT-derived bound: order each doc's tokens by ascending global
-# document frequency; a pair can reach the threshold only if it shares a
-# token inside both docs' short "prefix" of globally-rarest tokens, so
-# candidates concentrate on rare tokens and total candidate mass tracks
-# the TRUE-pair mass, not block². (r6 measured prefix filtering as a net
-# loss at sf0.1 where source blocking was within 1.4x of the true-pair
-# floor — both measurements stand; the crossover is the regime change
-# the audit exposed. Xiao et al., "Efficient Similarity Joins for Near
-# Duplicate Detection", WWW'08 — public algorithm.)
-#
-# Correctness of the filter (recall = 1, any global token order): if
-# |A∩B| ≥ ⌈t·|A|⌉, fewer than |A| − ⌈t·|A|⌉ + 1 of A's tokens are outside
-# B, so at least one of A's first |A| − ⌈t·|A|⌉ + 1 tokens (in ANY fixed
-# order) is shared. Verification is exact, so each engine may use its own
-# token order (Spark ranks xxhash64 longs, the DuckDB oracle ranks
-# strings) and still produce the identical final pair set.
-
-
-def _token_base(df: DataFrame, block_cols: list[str] | None = None,
-                checkpoint: bool = True) -> DataFrame:
-    """(id, [blocks], toks, __n) hashed distinct-token arrays.
-
-    ``checkpoint=True`` (default) truncates lineage so multi-consumer
-    plans (postings + both verify sides of the prefix-filter path)
-    don't re-tokenize per consumer. Single-pass consumers (the bounded
-    Arrow fast path, an immediate collect) pass ``checkpoint=False``:
-    the checkpoint would materialize the ENTIRE tokenized relation to
-    executor storage before the one pass, and its plan scans an
-    ExistingRDD where the uncheckpointed one scans parquet with a
-    ReadSchema of just doc_id, text and source."""
-    tokens = F.transform(
-        F.array_distinct(F.split(normalize_text(F.col("text")), " ")),
-        lambda t: F.xxhash64(t),
-    )
-    out = df.select(
-        F.col("doc_id").alias("id"),
-        *[F.col(c) for c in (block_cols or [])],
-        tokens.alias("toks"),
-    ).withColumn("__n", F.size("toks"))
-    # reused: postings + both verify sides
-    return materialise.checkpoint(out) if checkpoint else out
-
-
-def _df_ranked_postings(base: DataFrame,
-                        block_cols: list[str] | None = None) -> DataFrame:
-    """(id, __n, [blocks], tok, rk): tokens of each doc ranked by
-    ascending global document frequency (ties by token hash — any total
-    order works)."""
-    posting = base.select(
-        "id", "__n", *(block_cols or []), F.explode("toks").alias("tok")
-    )
-    tok_df = posting.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    return posting.join(tok_df, "tok").withColumn(
-        "rk",
-        F.row_number().over(Window.partitionBy("id").orderBy("df", "tok")),
-    )
-
-
-def _pair_cond(left: str, right: str, block_cols: list[str] | None):
-    cond = F.lit(True)
-    for c in block_cols or []:
-        cond = cond & (F.col(f"{left}.{c}") == F.col(f"{right}.{c}"))
-    return cond
 
 
 def prefix_filtered_jaccard_pairs(df: DataFrame,
@@ -556,51 +621,10 @@ def prefix_filtered_jaccard_pairs(df: DataFrame,
     move after the first projection.
     """
     base = _token_base(df, block_cols)
-    ranked = _df_ranked_postings(base, block_cols)
-    prefix = ranked.filter(
-        F.col("rk") <= F.col("__n") - F.ceil(F.lit(threshold) * F.col("__n")) + 1
-    )
-    pa, pb = prefix.alias("pa"), prefix.alias("pb")
-    # Pair-dependent tightening (classical prefix-filter theorem: if
-    # |A∩B| ≥ α, the SMALLEST common token lies within BOTH prefixes of
-    # length |·|−α+1): at join time both sizes are known, so α can be
-    # the pairwise ⌈t·max(|A|,|B|)⌉ instead of each side's static
-    # ⌈t·n⌉ — strictly fewer candidates, recall still 1.
-    alpha = F.ceil(
-        F.lit(threshold) * F.greatest(F.col("pa.__n"), F.col("pb.__n"))
-    )
-    cand = (
-        pa.join(
-            pb,
-            (F.col("pa.tok") == F.col("pb.tok"))
-            & (F.col("pa.id") < F.col("pb.id"))
-            & _pair_cond("pa", "pb", block_cols)
-            # size-ratio prune: J ≤ min/max, so lopsided pairs can't qualify
-            & (
-                F.least(F.col("pa.__n"), F.col("pb.__n")).cast("double")
-                >= F.lit(threshold)
-                * F.greatest(F.col("pa.__n"), F.col("pb.__n"))
-            )
-            & (F.col("pa.rk") <= F.col("pa.__n") - alpha + 1)
-            & (F.col("pb.rk") <= F.col("pb.__n") - alpha + 1),
-        )
-        .select(F.col("pa.id").alias("id_a"), F.col("pb.id").alias("id_b"))
-        .distinct()
-    )
-    va = base.select(
-        F.col("id").alias("id_a"), F.col("toks").alias("ta"), F.col("__n").alias("na")
-    )
-    vb = base.select(
-        F.col("id").alias("id_b"), F.col("toks").alias("tb"), F.col("__n").alias("nb")
-    )
-    inter = F.size(F.array_intersect(F.col("ta"), F.col("tb")))
-    jaccard = inter.cast("double") / (F.col("na") + F.col("nb") - inter).cast("double")
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select("id_a", "id_b", jaccard.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+    ranked, _ = _df_ranked_postings(base, block_cols)
+    prefix = _prefix(ranked, threshold)
+    cand = _jaccard_candidates(prefix, prefix, threshold, block_cols, self_join=True)
+    return _jaccard_verified(cand, base, base, threshold)
 
 
 def prefix_filtered_containment_pairs(df: DataFrame,
@@ -623,11 +647,8 @@ def prefix_filtered_containment_pairs(df: DataFrame,
     id.
     """
     base = _token_base(df, block_cols)
-    ranked = _df_ranked_postings(base, block_cols)
-    prefix = ranked.filter(
-        F.col("rk") <= F.col("__n") - F.ceil(F.lit(threshold) * F.col("__n")) + 1
-    )
-    pa, pb = prefix.alias("pa"), ranked.alias("pb")
+    ranked, _ = _df_ranked_postings(base, block_cols)
+    pa, pb = _prefix(ranked, threshold).alias("pa"), ranked.alias("pb")
     # Pair-dependent container prefix (both-prefixes theorem): with
     # α = ⌈t·|A|⌉ known at join time, the smallest common token must
     # also sit within the container's first |B|−α+1 tokens — prunes the
@@ -888,19 +909,11 @@ def build_incremental_index(corpus: DataFrame,
     the reloaded dict."""
     cbase = _token_base(corpus, block_cols)
     blocks = block_cols or []
-    cpost = cbase.select("id", "__n", *blocks, F.explode("toks").alias("tok"))
-    tok_df = cpost.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    cranked = cpost.join(tok_df, "tok").withColumn(
-        "rk", F.row_number().over(Window.partitionBy("id").orderBy("df", "tok"))
-    )
-    prefix = cranked.filter(
-        F.col("rk") <= F.col("__n") - F.ceil(F.lit(threshold) * F.col("__n")) + 1
-    ).select("id", "__n", *blocks, "tok", "rk")
-    arrays = cbase.select("id", "toks", "__n")
+    cranked, tok_df = _df_ranked_postings(cbase, blocks)
     return {
         "tok_df": tok_df,
-        "prefix": prefix,
-        "arrays": arrays,
+        "prefix": _prefix(cranked, threshold).select("id", "__n", *blocks, "tok", "rk"),
+        "arrays": cbase.select("id", "toks", "__n"),
         "threshold": threshold,
         "block_cols": list(blocks),
     }
@@ -941,59 +954,18 @@ def incremental_flags_from_index(index: dict[str, DataFrame], batch: DataFrame,
             "into the persisted prefix postings"
         )
     bbase = _token_base(batch, block_cols)
-    blocks = block_cols or []
-    tok_df = index["tok_df"]
-    bpost = bbase.select("id", "__n", *blocks, F.explode("toks").alias("tok"))
-    branked = (
-        bpost.join(tok_df, "tok", "left")
-        .withColumn("df", F.coalesce("df", F.lit(0)))
-        .withColumn(
-            "rk", F.row_number().over(Window.partitionBy("id").orderBy("df", "tok"))
-        )
+    branked, _ = _df_ranked_postings(bbase, block_cols, index["tok_df"])
+    cand = _jaccard_candidates(
+        _prefix(branked, threshold), index["prefix"], threshold, block_cols,
+        self_join=False,
     )
-    bprefix = branked.filter(
-        F.col("rk") <= F.col("__n") - F.ceil(F.lit(threshold) * F.col("__n")) + 1
-    )
-    pa, pb = bprefix.alias("pa"), index["prefix"].alias("pb")
-    alpha = F.ceil(
-        F.lit(threshold) * F.greatest(F.col("pa.__n"), F.col("pb.__n"))
-    )
-    cand = (
-        pa.join(
-            pb,
-            (F.col("pa.tok") == F.col("pb.tok"))
-            & _pair_cond("pa", "pb", block_cols)
-            & (
-                F.least(F.col("pa.__n"), F.col("pb.__n")).cast("double")
-                >= F.lit(threshold)
-                * F.greatest(F.col("pa.__n"), F.col("pb.__n"))
-            )
-            & (F.col("pa.rk") <= F.col("pa.__n") - alpha + 1)
-            & (F.col("pb.rk") <= F.col("pb.__n") - alpha + 1),
-        )
-        .select(F.col("pa.id").alias("batch_id"), F.col("pb.id").alias("corpus_id"))
-        .distinct()
-    )
-    va = bbase.select(
-        F.col("id").alias("batch_id"), F.col("toks").alias("ta"), F.col("__n").alias("na")
-    )
-    vb = index["arrays"].select(
-        F.col("id").alias("corpus_id"), F.col("toks").alias("tb"), F.col("__n").alias("nb")
-    )
-    inter = F.size(F.array_intersect(F.col("ta"), F.col("tb")))
-    jaccard = inter.cast("double") / (F.col("na") + F.col("nb") - inter).cast("double")
-    matches = (
-        cand.join(va, "batch_id")
-        .join(vb, "corpus_id")
-        .select("batch_id", jaccard.alias("j"))
-        .filter(F.col("j") >= threshold)
-    )
-    per_doc = matches.groupBy("batch_id").agg(
-        F.count(F.lit(1)).alias("n_matches"), F.max("j").alias("best_jaccard")
+    matches = _jaccard_verified(cand, bbase, index["arrays"], threshold)
+    per_doc = matches.groupBy("id_a").agg(
+        F.count(F.lit(1)).alias("n_matches"), F.max("jaccard").alias("best_jaccard")
     )
     batch_ids = bbase.select("id")
     return (
-        batch_ids.join(per_doc, batch_ids["id"] == per_doc["batch_id"], "left")
+        batch_ids.join(per_doc, batch_ids["id"] == per_doc["id_a"], "left")
         .select(
             "id",
             F.coalesce("n_matches", F.lit(0)).alias("n_matches"),
@@ -1172,8 +1144,9 @@ def lsh_dedup_clusters(df: DataFrame, threshold: float = 0.6,
     base = all_base.join(grp.select(F.col("rep").alias("id")), "id", "left_semi")
     nodes = grp.select(F.col("rep").alias("id"))
 
-    # Stage 1 — signatures + banded postings (checkpointed: reused by
-    # the spanning edges and the exhaustive cross-component verify). At
+    # Stage 1 — signatures + banded postings. Only the banded postings
+    # are checkpointed (reused by the spanning edges and the exhaustive
+    # cross-component verify): they are the signature's one reader. At
     # shingle_n=1 the signature is a pure function of the
     # DISTINCT-token-hash array the contraction already
     # checkpointed (min over duplicates = min over distinct, and
@@ -1182,42 +1155,19 @@ def lsh_dedup_clusters(df: DataFrame, threshold: float = 0.6,
     # instead of re-tokenizing the reps' text — one whole
     # normalize/split/hash scan saved (bit-identical signatures for
     # every doc with tokens).
-    def _seeded(seed: int):
-        return lambda s: F.xxhash64(s, F.lit(seed))
-
     # Token-less docs (__n NULL or 0) are excluded STRUCTURALLY here —
     # no signature, no banded posting, no stage-2/3 membership — so
     # their singleton-ness never depends on NULL/NaN semantics of the
     # verify expression or the session's sizeOfNull setting (r12
     # ADVICE). They remain in ``nodes`` and close as singletons.
-    shing = base.filter(F.col("__n") > 0).select(
+    sig = base.filter(F.col("__n") > 0).select(
         "id", F.transform("toks", lambda x: F.xxhash64(x)).alias("__sh")
-    )
-    sig = materialise.checkpoint(
-        shing.select(
-            "id",
-            F.array(
-                *[
-                    F.array_min(F.transform("__sh", _seeded(i)))
-                    for i in range(num_hashes)
-                ]
-            ).alias("sig"),
-        )
-    )
+    ).select("id", _minhash("__sh", num_hashes).alias("sig"))
     banded = materialise.checkpoint(banded_postings(sig, num_hashes, bands))
 
     # Stage 2 — spanning edges: each bucket member pairs with the
     # bucket's per_node_cap smallest ids; exact-Jaccard verify is the
     # only per-pair array join, over ≤ bands·cap·n rows.
-    va = base.select(
-        F.col("id").alias("id_a"), F.col("toks").alias("ta"), F.col("__n").alias("vna")
-    )
-    vb = base.select(
-        F.col("id").alias("id_b"), F.col("toks").alias("tb"), F.col("__n").alias("vnb")
-    )
-    inter = F.size(F.array_intersect(F.col("ta"), F.col("tb")))
-    jaccard = inter.cast("double") / (F.col("vna") + F.col("vnb") - inter).cast("double")
-
     wb = Window.partitionBy("band", "bucket").orderBy("id")
     ranked = banded.withColumn("__rk", F.row_number().over(wb))
     anchors = ranked.filter(F.col("__rk") <= per_node_cap).select(
@@ -1229,11 +1179,8 @@ def lsh_dedup_clusters(df: DataFrame, threshold: float = 0.6,
         .select("id_a", F.col("id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    edges1 = (
-        stars.join(va, "id_a")
-        .join(vb, "id_b")
-        .filter(jaccard >= F.lit(threshold))
-        .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+    edges1 = _jaccard_verified(stars, base, base, threshold).select(
+        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     )
     comp = materialise.checkpoint(connected_components(nodes, edges1))
 
@@ -1262,10 +1209,7 @@ def lsh_dedup_clusters(df: DataFrame, threshold: float = 0.6,
             & (F.col("a.bucket") == F.col("b.bucket"))
             & (F.col("a.id") < F.col("b.id"))
             & (F.col("a.component") != F.col("b.component"))
-            & (
-                F.least(F.col("a.__n"), F.col("b.__n")).cast("double")
-                >= F.lit(threshold) * F.greatest(F.col("a.__n"), F.col("b.__n"))
-            ),
+            & _size_ratio_ok("a", "b", threshold),
         )
         .select(
             F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
@@ -1274,9 +1218,7 @@ def lsh_dedup_clusters(df: DataFrame, threshold: float = 0.6,
         .dropDuplicates(["id_a", "id_b"])
     )
     merges = (
-        cross.join(va, "id_a")
-        .join(vb, "id_b")
-        .filter(jaccard >= F.lit(threshold))
+        _jaccard_verified(cross, base, base, threshold)
         .select(F.col("__ca").alias("src"), F.col("__cb").alias("dst"))
         .distinct()
     )
@@ -1292,7 +1234,7 @@ def lsh_dedup_clusters(df: DataFrame, threshold: float = 0.6,
         ).select("id", F.col("__new").alias("component"))
     )
     final_comp.count()  # materialize before releasing the parents
-    materialise.release(comp, banded, sig)
+    materialise.release(comp, banded)
 
     # Expand representatives back to members (ids-only join). The
     # component label is the min doc id over the component's REPS,

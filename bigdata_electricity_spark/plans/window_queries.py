@@ -1295,7 +1295,7 @@ def intervals_copresence_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     intervals = (
         sess.groupBy("user_id", "session_id")
         .agg(
-            # ts is NTZ from the nanos loader; NTZ->ts cast is tz-free under
+            # ts is NTZ from the events loader; NTZ->ts cast is tz-free under
             # the pinned UTC session (events_user_gaps idiom)
             F.unix_micros(F.min("ts").cast("timestamp")).alias("s_us"),
             F.unix_micros(F.max("ts").cast("timestamp")).alias("e_us"),

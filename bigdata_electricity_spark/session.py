@@ -28,10 +28,11 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # events.parquet carries TIMESTAMP(NANOS). Spark ≤4.0 rejects it
-    # unless read as epoch-nanos long (this flag); Spark 4.1+ ignores the
-    # flag and reads nanos natively as TIMESTAMP_NTZ (truncated to µs).
-    # Loaders and the streaming source handle BOTH shapes.
+    # Every testdata drop stores events.ts as TIMESTAMP(MICROS), read
+    # natively as timestamp_ntz. A TIMESTAMP(NANOS) column needs this
+    # flag: Spark 4.1 then reads it as epoch-nanos bigint, which
+    # loaders.events_ts_to_timestamp converts, and without it fails the
+    # read with PARQUET_TYPE_ILLEGAL.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Arrow for pandas_udf / mapInPandas / toPandas paths.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
@@ -50,8 +51,8 @@ def configure(spark: SparkSession) -> SparkSession:
         try:
             spark.conf.set(key, value)
         except Exception:
-            # Non-settable in this deployment — proceed; loaders have
-            # fallbacks (e.g. arrow read for nanos timestamps).
+            # Non-settable in this deployment — proceed with its value
+            # (with nanosAsLong off, a NANOS column fails its read loudly).
             pass
     return spark
 

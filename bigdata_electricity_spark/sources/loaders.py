@@ -53,21 +53,6 @@ class TableEntry:
     def dtypes(self) -> dict[str, str]:
         return {f.name: f.dataType.simpleString() for f in self.schema.fields}
 
-    def assert_ts_is_parquet_nanos(self) -> None:
-        """Pin the events-ts unit contract before dividing by 1000.
-
-        The bigint fallback exists because ``nanosAsLong`` surfaces
-        parquet TIMESTAMP(NANOS) as epoch-nanos longs. But a bigint dtype
-        alone doesn't prove the unit: a regenerated testdata drop that
-        wrote plain INT64 epoch-MICROS would also arrive as bigint, and
-        the ÷1000 would silently shift every event-time window by 1000×.
-        The catalog read every part file's footer (metadata only, no data
-        pages); anything but timestamp[ns] is a loud contract failure,
-        not a guess.
-        """
-        if self.ts_error is not None:
-            raise ValueError(self.ts_error)
-
 
 # (absolute path, nanosAsLong value) -> (part files' (path, size, mtime), entry)
 _CATALOG: dict[tuple[str, str | None], tuple[tuple, TableEntry]] = {}
@@ -156,15 +141,29 @@ def parquet_row_count(spark: SparkSession, path: str) -> int:
     return table_entry(spark, path).rows
 
 
-def _events_ts_to_timestamp(df: DataFrame) -> DataFrame:
-    """Convert the epoch-nanos ``ts`` long to a UTC-naive timestamp.
+def events_ts_to_timestamp(df: DataFrame, entry: TableEntry) -> DataFrame:
+    """The events ``ts`` column as a UTC-naive timestamp — the one
+    conversion both the batch loader and the stream reader apply.
 
-    events.parquet stores TIMESTAMP(NANOS); with
-    ``spark.sql.legacy.parquet.nanosAsLong`` the column arrives as bigint
-    epoch-nanos. Truncate to micros (Spark timestamp precision) and cast
-    to timestamp_ntz so downstream hour()/to_date() are timezone-free and
-    match the DuckDB oracle's naive TIMESTAMP_NS semantics.
+    Every testdata drop stores ``ts`` as parquet TIMESTAMP(MICROS), not
+    adjusted to UTC, which Spark reads as timestamp_ntz: nothing to
+    convert. A TIMESTAMP(NANOS) column arrives as bigint epoch-nanos
+    under ``spark.sql.legacy.parquet.nanosAsLong`` (without the flag,
+    Spark 4.1 fails the read with PARQUET_TYPE_ILLEGAL). That bigint is
+    truncated to micros (Spark's timestamp precision) and cast to
+    timestamp_ntz, so downstream hour()/to_date() are timezone-free and
+    match the DuckDB oracle's naive timestamps.
+
+    A bigint dtype alone does not prove the unit: a drop that wrote plain
+    INT64 epoch-MICROS would also arrive as bigint, and the ÷1000 would
+    silently shift every event-time window by 1000×. The catalog read
+    every part file's footer (metadata only, no data pages); anything
+    but timestamp[ns] is a loud contract failure, not a guess.
     """
+    if entry.dtypes.get("ts") != "bigint":
+        return df
+    if entry.ts_error is not None:
+        raise ValueError(entry.ts_error)
     return df.withColumn(
         "ts",
         F.timestamp_micros(F.floor(F.col("ts") / F.lit(1000)).cast("long")).cast("timestamp_ntz"),
@@ -189,9 +188,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.schema(entry.schema).parquet(path)
     if _is_single_split(spark, entry.parts, entry.bytes):
         df = df.coalesce(1)
-    if name == "events" and entry.dtypes.get("ts") == "bigint":
-        entry.assert_ts_is_parquet_nanos()
-        df = _events_ts_to_timestamp(df)
+    if name == "events":
+        df = events_ts_to_timestamp(df, entry)
     return df
 
 

@@ -18,37 +18,25 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..sources.loaders import table_entry
+from ..sources.loaders import events_ts_to_timestamp, table_entry
 
 _COUNTER = itertools.count()
 
 
 def _read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the static events parquet (schema pinned from the
-    table catalog; ts arrives as epoch-nanos long under nanosAsLong)."""
+    """readStream over the static events parquet: schema pinned from the
+    table catalog, ``ts`` converted as :func:`load_table` converts it."""
     entry = table_entry(spark, f"{sf_dir}/events.parquet")
     stream = (
         spark.readStream.schema(entry.schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    ts_type = entry.dtypes.get("ts")
-    if ts_type == "bigint":
-        # Same unit contract as load_table: a bigint ts must be parquet
-        # TIMESTAMP(NANOS), never plain INT64 micros shifted 1000×.
-        entry.assert_ts_is_parquet_nanos()
-        # Plain TIMESTAMP (not NTZ): watermarks require TIMESTAMP event
-        # time; session tz is pinned UTC so wall-clock output matches.
-        stream = stream.withColumn(
-            "ts",
-            F.timestamp_micros(F.floor(F.col("ts") / F.lit(1000)).cast("long")),
-        )
-    elif ts_type == "timestamp_ntz":
-        # Spark ≥4.1 reads parquet TIMESTAMP(NANOS) natively as NTZ, but
-        # EventTimeWatermark still demands plain TIMESTAMP — cast is
-        # wall-clock-preserving under the UTC session tz configure() pins.
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    # Watermarks need plain TIMESTAMP event time, not timestamp_ntz; the
+    # cast keeps the wall clock under the UTC session tz configure() pins.
+    return events_ts_to_timestamp(stream, entry).withColumn(
+        "ts", F.col("ts").cast("timestamp")
+    )
 
 
 def _run_to_completion(result, name: str, mode: str = "complete") -> None:

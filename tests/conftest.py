@@ -56,6 +56,10 @@ DEFAULT_TIER_ENTRIES = {
     "text_bigram_pmi", "dedup_cc_clusters", "dedup_cc_clusters_prefix",
     "graph_label_propagation", "intervals_max_concurrency",
     "events_rolling_7d_distinct_users", "events_rolling_7d_distinct_users_sketch",
+    # entries behind the shared token-set pipeline of operators/dedup.py
+    "dedup_ngram_jaccard", "dedup_ngram_jaccard_prefix", "dedup_containment_best",
+    "dedup_containment_best_prefix", "dedup_incremental_batch",
+    "streaming_incremental_dedup", "dedup_index_roundtrip",
 }
 
 

@@ -60,11 +60,11 @@ def test_locf_carries_and_preserves_leading_nulls(spark, tmp_path):
         (3, nanos(datetime(2024, 1, 4, 9)), 1, "view", 40.0, "{}"),
         (4, nanos(datetime(2024, 1, 3, 9)), 2, "view", 7.0, "{}"),
     ]
-    # The registry fn loads events from parquet; write the fixture in
-    # the same shape as the testdata: a real parquet TIMESTAMP(NANOS)
-    # column (via pyarrow — Spark can't write nanos), which the loader's
-    # r9 unit contract now REQUIRES before treating bigint ts as nanos
-    # (a raw int64 column is refused, by design).
+    # The registry fn loads events from parquet; write the fixture as a
+    # real parquet TIMESTAMP(NANOS) column (via pyarrow — Spark can't
+    # write nanos), which the loader's r9 unit contract REQUIRES before
+    # treating bigint ts as nanos (a raw int64 column is refused, by
+    # design).
     import pyarrow as pa
     import pyarrow.parquet as pq
 

@@ -42,8 +42,9 @@ def test_events_ts_unit_contract_both_units(spark, tmp_path):
 
     base_us = 1_700_000_000_000_000  # 2023-11-14T22:13:20 epoch-micros
 
-    # Stage 1: TIMESTAMP(NANOS) — the shipped contract. Must load and
-    # land on the exact micro-truncated timestamps.
+    # Stage 1: TIMESTAMP(NANOS), read as epoch-nanos bigint under
+    # nanosAsLong. Must load and land on the exact micro-truncated
+    # timestamps.
     ns_dir = tmp_path / "ns"
     ns_dir.mkdir()
     pq.write_table(
@@ -59,6 +60,21 @@ def test_events_ts_unit_contract_both_units(spark, tmp_path):
     assert dict(df.dtypes)["ts"].startswith("timestamp")
     got = sorted(r["ts"].isoformat() for r in df.select("ts").collect())
     assert got == ["2023-11-14T22:13:20.000001", "2023-11-14T22:13:20.000002"]
+    # The stream reader shares the conversion: the same file streams to
+    # the same instants, as the plain TIMESTAMP watermarks need.
+    from pyspark.sql import functions as F
+
+    from bigdata_electricity_spark.streaming.event_windows import (
+        _read_events_stream,
+        _run_to_completion,
+    )
+
+    stream = _read_events_stream(spark, str(ns_dir))
+    assert dict(stream.dtypes)["ts"] == "timestamp"
+    _run_to_completion(stream.select(F.unix_micros("ts").alias("us")),
+                       "events_ts_nanos_stream", mode="append")
+    got_us = sorted(r["us"] for r in spark.table("events_ts_nanos_stream").collect())
+    assert got_us == [base_us + 1, base_us + 2]
 
     # Stage 2: plain INT64 epoch-MICROS — same bigint dtype in Spark,
     # wrong unit. The loader must refuse, not divide by 1000.
@@ -75,8 +91,9 @@ def test_events_ts_unit_contract_both_units(spark, tmp_path):
     with pytest.raises(ValueError, match="timestamp\\[ns\\]"):
         load_table(spark, str(us_dir), "events")
 
-    # Stage 3: TIMESTAMP(MICROS) — arrives as a real timestamp (the
-    # nanosAsLong flag only affects NANOS), no conversion path at all.
+    # Stage 3: TIMESTAMP(MICROS), as every testdata drop stores it —
+    # arrives as a real timestamp (the nanosAsLong flag only affects
+    # NANOS), no conversion path at all.
     us2_dir = tmp_path / "us2"
     us2_dir.mkdir()
     pq.write_table(
