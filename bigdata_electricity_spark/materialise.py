@@ -24,6 +24,9 @@ be recomputed once its blocks are gone, so an entry's checkpoints live
 until its consumer's owner closes, and a weakref finalizer may release
 caches only (Spark recomputes them).
 
+A registry build that materialises (changes :data:`made`) is never
+plan-cached: its plan reads blocks that its consumer's owner frees.
+
 ``DataFrame.unpersist()`` frees nothing on a local checkpoint: what is
 persisted is the RDD under the returned frame's ``LogicalRDD``, not a
 cached plan. :func:`release` unpersists that RDD. It is registered when
@@ -43,6 +46,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 LEVEL = StorageLevel.MEMORY_AND_DISK  # serialized: deserialized=False
+made = 0  # frames materialised so far in this process
 
 
 class Owner:
@@ -76,6 +80,8 @@ class Owner:
 
 
 def _held(df: DataFrame) -> DataFrame:
+    global made
+    made += 1
     stack = vars(Owner._open).get("stack")
     if stack:
         stack[-1]._held.append(df)

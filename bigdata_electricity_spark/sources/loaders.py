@@ -23,6 +23,7 @@ Catalyst for free; the loaders never cache or collect.
 from __future__ import annotations
 
 import os
+import threading
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -56,6 +57,8 @@ class TableEntry:
 
 # (absolute path, nanosAsLong value) -> (part files' (path, size, mtime), entry)
 _CATALOG: dict[tuple[str, str | None], tuple[tuple, TableEntry]] = {}
+# .reads: (path, stamp) of each table served to this thread's registry build
+_served = threading.local()
 
 
 def _part_files(path: str) -> list[str]:
@@ -69,6 +72,11 @@ def _part_files(path: str) -> list[str]:
         parts += [os.path.join(root, f) for f in sorted(files)
                   if f.endswith(".parquet") and not f.startswith(("_", "."))]
     return parts
+
+
+def _stamp(path: str) -> tuple:
+    """The table version: each part file's (path, size, mtime)."""
+    return tuple((p, (st := os.stat(p)).st_size, st.st_mtime_ns) for p in _part_files(path))
 
 
 def _read_footers(parts: list[str], ts_is_long: bool) -> tuple[int, str | None]:
@@ -103,17 +111,17 @@ def table_entry(spark: SparkSession, path: str) -> TableEntry:
     on its next read. Entries live as long as the Python process.
     """
     path = os.path.abspath(path)
-    parts = _part_files(path)
-    stats = [os.stat(p) for p in parts]
-    stamp = tuple((p, st.st_size, st.st_mtime_ns) for p, st in zip(parts, stats))
+    stamp = _stamp(path)
+    if getattr(_served, "reads", None) is not None:
+        _served.reads.append((path, stamp))
     key = (path, spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None))
     cached = _CATALOG.get(key)
     if cached is not None and cached[0] == stamp:
         return cached[1]
     schema = spark.read.parquet(path).schema
     ts_is_long = "ts" in schema.fieldNames() and schema["ts"].dataType.simpleString() == "bigint"
-    rows, ts_error = _read_footers(parts, ts_is_long)
-    entry = TableEntry(schema, rows, sum(s for _, s, _ in stamp), len(parts), ts_error)
+    rows, ts_error = _read_footers([p for p, _, _ in stamp], ts_is_long)
+    entry = TableEntry(schema, rows, sum(s for _, s, _ in stamp), len(stamp), ts_error)
     _CATALOG[key] = (stamp, entry)
     return entry
 

@@ -130,12 +130,16 @@ def distributed_plans():
     that Spark reads as one split as one partition, so at sf0.001 and at
     fixture sizes the planner drops the exchanges the plan-shape guards
     check. Turning the rule off makes those modules inspect the
-    distributed plan (every exchange in place) at test-data sizes.
+    distributed plan (every exchange in place) at test-data sizes. The
+    registry's plan cache does not key on the patched rule, so the
+    fixture gives it an empty cache of its own for its scope.
     """
+    from bigdata_electricity_spark.plans import registry
     from bigdata_electricity_spark.sources import loaders
 
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(loaders, "_is_single_split", lambda spark, parts, nbytes: False)
+        mp.setattr(registry, "_PLANS", {})
         yield
 
 
