@@ -15,7 +15,7 @@ itself distributed).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 def kmeans_cluster_sizes(embeddings: DataFrame, k: int = 8, seed: int = 42) -> DataFrame:
@@ -37,19 +37,19 @@ def kmeans_cluster_sizes(embeddings: DataFrame, k: int = 8, seed: int = 42) -> D
     )
 
 
-def lloyd_dataframe(points: DataFrame, seed_ids: list[int], iters: int = 2) -> DataFrame:
+def lloyd_dataframe(points: DataFrame, dim: int, seed_ids: list[int], iters: int) -> DataFrame:
     """K-means Lloyd iterations over ``(vec_id, v)`` points as PURE
     DataFrame operations — no pyspark.ml, no RNG: centroids seed from
     fixed point ids, each round is (broadcast centroids → per-point
-    argmin by squared L2 → per-dimension mean), unrolled ``iters`` times
-    into one lazy plan.
+    nearest centroid by squared L2 → per-dimension mean), unrolled
+    ``iters`` times into one lazy plan.
 
     FIXED-DIM REQUIREMENT (r10 ADVICE): the unrolled distance reads
     exactly ``dim`` elements per vector, so every vector must have the
     table's one constant dimension — a longer vector is silently
     truncated to ``dim`` terms, a shorter one contributes NULL d2
-    (non-ANSI element_at). ``dim`` is sampled from one arbitrary row (a
-    limit-1 Spark job at plan-construction time).
+    (non-ANSI element_at). Callers read ``dim`` from the parquet
+    footers (``loaders.vector_dim``), so building the plan runs no job.
 
     Determinism contract (what makes this oracle-checkable when
     `ml_kmeans_embeddings` is rows-only): seeding is by id, argmin ties
@@ -58,51 +58,38 @@ def lloyd_dataframe(points: DataFrame, seed_ids: list[int], iters: int = 2) -> D
     centroids and partial-aggregation reorder noise (~1e-13) can never
     flip an assignment.
 
-    Returns (id, cid, d2) after the final assignment. Scale shape: the
-    per-round shuffle is the k-row centroid broadcast + one groupBy
-    (cid, dim) over exploded dims — dims are (long, long, double)
-    triples, never whole vectors; iterations multiply plan depth, not
-    data size (chain localCheckpoint for iters ≫ 5).
+    Returns (id, cid, d2) after the final assignment. Scale shape: each
+    round broadcasts the k centroids, assigns every point with the IVF's
+    own map-side ``operators.similarity.nearest_centroid`` (vectors
+    rejoin for the n winners only) and runs one groupBy (cid, dim) over
+    exploded dims — (long, long, double) triples, never whole vectors;
+    iterations multiply plan depth, not data size (chain
+    localCheckpoint for iters ≫ 5).
     """
-    assigned, _ = _lloyd_rounds(points, seed_ids, iters)
-    return assigned.select("id", "cid", "d2")
+    assigned, _ = _lloyd_rounds(points, dim, seed_ids, iters)
+    return assigned.select(F.col("vec_id").alias("id"), "cid", "d2")
 
 
-def lloyd_centroids(points: DataFrame, seed_ids: list[int], iters: int = 1) -> DataFrame:
+def lloyd_centroids(points: DataFrame, dim: int, seed_ids: list[int], iters: int) -> DataFrame:
     """(cid, c): centroids AFTER ``iters`` Lloyd updates, same
     determinism contract as :func:`lloyd_dataframe` (id seeding, cid
     tie-break, 1e-9 rounding per update) — the trained coarse quantizer
     the IVF similarity path probes against. Same fixed-dim requirement."""
-    _, cent = _lloyd_rounds(points, seed_ids, iters)
+    _, cent = _lloyd_rounds(points, dim, seed_ids, iters)
     return cent
 
 
-def _lloyd_rounds(points: DataFrame, seed_ids: list[int], iters: int):
-    from ..functions.vectors import embedding_dim, squared_l2_unrolled
+def _lloyd_rounds(points: DataFrame, dim: int, seed_ids: list[int], iters: int):
+    from ..operators.similarity import nearest_centroid
 
     cent = points.filter(F.col("vec_id").isin(seed_ids)).select(
         F.col("vec_id").alias("cid"), F.col("v").alias("c")
     )
-    # Unrolled fixed-dim d2 (r10): the HOF fold is CodegenFallback —
-    # interpreted per scored row; unrolling is bit-identical (same
-    # left-assoc double adds — functions/vectors.py rationale), so the
-    # 1e-9-rounded determinism contract is untouched.
-    dim = embedding_dim(points, "v")
     assigned = None
     for _ in range(iters):
-        joined = points.crossJoin(F.broadcast(cent)).select(
-            F.col("vec_id").alias("id"),
-            "v",
-            "cid",
-            squared_l2_unrolled(F.col("v"), F.col("c"), dim).alias("d2"),
-        )
-        w = Window.partitionBy("id").orderBy("d2", "cid")
-        assigned = (
-            joined.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        dims = assigned.select("cid", F.posexplode("v").alias("i", "x"))
+        assigned = nearest_centroid(points, cent, dim)
+        dims = assigned.join(points, "vec_id").select(
+            "cid", F.posexplode("v").alias("i", "x"))
         cent = (
             dims.groupBy("cid", "i")
             .agg((F.floor(F.avg("x") * 1e9 + F.lit(0.5)) / 1e9).alias("m"))

@@ -8,9 +8,15 @@ assignment) so the pairwise work is per-bucket, never all-pairs.
 Vector math uses higher-order functions (functions/vectors.py) — JVM-side
 double accumulation, no Arrow boundary on the hot path.
 
+One coarse quantizer serves every IVF, triangle and k-means entry, in
+three steps over ``(vec_id, v)`` points: :func:`seed_centroids` (the
+``nlist`` smallest ids), :func:`nearest_centroid` (each point's nearest
+centroid, ties to the smallest cid) and :func:`probe_lists` (each
+query's ``nprobe`` nearest centroids).
+
 The search operators read the embeddings table's ``vec_id`` and
-``embedding`` columns; the IVF build/serve pair reads ``vec_id`` and the
-pre-cast ``v`` vector.
+``embedding`` columns; the quantizer and the IVF build/serve pair read
+``vec_id`` and the pre-cast ``v`` vector.
 """
 
 from __future__ import annotations
@@ -20,7 +26,15 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..functions.vectors import cosine_similarity, dot_product, l2_norm, unit_vector
+from ..functions.vectors import (
+    cosine_similarity,
+    dot_product,
+    dot_product_unrolled,
+    l2_norm,
+    l2_norm_unrolled,
+    squared_l2_unrolled,
+    unit_vector,
+)
 
 
 def _unit_base(embeddings: DataFrame, bucket_col: str) -> DataFrame:
@@ -272,6 +286,74 @@ def brute_force_topk_arrow(embeddings: DataFrame, query_vec_id: int, k: int = 10
 
 
 # ---------------------------------------------------------------------------
+# The coarse quantizer: one seeding, one assignment, one probe
+# ---------------------------------------------------------------------------
+#
+# Each oracle replicates these steps as ``ROW_NUMBER() OVER (... ORDER BY
+# d2, cid)`` over the same d2 values.
+
+
+def seed_centroids(points: DataFrame, nlist: int) -> DataFrame:
+    """(cid, c): the ``nlist`` smallest ``vec_id``s of ``(vec_id, v)``
+    points as centroids — deterministic, engine-portable, and a
+    TakeOrdered bounded by ``nlist``."""
+    return (
+        points.orderBy("vec_id")
+        .limit(nlist)
+        .select(F.col("vec_id").alias("cid"), F.col("v").alias("c"))
+    )
+
+
+def nearest_centroid(points: DataFrame, cent: DataFrame, dim: int) -> DataFrame:
+    """(vec_id, cid, d2): each ``(vec_id, v)`` point's nearest ``(cid, c)``
+    centroid, ties to the smallest cid.
+
+    min(struct(d2, cid)) picks the lexicographic minimum of the same
+    (d2, cid) values a ``ROW_NUMBER`` over ``(d2, cid)`` ranks first, but
+    the aggregate combines MAP-SIDE: the n×nlist scored stream never
+    shuffles, and a caller that needs the vectors rejoins them for the
+    n winners only (the window form shuffled every scored row with its
+    vector — ~90 GB at 500k vectors, r10).
+
+    Unrolled fixed-dim d2 (r10): the HOF fold is CodegenFallback, so the
+    n×nlist assignment walked an interpreted tree per scored row —
+    measured 22.5 -> 2.9 s at sf1f. Unrolling is bit-identical (same
+    left-assoc double adds, functions/vectors.py), so every oracled
+    assignment and the Lloyd rounds' 1e-9-rounded contract are
+    untouched. ``dim`` is the points' one constant dimension."""
+    return (
+        points.crossJoin(F.broadcast(cent))
+        .select(
+            "vec_id", "cid",
+            squared_l2_unrolled(F.col("v"), F.col("c"), dim).alias("d2"),
+        )
+        .groupBy("vec_id")
+        .agg(F.min(F.struct("d2", "cid")).alias("__m"))
+        .select("vec_id", "__m.cid", "__m.d2")
+    )
+
+
+def probe_lists(queries: DataFrame, cent: DataFrame, nprobe: int, dim: int) -> DataFrame:
+    """(qid, cid): each ``(vec_id, v)`` query's ``nprobe`` nearest
+    centroids, ranked by (d2, cid). ``v`` is dropped before the ranking,
+    so it runs on skinny rows; any other query column rides along (a
+    caller scoring a few queries attaches their vectors here rather
+    than joining them back)."""
+    rest = [c for c in queries.columns if c not in ("vec_id", "v")]
+    w = Window.partitionBy("qid").orderBy("d2", "cid")
+    return (
+        queries.crossJoin(F.broadcast(cent))
+        .select(
+            F.col("vec_id").alias("qid"), "cid", *rest,
+            squared_l2_unrolled(F.col("v"), F.col("c"), dim).alias("d2"),
+        )
+        .withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= nprobe)
+        .select("qid", "cid", *rest)
+    )
+
+
+# ---------------------------------------------------------------------------
 # IVF index as a persistable build/serve pair (r10 VERDICT task 3)
 # ---------------------------------------------------------------------------
 #
@@ -334,32 +416,20 @@ def build_ivf_index(corpus: DataFrame, nlist: int, dim: int, par: int,
     Without the hint behavior is unchanged (callers at bench SFs are
     nowhere near the cliff).
     """
-    from ..functions.vectors import l2_norm_unrolled, squared_l2_unrolled
-
     if n_corpus is not None:
         par = assignment_partitions(par, n_corpus, nlist)
+    cent = seed_centroids(corpus, nlist)
+    lists = _inverted_lists(corpus.repartition(par, "vec_id"), cent, dim)
+    return {"cent": cent, "lists": lists, "nlist": nlist, "dim": dim}
 
-    cent = (
-        corpus.orderBy("vec_id")
-        .limit(nlist)
-        .select(F.col("vec_id").alias("cid"), F.col("v").alias("c"))
-    )
-    corpus_p = corpus.repartition(par, "vec_id")
-    assign = (
-        corpus_p.crossJoin(F.broadcast(cent))
-        .select(
-            "vec_id", "cid",
-            squared_l2_unrolled(F.col("v"), F.col("c"), dim).alias("d2"),
-        )
-        .groupBy("vec_id")
-        .agg(F.min(F.struct("d2", "cid")).alias("__m"))
-        .select("vec_id", F.col("__m.cid").alias("cid"))
-    )
-    lists = corpus_p.join(assign, "vec_id").select(
+
+def _inverted_lists(points: DataFrame, cent: DataFrame, dim: int) -> DataFrame:
+    """(id, cid, v, nv): every point in its nearest centroid's list, its
+    L2 norm precomputed ONCE so serving pays a single dot per candidate."""
+    return points.join(nearest_centroid(points, cent, dim), "vec_id").select(
         F.col("vec_id").alias("id"), "cid", "v",
         l2_norm_unrolled(F.col("v"), dim).alias("nv"),
     )
-    return {"cent": cent, "lists": lists, "nlist": nlist, "dim": dim}
 
 
 def serve_ivf_topk(index: dict, batch: DataFrame, k: int = 3,
@@ -395,27 +465,12 @@ def serve_ivf_topk(index: dict, batch: DataFrame, k: int = 3,
     roundtrip pytest forces threshold=0 and asserts no batch-side
     BroadcastExchange survives in the plan). The centroid table stays
     broadcast on both paths: it is √n-bounded by construction."""
-    from ..functions.vectors import (
-        dot_product_unrolled,
-        l2_norm_unrolled,
-        squared_l2_unrolled,
-    )
-
     dim = index["dim"]
     cent, lists = index["cent"], index["lists"]
     broadcast_batch = n_batch is None or n_batch <= broadcast_threshold
     if par is not None:
         lists = lists.repartition(par, "cid")
-    qc = batch.crossJoin(F.broadcast(cent)).select(
-        F.col("vec_id").alias("qid"), "cid",
-        squared_l2_unrolled(F.col("v"), F.col("c"), dim).alias("d2"),
-    )
-    w_probe = Window.partitionBy("qid").orderBy("d2", "cid")
-    probe = (
-        qc.withColumn("__rn", F.row_number().over(w_probe))
-        .filter(F.col("__rn") <= nprobe)
-        .select("qid", "cid")
-    )
+    probe = probe_lists(batch, cent, nprobe, dim)
     bq = batch.select(
         F.col("vec_id").alias("qid"), F.col("v").alias("qv"),
         l2_norm_unrolled(F.col("v"), dim).alias("nq"),
@@ -500,31 +555,13 @@ def refresh_ivf_index(index: dict, delta: DataFrame, par: int) -> dict:
     accepts any centroid frame) and the amortization clock restarts;
     nlist grows with ⌈√n⌉ on those retrains, never mid-epoch.
 
-    Assignment mirrors the build exactly: broadcast centroids
-    (√n-bounded), map-side min(struct(d2, cid)) — the scored stream
-    never shuffles — norms precomputed once per new vector. The
-    returned dict shares ``cent`` (and every build parameter) with the
-    input, so manifests persist unchanged; ``lists`` is the union —
-    a metadata-only plan on parquet-backed inputs, which at 100 TB is
-    an APPEND of the delta's list rows to the cid-partitioned store.
+    Assignment is the build's own step (:func:`nearest_centroid` over
+    the broadcast √n-bounded centroids, norms precomputed once per new
+    vector). The returned dict shares ``cent`` (and every build
+    parameter) with the input, so manifests persist unchanged; ``lists``
+    is the union — a metadata-only plan on parquet-backed inputs, which
+    at 100 TB is an APPEND of the delta's list rows to the
+    cid-partitioned store.
     """
-    from ..functions.vectors import l2_norm_unrolled, squared_l2_unrolled
-
-    dim = index["dim"]
-    cent = index["cent"]
-    delta_p = delta.repartition(par, "vec_id")
-    assign = (
-        delta_p.crossJoin(F.broadcast(cent))
-        .select(
-            "vec_id", "cid",
-            squared_l2_unrolled(F.col("v"), F.col("c"), dim).alias("d2"),
-        )
-        .groupBy("vec_id")
-        .agg(F.min(F.struct("d2", "cid")).alias("__m"))
-        .select("vec_id", F.col("__m.cid").alias("cid"))
-    )
-    new_lists = delta_p.join(assign, "vec_id").select(
-        F.col("vec_id").alias("id"), "cid", "v",
-        l2_norm_unrolled(F.col("v"), dim).alias("nv"),
-    )
+    new_lists = _inverted_lists(delta.repartition(par, "vec_id"), index["cent"], index["dim"])
     return {**index, "lists": index["lists"].unionByName(new_lists)}

@@ -25,8 +25,9 @@ two confs ``loaders._is_single_split`` reads; another JVM session empties
 the cache. Validity: each catalog table the build read keeps every part
 file's size and mtime. Purity: only a build that ran no Spark job,
 materialised nothing (``materialise.made``) and whose analysed plan's
-leaves are all ``LocalRelation``, ``Range``, ``OneRowRelation`` or file
-relations over those tables is cached; a direct call of the decorated
+leaves, its subqueries' included, are all ``LocalRelation``, ``Range``,
+``OneRowRelation``, ``CTERelationRef`` or file relations over those
+tables is cached; a direct call of the decorated
 function always builds. :data:`PLAN_CACHE` counts hits, misses and
 uncacheable builds by reason (``job``, ``materialised``, ``leaf``).
 """
@@ -74,28 +75,33 @@ REGISTRY: dict[str, QuerySpec] = {}
 
 _KEY_CONFS = (*RUNTIME_CONFS, "spark.sql.files.openCostInBytes",
               "spark.sql.files.maxPartitionBytes")
-_PURE_LEAVES = ("HadoopFsRelation", "LocalRelation", "Range", "OneRowRelation")
+_PURE_LEAVES = ("HadoopFsRelation", "LocalRelation", "Range", "OneRowRelation",
+                "CTERelationRef")
 # key -> (JVM session, built frame, (path, stamp) of each table it read)
 _PLANS: dict[tuple, tuple[object, DataFrame, list]] = {}
 PLAN_CACHE: Counter = Counter()  # hit, miss, and job/materialised/leaf
 
 
 def _reads_only(df: DataFrame, served: list) -> bool:
-    """Whether every leaf of ``df``'s analysed plan is local data or a
-    file relation over tables in ``served``."""
+    """Whether every leaf of ``df``'s analysed plan and of each subquery
+    in it is local data, a CTE reference or a file relation over tables
+    in ``served`` (a ``WITH`` plan's leaves include its CTE definitions')."""
     paths = {path for path, _ in served}
-    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-    for i in range(leaves.size()):
-        leaf = leaves.apply(i)
-        if leaf.getClass().getSimpleName() == "LogicalRelation":
-            leaf = leaf.relation()  # a file source's is a HadoopFsRelation
-        kind = leaf.getClass().getSimpleName()
-        if kind not in _PURE_LEAVES:
-            return False
-        if kind == "HadoopFsRelation":
-            roots = leaf.location().rootPaths().mkString("\n").split("\n")
-            if not {r.removeprefix("file:") for r in roots} <= paths:
+    plan = df._jdf.queryExecution().analyzed()
+    subqueries = plan.subqueriesAll()
+    for p in [plan, *(subqueries.apply(i) for i in range(subqueries.size()))]:
+        leaves = p.collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            if leaf.getClass().getSimpleName() == "LogicalRelation":
+                leaf = leaf.relation()  # a file source's is a HadoopFsRelation
+            kind = leaf.getClass().getSimpleName()
+            if kind not in _PURE_LEAVES:
                 return False
+            if kind == "HadoopFsRelation":
+                roots = leaf.location().rootPaths().mkString("\n").split("\n")
+                if not {r.removeprefix("file:") for r in roots} <= paths:
+                    return False
     return True
 
 

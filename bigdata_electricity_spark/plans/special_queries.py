@@ -16,7 +16,7 @@ from ..functions.rounding import dround, hround
 from ..materialise import checkpoint
 from ..ml.regression import run_regression_pipeline
 from ..operators.multimodal import attach_binary_payload, decode_media
-from ..sources.loaders import load_table
+from ..sources.loaders import load_table, vector_dim
 from ..sources.sinks import run_dir
 from .registry import query
 
@@ -500,7 +500,8 @@ def kmeans_dataframe_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )
-    assigned = lloyd_dataframe(emb, seed_ids=[0, 1, 2, 3], iters=2)
+    dim = vector_dim(spark, f"{sf_dir}/embeddings.parquet", "embedding")
+    assigned = lloyd_dataframe(emb, dim, seed_ids=[0, 1, 2, 3], iters=2)
     return (
         assigned.groupBy("cid")
         .agg(

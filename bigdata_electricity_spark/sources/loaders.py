@@ -9,7 +9,8 @@ reference SQLOperations.scala:25), and the new-engine parquet scans for
 Every testdata table is read through one catalog (:func:`table_entry`),
 the engine's only reader of part-file listings and parquet footers. The
 first read of a table version infers its schema (one Spark job) and
-reads its footers; every later read pins that schema and runs no job.
+reads its footers (row count, leaf value counts, the events-ts unit);
+every later read pins that schema and runs no job.
 S1 pins the household columns as strings and checks each file's header
 against them inside the scan, so it runs no job either.
 
@@ -24,6 +25,7 @@ from __future__ import annotations
 
 import os
 import threading
+from collections import Counter
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -49,6 +51,7 @@ class TableEntry:
     # Why a bigint ``ts`` column is not epoch-nanos (None when it is, or
     # when ``ts`` is not a bigint at all).
     ts_error: str | None
+    values: dict[str, int]  # leaf values per top-level column, from the footers
 
     @property
     def dtypes(self) -> dict[str, str]:
@@ -79,15 +82,21 @@ def _stamp(path: str) -> tuple:
     return tuple((p, (st := os.stat(p)).st_size, st.st_mtime_ns) for p in _part_files(path))
 
 
-def _read_footers(parts: list[str], ts_is_long: bool) -> tuple[int, str | None]:
-    """Row count and the events-ts unit check, from the footers alone."""
+def _read_footers(parts: list[str], ts_is_long: bool) -> tuple[int, str | None, dict]:
+    """Row count, the events-ts unit check and each top-level column's
+    leaf value count, from the footers alone."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    rows, ts_error = 0, None
+    rows, ts_error, values = 0, None, Counter()
     for part in parts:
         footer = pq.ParquetFile(part)
-        rows += footer.metadata.num_rows
+        meta = footer.metadata
+        rows += meta.num_rows
+        for g in range(meta.num_row_groups):
+            for c in range(meta.num_columns):
+                chunk = meta.row_group(g).column(c)
+                values[chunk.path_in_schema.split(".")[0]] += chunk.num_values
         if ts_is_long and ts_error is None:
             # Every part, not just the first: a drop with MIXED units
             # across part files would otherwise misconvert the others.
@@ -99,7 +108,7 @@ def _read_footers(parts: list[str], ts_is_long: bool) -> tuple[int, str | None]:
                     f"does not hold for this file — refusing to guess the unit "
                     f"({part})"
                 )
-    return rows, ts_error
+    return rows, ts_error, dict(values)
 
 
 def table_entry(spark: SparkSession, path: str) -> TableEntry:
@@ -120,8 +129,9 @@ def table_entry(spark: SparkSession, path: str) -> TableEntry:
         return cached[1]
     schema = spark.read.parquet(path).schema
     ts_is_long = "ts" in schema.fieldNames() and schema["ts"].dataType.simpleString() == "bigint"
-    rows, ts_error = _read_footers([p for p, _, _ in stamp], ts_is_long)
-    entry = TableEntry(schema, rows, sum(s for _, s, _ in stamp), len(stamp), ts_error)
+    rows, ts_error, values = _read_footers([p for p, _, _ in stamp], ts_is_long)
+    entry = TableEntry(schema, rows, sum(s for _, s, _ in stamp), len(stamp), ts_error,
+                       values)
     _CATALOG[key] = (stamp, entry)
     return entry
 
@@ -147,6 +157,17 @@ def parquet_row_count(spark: SparkSession, path: str) -> int:
     a full scan for a number every footer already stores.
     """
     return table_entry(spark, path).rows
+
+
+def vector_dim(spark: SparkSession, path: str, col: str) -> int:
+    """The one length of the ``col`` arrays of the parquet table at
+    ``path``, from the catalog's footer read — no Spark job: a table of
+    fixed-dim vectors stores rows × dim leaf values in that column."""
+    entry = table_entry(spark, path)
+    dim, rest = divmod(entry.values[col], entry.rows or 1)
+    if rest:
+        raise ValueError(f"{path}: the {col} arrays do not share one length")
+    return dim
 
 
 def events_ts_to_timestamp(df: DataFrame, entry: TableEntry) -> DataFrame:

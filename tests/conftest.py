@@ -60,6 +60,13 @@ DEFAULT_TIER_ENTRIES = {
     "dedup_ngram_jaccard", "dedup_ngram_jaccard_prefix", "dedup_containment_best",
     "dedup_containment_best_prefix", "dedup_incremental_batch",
     "streaming_incremental_dedup", "dedup_index_roundtrip",
+    # entries behind the shared coarse quantizer of operators/similarity.py
+    "sim_ivf_probe_topk", "sim_ivf_scaled_nlist", "sim_ivf_recall_profile",
+    "graph_triangle_stats_scaled", "graph_triangle_doulion",
+    "kmeans_dataframe_lloyd", "sim_incremental_batch", "sim_index_roundtrip",
+    "streaming_incremental_sim", "sim_ivf_epoch_refresh",
+    # SQL-text twins with a WITH clause, cached since CTE refs are pure leaves
+    "q4_above_avg_days_sqltext", "q5_top_month_per_year_sqltext",
 }
 
 

@@ -403,6 +403,49 @@ def test_ivf_build_serve_planted_geometry(spark):
         shutil.rmtree(base, ignore_errors=True)
 
 
+def test_quantizer_ties_go_to_the_smallest_cid(spark):
+    """Points planted exactly equidistant from two centroids go to the
+    smaller cid in ``nearest_centroid``, in ``build_ivf_index``'s lists,
+    in one Lloyd round and as ``probe_lists``' first probe — the
+    assignment the oracles' ``ROW_NUMBER() OVER (ORDER BY d2, cid)``
+    form picks, written out here as the reference."""
+    from pyspark.sql import Window, functions as F
+
+    from bigdata_electricity_spark.functions.vectors import squared_l2_unrolled
+    from bigdata_electricity_spark.ml.clustering import lloyd_dataframe
+
+    # ids 0-2 are the centroids (the 3 smallest ids); (1, y) is as far
+    # from cid 0 at (0, 0) as from cid 2 at (2, 0), and (3, y) as far
+    # from cid 2 as from cid 1 at (4, 0): every d2 is exact in double.
+    rows = [(0, [0.0, 0.0]), (1, [4.0, 0.0]), (2, [2.0, 0.0]),
+            (3, [1.0, 0.0]), (4, [1.0, 1.0]), (5, [3.0, 0.0]),
+            (6, [3.0, -2.0]), (7, [5.0, 1.0])]
+    points = spark.createDataFrame(rows, "vec_id long, v array<double>")
+    cent = S.seed_centroids(points, 3)
+    w = Window.partitionBy("vec_id").orderBy("d2", "cid")
+    reference = sorted(
+        (r["vec_id"], r["cid"])
+        for r in points.crossJoin(cent)
+        .select("vec_id", "cid",
+                squared_l2_unrolled(F.col("v"), F.col("c"), 2).alias("d2"))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .collect()
+    )
+    ties = {3: 0, 4: 0, 5: 1, 6: 1}
+    assert {i: c for i, c in reference if i in ties} == ties
+
+    def pairs(df, id_col):
+        return sorted((r[id_col], r["cid"]) for r in df.collect())
+
+    assert pairs(S.nearest_centroid(points, cent, 2), "vec_id") == reference
+    index = S.build_ivf_index(points, nlist=3, dim=2, par=4)
+    assert pairs(index["lists"], "id") == reference
+    assert pairs(lloyd_dataframe(points, 2, seed_ids=[0, 1, 2], iters=1), "id") == reference
+    tie_points = points.filter(F.col("vec_id").isin(list(ties)))
+    assert pairs(S.probe_lists(tie_points, cent, 1, 2), "qid") == sorted(ties.items())
+
+
 @pytest.mark.heavy
 def test_ivf_serve_shuffle_fallback_equals_broadcast(spark):
     """r11 VERDICT task 3: a batch above broadcast_threshold must serve

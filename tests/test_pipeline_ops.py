@@ -455,20 +455,21 @@ def test_lloyd_inertia_monotone(spark):
     """Lloyd's algorithm guarantee: total inertia never increases with
     more rounds (assignment and update steps each only decrease it)."""
     from bigdata_electricity_spark.ml.clustering import lloyd_dataframe
-    from bigdata_electricity_spark.sources.loaders import load_table
+    from bigdata_electricity_spark.sources.loaders import load_table, vector_dim
 
     emb = load_table(spark, SF_DIR, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )
+    dim = vector_dim(spark, f"{SF_DIR}/embeddings.parquet", "embedding")
     inertia = [
-        lloyd_dataframe(emb, seed_ids=[0, 1, 2, 3], iters=i)
+        lloyd_dataframe(emb, dim, seed_ids=[0, 1, 2, 3], iters=i)
         .agg(F.sum("d2")).collect()[0][0]
         for i in (1, 2, 3)
     ]
     assert inertia[0] >= inertia[1] >= inertia[2] - 1e-6, inertia
     # and clustering is non-degenerate: every centroid keeps points
     sizes = (
-        lloyd_dataframe(emb, seed_ids=[0, 1, 2, 3], iters=2)
+        lloyd_dataframe(emb, dim, seed_ids=[0, 1, 2, 3], iters=2)
         .groupBy("cid").count().collect()
     )
     assert len(sizes) == 4 and all(r["count"] > 0 for r in sizes)

@@ -20,6 +20,7 @@ from collections import Counter
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+from pyspark.sql import functions as F
 
 from bigdata_electricity_spark import materialise
 from bigdata_electricity_spark.plans import REGISTRY, registry
@@ -142,9 +143,12 @@ def test_impure_builds_are_never_cached(spark, tmp_path):
     builders = {
         "job": lambda s, sf: s.range(s.range(3).count()),
         "materialised": lambda s, sf: materialise.checkpoint(s.range(3)),
-        # a parquet file that is not a catalog table, and an RDD
+        # a parquet file that is not a catalog table, an RDD, and that
+        # file read only inside a scalar subquery
         "leaf": lambda s, sf: s.read.schema("a long").parquet(side),
         "rdd": lambda s, sf: s.createDataFrame(s.sparkContext.parallelize([(1,)]), "a long"),
+        "subquery": lambda s, sf: s.range(5).where(
+            F.col("id") > s.read.schema("a long").parquet(side).select(F.max("a")).scalar()),
     }
     for reason, fn in builders.items():
         build = registry._cached(f"test_{reason}", fn)
@@ -152,7 +156,8 @@ def test_impure_builds_are_never_cached(spark, tmp_path):
             with materialise.Owner():
                 counts, df = _counted(lambda: build(spark, SF_DIR))
                 df.collect()
-            assert counts == Counter({"miss": 1, reason.replace("rdd", "leaf"): 1}), counts
+            kind = "leaf" if reason in ("rdd", "subquery") else reason
+            assert counts == Counter({"miss": 1, kind: 1}), counts
     pure = registry._cached("test_pure", lambda s, sf: s.range(3))
     assert [_counted(lambda: pure(spark, SF_DIR))[0] for _ in range(2)] == [
         Counter(miss=1), Counter(hit=1)]
@@ -166,6 +171,18 @@ def test_entries_that_materialise_or_run_a_job_are_never_cached(spark):
                 df.collect()
             assert counts["hit"] == 0 and counts["miss"] == 1, (name, counts)
             assert counts["job"] + counts["materialised"] == 1, (name, counts)
+
+
+def test_with_clause_twins_are_cached(spark, monkeypatch):
+    """A ``WITH`` plan's ``CTERelationRef`` leaves point at CTE
+    definitions whose own leaves are checked, so the SQL-text twins cache
+    — q4's scalar subquery reads only a CTE."""
+    monkeypatch.setattr(registry, "_PLANS", {})
+    for name in ("q4_above_avg_days_sqltext", "q5_top_month_per_year_sqltext"):
+        fresh = _rows(REGISTRY[name].fn.__wrapped__(spark, SF_DIR))
+        calls = [_counted(lambda: REGISTRY[name].fn(spark, SF_DIR)) for _ in range(2)]
+        assert [c for c, _ in calls] == [Counter(miss=1), Counter(hit=1)], (name, calls)
+        assert [_rows(df) for _, df in calls] == [fresh, fresh], name
 
 
 def test_bench_entries_twice_in_one_session(spark):

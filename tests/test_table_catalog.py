@@ -29,6 +29,7 @@ from bigdata_electricity_spark.sources.loaders import (
     load_table,
     parquet_row_count,
     table_entry,
+    vector_dim,
 )
 from tests.conftest import SF_DIR as SF0001
 
@@ -101,6 +102,20 @@ def test_warm_load_runs_no_job(spark):
     df = load_table(spark, SF0001, "orders")
     assert _job_ids(spark) == before
     assert df.count() == parquet_row_count(spark, f"{SF0001}/orders.parquet")
+
+
+def test_vector_dim_reads_the_footers_only(spark, tmp_path):
+    """``vector_dim`` is the one array length, from the catalog's footer
+    read: no job on a warm table, and a ragged column is refused."""
+    path = f"{SF0001}/embeddings.parquet"
+    table_entry(spark, path)
+    before = _job_ids(spark)
+    assert vector_dim(spark, path, "embedding") == 64
+    assert _job_ids(spark) == before
+    ragged = str(tmp_path / "ragged.parquet")
+    pq.write_table(pa.table({"v": pa.array([[1.0, 2.0], [3.0, 4.0, 5.0]])}), ragged)
+    with pytest.raises(ValueError, match="one length"):
+        vector_dim(spark, ragged, "v")
 
 
 def test_rewritten_table_gets_a_new_entry(spark, tmp_path):
